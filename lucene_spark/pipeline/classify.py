@@ -318,9 +318,12 @@ def bm25_nb_classify(
     n = float(stats["doc_count"])
     avgdl = float(stats["sum_total_term_freq"]) / n
 
-    from lucene_spark.util.smallfloat import LENGTH_TABLE
+    from pyspark.sql.types import ArrayType, IntegerType
 
-    dl_lit = F.array(*[F.lit(int(v)) for v in LENGTH_TABLE])
+    from lucene_spark.util.smallfloat import LENGTH_TABLE
+    from lucene_spark.util.sqllit import sql_lit
+
+    dl_lit = sql_lit(LENGTH_TABLE, ArrayType(IntegerType()))
     # per-(term, doc) plain-BM25 double (the engine's plain_f64 shape:
     # byte4-quantized dl decoded from the stored norm)
     rel = index.postings_slim.join(index.term_stats, "term")

@@ -37,6 +37,9 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, LongType
+
+from lucene_spark.util.sqllit import sql_lit
 
 QUANT = 1_000_000  # 1e6 fixed-point quantization
 
@@ -92,7 +95,7 @@ def cosine_topk(
     from pyspark.sql import Window
 
     q = [_round_away(float(x) * QUANT) for x in query_vec]
-    qlit = F.array(*[F.lit(v).cast("long") for v in q])
+    qlit = sql_lit(q, ArrayType(LongType()))
     qn = float(np.sqrt(sum(v * v for v in q)))
     scored = emb.select(
         F.col(id_col).alias("vec_id"),
@@ -152,7 +155,7 @@ def _bucket_expr(vec_q, planes: list[list[int]]):
     """LSH bucket id: bit j = sign(dot(v, plane_j)) — over quantized ints."""
     bucket = F.lit(0)
     for j, row in enumerate(planes):
-        plit = F.array(*[F.lit(v).cast("long") for v in row])
+        plit = sql_lit(row, ArrayType(LongType()))
         bit = F.when(_dot(vec_q, plit) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         bucket = bucket + bit
     return bucket
@@ -271,7 +274,7 @@ def _centroids(emb: DataFrame, n_centroids: int, id_col: str = "vec_id"):
 def _cos_i_to_centroid(vec_q, vec_norm, cvec: list[int], cnorm: float):
     """cos_i between a quantized vector column and one literal centroid —
     the same op shapes as cosine_topk so both engines agree bit-for-bit."""
-    clit = F.array(*[F.lit(v).cast("long") for v in cvec])
+    clit = sql_lit(cvec, ArrayType(LongType()))
     return F.round(
         F.lit(float(QUANT)) * _dot(vec_q, clit).cast("double") / vec_norm / F.lit(cnorm)
     ).cast("long")

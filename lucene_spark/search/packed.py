@@ -76,14 +76,6 @@ class PackedScorer:
         s = self.searcher
         return s._bm25_expr(w_col, maxf_col, minn_col)
 
-    def _weights_df(self, term_weights: dict[str, float]) -> DataFrame:
-        s = self.searcher
-        return F.broadcast(
-            self.index.spark.createDataFrame(
-                list(term_weights.items()), f"term string, _w {s.score_type}"
-            )
-        )
-
     def _packed_for(self, terms) -> DataFrame:
         terms = list(terms)
         pk = self.index.bucket_filter(self.index.packed, terms)
@@ -141,7 +133,11 @@ class PackedScorer:
             tau = self.seed_threshold(term_weights, k)
         tau = float(tau or 0.0)
 
-        pk = self._packed_for(term_weights).join(self._weights_df(term_weights), "term")
+        # per-term weights ride along as a literal term -> weight lookup on
+        # the packed rows (no weight relation to scan or broadcast)
+        pk = self._packed_for(term_weights).withColumn(
+            "_w", s._term_lookup(term_weights, s._score_dt)
+        )
         pk = pk.withColumn(
             "_ub",
             self._ub_expr(F.col("_w"), F.col("max_freq"), F.col("min_norm")).cast(

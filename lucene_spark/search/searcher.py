@@ -17,7 +17,10 @@
 Scoring is Lucene-exact float32: the BM25 algebra runs as FloatType column
 expressions (JVM, whole-stage codegen — Java float ops ≡ IEEE binary32 ≡
 numpy float32), with the 256-entry normInverse cache inlined as an array
-literal (BM25Similarity.java:196-210, 246-258).  Multi-clause score sums
+literal built once per searcher (BM25Similarity.java:196-210, 246-258).
+Per-term weights are inlined too, as a ``term -> weight`` map literal looked
+up on the postings' ``term`` column, so lowering a term query launches no
+Spark job beyond the (cached) dictionary lookup.  Multi-clause score sums
 accumulate in double and cast to float at the end, exactly like
 DisjunctionSumScorer.java:43-48 / ConjunctionScorer.java:58-64.
 """
@@ -31,7 +34,18 @@ import pandas as pd
 from typing import Iterable, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from lucene_spark.analysis.tokenizer import tokenize_text
 from lucene_spark.index.builder import InvertedIndex
@@ -61,6 +75,7 @@ from lucene_spark.search.query import (
     WildcardQuery,
 )
 from lucene_spark.util.smallfloat import LENGTH_TABLE
+from lucene_spark.util.sqllit import sql_lit
 
 
 def _f32(x) -> float:
@@ -143,6 +158,7 @@ class IndexSearcher:
         # its score is a constant, so the double socket is exact for it.
         self.simbase = self.family not in ("bm25", "classic")
         self.score_type = "float" if scoring.endswith("f32") else "double"
+        self._score_dt = FloatType() if self.score_type == "float" else DoubleType()
         self.k1 = np.float32(index.k1)
         self.b = np.float32(index.b)
         self.term_cache_max = (
@@ -150,6 +166,9 @@ class IndexSearcher:
         )
         self._vectors = None
         self._vectors_ivf_path = None
+        # scoring-table literals (normInverse cache, classic norms, decoded
+        # lengths), each built on first use and reused by every query
+        self._table_lits: dict = {}
 
     # ------------------------------------------------------------------
     # vector search surface (KnnFloatVectorQuery.java:45)
@@ -183,7 +202,7 @@ class IndexSearcher:
                 "KnnVectorQuery requires IndexSearcher.with_vectors(...)"
             )
         qv = [_round_away(float(x) * QUANT) for x in q.query_vec]
-        qlit = F.array(*[F.lit(v).cast("long") for v in qv])
+        qlit = sql_lit(qv, ArrayType(LongType()))
         qn = float(np.sqrt(float(sum(v * v for v in qv))))
         cand = self._vectors
         if self._vectors_ivf_path is not None and q.filter is None:
@@ -337,9 +356,17 @@ class IndexSearcher:
             one / (self.k1 * ((one - self.b) + self.b * LENGTH_TABLE / self.avgdl))
         ).astype(np.float32)
 
+    def _table_lit(self, name: str, build, element_type):
+        """Array literal of the 256-entry table ``build()``, rendered once
+        per searcher (one JVM call) and shared by every query's plan."""
+        col = self._table_lits.get(name)
+        if col is None:
+            col = sql_lit(build(), ArrayType(element_type))
+            self._table_lits[name] = col
+        return col
+
     def _cache_lit(self):
-        cache = self.norm_inverse_cache()
-        return F.array(*[F.lit(float(v)).cast("float") for v in cache])
+        return self._table_lit("norm_inverse", self.norm_inverse_cache, FloatType())
 
     # Term dictionaries up to this many entries are cached whole on the
     # driver (≙ Lucene's always-in-RAM FST term index) — one lookup job
@@ -348,7 +375,10 @@ class IndexSearcher:
     # ``term_cache_max`` constructor arg (0 disables the cache) — at ~40
     # bytes/entry the default caps driver memory near 80 MB.
     TERM_CACHE_MAX = 2_000_000
-    _term_cache: dict | None = None
+    # None until the first lookup; then the whole dictionary (possibly
+    # empty), or _SCAN_PER_QUERY when it holds more than term_cache_max terms
+    _SCAN_PER_QUERY = "scan"
+    _term_cache: dict | str | None = None
 
     def term_doc_freqs(self, terms: Sequence[str]) -> dict[str, int]:
         """doc_freq for the query's terms: driver-cached dictionary when the
@@ -361,9 +391,8 @@ class IndexSearcher:
                 rows = self.index.term_stats.select("term", "doc_freq").collect()
                 self._term_cache = {r.term: int(r.doc_freq) for r in rows}
             else:
-                self._term_cache = {}  # sentinel: too big, use scans
-                self._term_cache_disabled = True
-        if self._term_cache and not getattr(self, "_term_cache_disabled", False):
+                self._term_cache = self._SCAN_PER_QUERY
+        if isinstance(self._term_cache, dict):
             return {t: self._term_cache[t] for t in set(terms) if t in self._term_cache}
         rows = (
             self.index.term_stats.filter(F.col("term").isin(list(set(terms))))
@@ -386,14 +415,18 @@ class IndexSearcher:
             return self._bm25_expr_f64(weight_col, freq_col, norm_col)
         return self._bm25_expr_f32(weight_col, freq_col, norm_col)
 
-    def _classic_norm_lit(self):
+    @staticmethod
+    def classic_norm_table() -> np.ndarray:
         """TFIDFSimilarity.java:477-481 normTable: (float)(1/sqrt(length))
         per byte4-decoded length; slot 0 = 1f / normTable[255]."""
         table = np.zeros(256, dtype=np.float32)
         for i in range(1, 256):
             table[i] = np.float32(1.0 / math.sqrt(float(LENGTH_TABLE[i])))
         table[0] = np.float32(1.0) / table[255]
-        return F.array(*[F.lit(float(v)).cast("float") for v in table])
+        return table
+
+    def _classic_norm_lit(self):
+        return self._table_lit("classic_norm", self.classic_norm_table, FloatType())
 
     def _classic_expr_f32(self, weight_col, freq_col, norm_col):
         """TFIDFScorer.score (TFIDFSimilarity.java:506-510):
@@ -430,7 +463,7 @@ class IndexSearcher:
 
     def _dl_lit(self):
         """256-entry decoded quantized doc-length table as double literals."""
-        return F.array(*[F.lit(float(v)).cast("double") for v in LENGTH_TABLE])
+        return self._table_lit("length", lambda: LENGTH_TABLE, DoubleType())
 
     def _bm25_expr_f64(self, weight_col, freq_col, norm_col):
         """Textbook shape in double: w * freq / (freq + k1*((1-b)+b*dl/avgdl)).
@@ -442,28 +475,40 @@ class IndexSearcher:
         denom = fr + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
         return (weight_col * fr / denom).cast("double")
 
-    def _scored_terms(self, term_boosts: dict[str, float]) -> DataFrame:
-        """(doc_id, score float32) rows per matching (term, doc): the
-        TermQuery scorer, vectorized.  One scan of postings filtered by the
-        term set (predicate pushdown), broadcast join of the tiny weight
-        table."""
-        spark = self.index.spark
-        if self.simbase:
-            return self._scored_terms_simbase(term_boosts)
-        dfs = self.term_doc_freqs(list(term_boosts))
-        weights = [
-            (t, self._weight(b, dfs[t])) for t, b in term_boosts.items() if t in dfs
-        ]
-        if not weights:
-            return self._empty_scored()
-        wdf = spark.createDataFrame(weights, f"term string, _w {self.score_type}")
-        pf = self.index.postings_for_terms([t for t, _ in weights]).select(
-            "term", "doc_id", "freq", "norm"
+    def _term_lookup(self, by_term: dict, value_type) -> Column:
+        """``by_term[term]`` for each postings row: a map literal (one JVM
+        call, no Spark job) looked up on the ``term`` column.  The lookup is
+        linear in the number of keys, which is bounded by the query's own
+        terms."""
+        return sql_lit(by_term, MapType(StringType(), value_type))[F.col("term")]
+
+    def _scored_weighted(self, weights: dict[str, float]) -> DataFrame:
+        """(doc_id, score) per matching (term, doc) for per-term weights
+        already resolved in Python."""
+        pf = self.index.postings_for_terms(list(weights)).select(
+            "doc_id", "freq", "norm",
+            self._term_lookup(weights, self._score_dt).alias("_w"),
         )
-        return pf.join(F.broadcast(wdf), "term").select(
+        return pf.select(
             "doc_id",
             self._bm25_expr(F.col("_w"), F.col("freq"), F.col("norm")).alias("score"),
         )
+
+    def _scored_terms(self, term_boosts: dict[str, float]) -> DataFrame:
+        """(doc_id, score float32) rows per matching (term, doc): the
+        TermQuery scorer, vectorized.  One scan of postings filtered by the
+        term set (predicate pushdown); each term's weight comes from the
+        cached term dictionary and is inlined as a literal, so the plan has
+        no weight relation to scan or broadcast."""
+        if self.simbase:
+            return self._scored_terms_simbase(term_boosts)
+        dfs = self.term_doc_freqs(list(term_boosts))
+        weights = {
+            t: self._weight(b, dfs[t]) for t, b in term_boosts.items() if t in dfs
+        }
+        if not weights:
+            return self._empty_scored()
+        return self._scored_weighted(weights)
 
     def term_total_freqs(self, terms: Sequence[str]) -> dict[str, int]:
         """total_term_freq per term (the LM collection-model statistic)."""
@@ -524,7 +569,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _mp double"
+            cols = ("_b", "_mp")
             raw = F.col("_b") * (
                 F.log(F.lit(1.0) + fr / F.col("_mp"))
                 + F.log(F.lit(mu) / (dl + F.lit(mu)))
@@ -537,7 +582,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _lp double"
+            cols = ("_b", "_lp")
             raw = F.col("_b") * F.log(
                 F.lit(1.0) + (F.lit(1.0 - lam) * fr / dl) / F.col("_lp")
             )
@@ -551,7 +596,7 @@ class IndexSearcher:
                 a2 = math.log(lam + 1.0) / ln2
                 b2 = math.log((1.0 + lam) / lam) / ln2
                 rows.append((t, float(b), b2, b2 - a2))
-            schema = "term string, _b double, _big double, _bag double"
+            cols = ("_b", "_big", "_bag")
             tfn = fr * F.log(F.lit(1.0) + F.lit(c_avgdl) / dl) / F.lit(ln2)
             raw = F.col("_b") * (F.col("_big") - F.col("_bag") / (F.lit(1.0) + tfn))
         elif self.family == "ib":  # LL + LambdaDF + H2
@@ -561,7 +606,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _lam double"
+            cols = ("_b", "_lam")
             tfn = fr * F.log(F.lit(1.0) + F.lit(c_avgdl) / dl) / F.lit(ln2)
             raw = F.col("_b") * -F.log(F.col("_lam") / (tfn + F.col("_lam")))
         elif self.family == "ib_spl":  # SPL + LambdaDF + H2
@@ -576,7 +621,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _lam double"
+            cols = ("_b", "_lam")
             tfn = fr * F.log(F.lit(1.0) + F.lit(c_avgdl) / dl) / F.lit(ln2)
             qq = F.lit(1.0) - F.lit(1.0) / (tfn + F.lit(1.0))
             raw = F.col("_b") * -F.log(
@@ -593,7 +638,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _ef double"
+            cols = ("_b", "_ef")
             expected = F.col("_ef") * dl
             measure = (fr - expected) / F.sqrt(expected)
             raw = F.when(
@@ -617,7 +662,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _idf2 double"
+            cols = ("_b", "_idf2")
             base, mn = float(self.SS_TF_BASE), float(self.SS_TF_MIN)
             tf_ss = F.when(fr <= F.lit(mn), F.lit(base)).otherwise(
                 F.sqrt(fr + F.lit(base * base - mn))
@@ -638,7 +683,7 @@ class IndexSearcher:
             rows = [
                 (t, float(b)) for t, b in term_boosts.items() if t in ttfs
             ]
-            schema = "term string, _b double"
+            cols = ("_b",)
             raw = F.col("_b")
         elif self.family in (
             "ax_f1exp", "ax_f1log", "ax_f2log", "ax_f3exp", "ax_f3log"
@@ -661,7 +706,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _idf double"
+            cols = ("_b", "_idf")
             # tf component (F1/F3): 1 + ln(1 + ln(freq + 1))
             tf_c = F.lit(1.0) + F.log(F.lit(1.0) + F.log(fr + F.lit(1.0)))
             if self.family in ("ax_f1exp", "ax_f1log"):
@@ -687,7 +732,7 @@ class IndexSearcher:
                 for t, b in term_boosts.items()
                 if t in ttfs
             ]
-            schema = "term string, _b double, _idf double"
+            cols = ("_b", "_idf")
             raw = F.greatest(
                 F.lit(0.0),
                 F.col("_b")
@@ -696,12 +741,13 @@ class IndexSearcher:
             )
         if not rows:
             return self._empty_scored()
-        wdf = self.index.spark.createDataFrame(rows, schema)
+        entry = StructType([StructField(c, DoubleType()) for c in cols])
         pf = self.index.postings_for_terms([r[0] for r in rows]).select(
-            "term", "doc_id", "freq", "norm"
+            "doc_id", "freq", "norm",
+            self._term_lookup({r[0]: r[1:] for r in rows}, entry).alias("_t"),
         )
         score = raw.cast(self.score_type)
-        return pf.join(F.broadcast(wdf), "term").select(
+        return pf.select("doc_id", "freq", "norm", "_t.*").select(
             "doc_id", score.alias("score")
         )
 
@@ -1292,22 +1338,26 @@ class IndexSearcher:
         flat = F.flatten(F.col("_pls"))
         dec = F.transform(flat, lambda x: F.coalesce(x, F.lit(1.0)))
         n = F.size(flat)
-        if q.function == "sum":
+        if q.function in ("sum", "avg"):
             if self.score_type == "float":
-                # reference folds in float32, one leaf at a time
+                # reference folds in float32, one leaf at a time, and avg
+                # divides that float sum by the count in float32
+                # (AveragePayloadFunction.docScore)
                 raw = F.aggregate(
                     dec,
                     F.lit(0.0).cast("float"),
                     lambda a, x: (a + x.cast("float")).cast("float"),
-                ).cast("double")
+                )
+                if q.function == "avg":
+                    raw = (raw / n.cast("float")).cast("float")
             else:
                 raw = F.aggregate(dec, F.lit(0.0), lambda a, x: a + x)
+                if q.function == "avg":
+                    raw = raw / n
         elif q.function == "min":
             raw = F.array_min(dec)
-        elif q.function == "max":
+        else:  # max
             raw = F.array_max(dec)
-        else:  # avg
-            raw = F.aggregate(dec, F.lit(0.0), lambda a, x: a + x) / n
         pscore = F.when(n > 0, raw).otherwise(F.lit(1.0))
         out = base.select(
             "doc_id", pscore.cast(self.score_type).alias("score")
@@ -1331,7 +1381,7 @@ class IndexSearcher:
         matches).  Doc score = matching-span count (documented deviation,
         see the query node)."""
         base = self._payload_span_lists(q.match)
-        ref = F.array(*[F.lit(float(p)).cast("float") for p in q.payloads])
+        ref = sql_lit(q.payloads, ArrayType(FloatType()))
         ops = {
             "eq": lambda a, b: a == b,
             "gt": lambda a, b: a > b,
@@ -1357,7 +1407,7 @@ class IndexSearcher:
         """FuzzyLikeThisQuery.rewrite (FuzzyLikeThisQuery.java:283-334):
         variant selection runs over the (vocabulary-bounded) term
         dictionary; the selected variants score in ONE postings scan with
-        a broadcast weight map.  With ``ignore_tf`` each variant is a
+        an inlined literal weight map.  With ``ignore_tf`` each variant is a
         constant-score clause; otherwise the doctored-stats TermQuery
         reduces to BM25 with idf evaluated at df=1 over the real norms."""
         import math
@@ -1409,32 +1459,17 @@ class IndexSearcher:
         for t, s in score_terms:
             merged[t] = merged.get(t, 0.0) + s
         if q.ignore_tf:
-            spark = self.index.spark
-            wdf = spark.createDataFrame(
-                list(merged.items()), f"term string, _w {self.score_type}"
+            pf = self.index.postings_for_terms(list(merged)).select(
+                "doc_id", self._term_lookup(merged, self._score_dt).alias("_w")
             )
-            pf = self.index.postings_for_terms(list(merged)).select("term", "doc_id")
-            return (
-                pf.join(F.broadcast(wdf), "term")
-                .groupBy("doc_id")
-                .agg(F.sum("_w").cast(self.score_type).alias("score"))
+            return pf.groupBy("doc_id").agg(
+                F.sum("_w").cast(self.score_type).alias("score")
             )
-        spark = self.index.spark
-        weights = [(t, self._weight(s, 1)) for t, s in merged.items()]
-        wdf = spark.createDataFrame(weights, f"term string, _w {self.score_type}")
-        pf = self.index.postings_for_terms([t for t, _ in weights]).select(
-            "term", "doc_id", "freq", "norm"
-        )
+        weights = {t: self._weight(s, 1) for t, s in merged.items()}
         return (
-            pf.join(F.broadcast(wdf), "term")
-            .select(
-                "doc_id",
-                self._bm25_expr(F.col("_w"), F.col("freq"), F.col("norm")).alias(
-                    "_s"
-                ),
-            )
+            self._scored_weighted(weights)
             .groupBy("doc_id")
-            .agg(F.sum("_s").cast(self.score_type).alias("score"))
+            .agg(F.sum("score").cast(self.score_type).alias("score"))
         )
 
     def _multiterm_pred(self, q):
@@ -1758,8 +1793,8 @@ class IndexSearcher:
         msm = q.min_should_match
 
         parts = []
-        # Batch all scoring TermQuery clauses into ONE postings scan + one
-        # broadcast weight join (one stats lookup total) — the common
+        # Batch all scoring TermQuery clauses into ONE postings scan with
+        # inlined literal weights (one stats lookup total) — the common
         # "many-term query" fast path; all other clause types lower
         # individually.  ≙ BooleanWeight building all TermScorers over one
         # shared leaf pass.
@@ -1790,21 +1825,25 @@ class IndexSearcher:
                 )
         if term_clauses:
             dfs = self.term_doc_freqs([t for t, _, _, _ in term_clauses])
-            rows = [
-                (t, self._weight(b, dfs[t]), mi, si)
-                for t, b, mi, si in term_clauses
-                if t in dfs
-            ]
-            if rows:
-                wdf = self.index.spark.createDataFrame(
-                    rows,
-                    f"term string, _w {self.score_type}, _must int, _should int",
+            # term -> one (weight, must, should) entry per clause: a term
+            # repeated across clauses (`+a a`, `a^2 a`) scores once per
+            # clause, since clause scores add
+            by_term: dict[str, list] = {}
+            for t, b, mi, si in term_clauses:
+                if t in dfs:
+                    by_term.setdefault(t, []).append((self._weight(b, dfs[t]), mi, si))
+            if by_term:
+                entry = StructType([
+                    StructField("_w", self._score_dt),
+                    StructField("_must", IntegerType()),
+                    StructField("_should", IntegerType()),
+                ])
+                pf = self.index.postings_for_terms(list(by_term)).select(
+                    "doc_id", "freq", "norm",
+                    F.inline(self._term_lookup(by_term, ArrayType(entry))),
                 )
-                pf = self.index.postings_for_terms(
-                    sorted({r[0] for r in rows})
-                ).select("term", "doc_id", "freq", "norm")
                 parts.append(
-                    pf.join(F.broadcast(wdf), "term").select(
+                    pf.select(
                         "doc_id",
                         self._bm25_expr(
                             F.col("_w"), F.col("freq"), F.col("norm")
@@ -1875,18 +1914,18 @@ class IndexSearcher:
         if not dfs:
             return self._empty_scored()
         df_blend = max(dfs.values())
-        rows = [
-            (t, self._weight(b * q.boost, df_blend))
-            for t, b in zip(terms, boosts)
-            if t in dfs
-        ]
-        wdf = self.index.spark.createDataFrame(
-            rows, f"term string, _w {self.score_type}"
+        # term -> weights: a repeated term is one more DisjunctionMax member
+        by_term: dict[str, list] = {}
+        for t, b in zip(terms, boosts):
+            if t in dfs:
+                by_term.setdefault(t, []).append(self._weight(b * q.boost, df_blend))
+        pf = self.index.postings_for_terms(list(by_term)).select(
+            "doc_id", "freq", "norm",
+            F.explode(
+                self._term_lookup(by_term, ArrayType(self._score_dt))
+            ).alias("_w"),
         )
-        pf = self.index.postings_for_terms([t for t, _ in rows]).select(
-            "term", "doc_id", "freq", "norm"
-        )
-        scored = pf.join(F.broadcast(wdf), "term").select(
+        scored = pf.select(
             "doc_id",
             self._bm25_expr(F.col("_w"), F.col("freq"), F.col("norm")).alias("score"),
         )
@@ -2116,79 +2155,64 @@ class IndexSearcher:
         if base is None:
             base = self._gather_positions(terms)
         o0, o1 = offs
-        A = F.col("_p0")
-        B = F.transform(F.col("_p1"), lambda x: x - F.lit(o1 - o0))
-        merged = F.array_sort(
-            F.concat(
-                F.transform(
-                    A, lambda p: F.struct(p.alias("pos"), F.lit(0).alias("off"))
-                ),
-                F.transform(
-                    B, lambda p: F.struct(p.alias("pos"), F.lit(1).alias("off"))
-                ),
-            )
-        )
         f32 = self.score_type == "float"
         lq = self._slop_lcm(slop)
-        acc0 = F.lit(0.0).cast("float") if f32 else F.lit(0).cast("long")
-        # equal adjusted positions across the two lists (rare; usually
-        # empty) — the one case the running-predecessor bookkeeping below
-        # can't see, because at ties the A element is traversed first
-        eqs = F.array_intersect(A, B)
-        init = F.struct(
-            F.lit(False).alias("sa"),
-            F.lit(False).alias("sb"),
-            F.lit(-1).alias("exp"),
-            F.lit(0).alias("fp"),
-            F.lit(None).cast("integer").alias("la"),
-            F.lit(None).cast("integer").alias("lb"),
-            acc0.alias("acc"),
+        # The fold is rendered as SQL text and parsed in one JVM call: the
+        # same expression built through the Column DSL costs ~1.2k py4j
+        # round trips.  Literal types follow the DSL they replace: 1.0D is
+        # a double (a bare 1.0 would be a decimal), bare ints are ints.
+        a = "_p0"
+        b = f"transform(_p1, v -> v - {o1 - o0})"
+        merged = (
+            f"array_sort(concat("
+            f"transform({a}, p -> named_struct('pos', p, 'off', 0)), "
+            f"transform({b}, p -> named_struct('pos', p, 'off', 1))))"
         )
-
-        def step(acc, x):
-            is_a = x["off"] == F.lit(0)
-            frontier = (
-                F.when(
-                    acc["exp"] == F.lit(-1),
-                    F.when(is_a, acc["sb"]).otherwise(acc["sa"]),
-                )
-                .otherwise((x["off"] == acc["exp"]) & (x["pos"] > acc["fp"]))
-            )
-            # width = frontier pos - other list's largest pos <= it (the
-            # matcher's <=-absorbing minimization).  The predecessor is
-            # CARRIED in the accumulator (la/lb = last traversed pos per
-            # list) instead of re-scanning the other list per element —
-            # O(f) instead of O(f^2) per doc; the equal-position case
-            # (other list's element not yet traversed at a tie) reads the
-            # tiny precomputed intersection.
-            w = F.when(
-                is_a,
-                F.when(F.array_contains(eqs, x["pos"]), F.lit(0)).otherwise(
-                    x["pos"] - acc["lb"]
-                ),
-            ).otherwise(x["pos"] - acc["la"])
-            counted = frontier & (w <= F.lit(slop))
-            if f32:
-                one = F.lit(1.0).cast("float")
-                contrib = (one / (one + w.cast("float"))).cast("float")
-                nacc = F.when(counted, (acc["acc"] + contrib).cast("float")).otherwise(
-                    acc["acc"]
-                )
-            else:
-                nacc = F.when(
-                    counted, acc["acc"] + (F.lit(lq) / (w + F.lit(1))).cast("long")
-                ).otherwise(acc["acc"])
-            return F.struct(
-                (acc["sa"] | is_a).alias("sa"),
-                (acc["sb"] | ~is_a).alias("sb"),
-                F.when(frontier, F.lit(1) - x["off"]).otherwise(acc["exp"]).alias("exp"),
-                F.when(frontier, x["pos"]).otherwise(acc["fp"]).alias("fp"),
-                F.when(is_a, x["pos"].cast("integer")).otherwise(acc["la"]).alias("la"),
-                F.when(is_a, acc["lb"]).otherwise(x["pos"].cast("integer")).alias("lb"),
-                nacc.alias("acc"),
-            )
-
-        acc = F.aggregate(merged, init, step)["acc"]
+        acc0 = "CAST(0.0D AS FLOAT)" if f32 else "CAST(0 AS BIGINT)"
+        init = (
+            "named_struct('sa', false, 'sb', false, 'exp', -1, 'fp', 0, "
+            f"'la', CAST(NULL AS INT), 'lb', CAST(NULL AS INT), 'acc', {acc0})"
+        )
+        is_a = "(x.off = 0)"
+        frontier = (
+            f"(CASE WHEN (acc.exp = -1) THEN "
+            f"(CASE WHEN {is_a} THEN acc.sb ELSE acc.sa END) "
+            f"ELSE ((x.off = acc.exp) AND (x.pos > acc.fp)) END)"
+        )
+        # width = frontier pos - other list's largest pos <= it (the
+        # matcher's <=-absorbing minimization).  The predecessor is
+        # CARRIED in the accumulator (la/lb = last traversed pos per
+        # list) instead of re-scanning the other list per element —
+        # O(f) instead of O(f^2) per doc; the equal-position case
+        # (other list's element not yet traversed at a tie) reads the
+        # tiny precomputed intersection of equal adjusted positions
+        # across the two lists (rare; usually empty) — the one case the
+        # running-predecessor bookkeeping can't see, because at ties the
+        # A element is traversed first.
+        eqs = f"array_intersect({a}, {b})"
+        w = (
+            f"(CASE WHEN {is_a} THEN "
+            f"(CASE WHEN array_contains({eqs}, x.pos) THEN 0 ELSE (x.pos - acc.lb) END) "
+            f"ELSE (x.pos - acc.la) END)"
+        )
+        counted = f"({frontier} AND ({w} <= {slop}))"
+        if f32:
+            one = "CAST(1.0D AS FLOAT)"
+            contrib = f"CAST(({one} / ({one} + CAST({w} AS FLOAT))) AS FLOAT)"
+            inc = f"CAST((acc.acc + {contrib}) AS FLOAT)"
+        else:
+            inc = f"(acc.acc + CAST(({lq} / ({w} + 1)) AS BIGINT))"
+        step = (
+            "named_struct("
+            f"'sa', (acc.sa OR {is_a}), "
+            f"'sb', (acc.sb OR (NOT {is_a})), "
+            f"'exp', (CASE WHEN {frontier} THEN (1 - x.off) ELSE acc.exp END), "
+            f"'fp', (CASE WHEN {frontier} THEN x.pos ELSE acc.fp END), "
+            f"'la', (CASE WHEN {is_a} THEN CAST(x.pos AS INT) ELSE acc.la END), "
+            f"'lb', (CASE WHEN {is_a} THEN acc.lb ELSE CAST(x.pos AS INT) END), "
+            f"'acc', (CASE WHEN {counted} THEN {inc} ELSE acc.acc END))"
+        )
+        acc = F.expr(f"aggregate({merged}, {init}, (acc, x) -> {step}).acc")
         if f32:
             out = base.withColumn("_freq", acc).filter(F.col("_freq") > 0)
         else:

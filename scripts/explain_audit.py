@@ -2,8 +2,8 @@
 
 Writes PLANS.md with the plans that matter at 100 TB, annotated with what to
 look for (PushedFilters on the stored-index scans, WholeStageCodegen spans
-around the scoring algebra, broadcast joins for the tiny weight tables,
-TakeOrderedAndProject for top-k).
+around the scoring algebra, per-term weights inlined as literals (no weight
+relation to broadcast), TakeOrderedAndProject for top-k).
 
 Run:  python scripts/explain_audit.py
 """
@@ -96,7 +96,8 @@ def main():
             "Stored-index term query (packed scan -> decode)",
             "The `term IN` + `bucket IN` predicates must appear as parquet "
             "PushedFilters / PartitionFilters BEFORE the Arrow decode UDF; "
-            "the weight join must be a BroadcastHashJoin.",
+            "the per-term weights are a map literal looked up on `term` "
+            "(no weight relation, no weight join).",
             disk_s.scored(orq("spark", "data")),
         ),
         (
@@ -549,7 +550,7 @@ def main():
             "CommonGrams phrase acceleration (gram term lookup)",
             "The phrase 'the customer' collapses to ONE term lookup "
             "(term = 'the_customer') — the ordinary single-term scoring "
-            "plan (scan + broadcast weight + TakeOrderedAndProject), no "
+            "plan (scan + inlined weight + TakeOrderedAndProject), no "
             "positions relation touched. This is CommonGramsQueryFilter's "
             "whole point: a phrase query without position arithmetic.",
             cg_s.search(TermQuery("the_customer"), 10),

@@ -45,3 +45,35 @@ def tiny_oracle(tiny_corpus):
     from lucene_spark.oracle import OracleIndex
 
     return OracleIndex.build(tiny_corpus)
+
+
+class Py4jCalls:
+    """Running count of Python -> JVM py4j round trips."""
+
+    def __init__(self):
+        self.n = 0
+
+
+@pytest.fixture
+def py4j_calls():
+    """Count py4j round trips by wrapping the connections' ``send_command``
+    for the duration of one test; read ``.n`` before and after the code
+    under measurement."""
+    from py4j import clientserver, java_gateway
+
+    counter = Py4jCalls()
+    saved = []
+    for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+        orig = cls.send_command
+
+        def send_command(conn, *a, _orig=orig, **kw):
+            counter.n += 1
+            return _orig(conn, *a, **kw)
+
+        saved.append((cls, orig))
+        cls.send_command = send_command
+    try:
+        yield counter
+    finally:
+        for cls, orig in saved:
+            cls.send_command = orig

@@ -9,6 +9,7 @@ and TestPayloadSpans/TestPayloadScoreQuery-style corpora.
 
 import math
 
+import numpy as np
 import pytest
 
 from lucene_spark.analysis.payloads import (
@@ -153,6 +154,37 @@ def test_payload_score_span_near(payload_searcher):
     }
     av = _by_key(payload_searcher, PayloadScoreQuery(near, "avg"))
     assert av[("c1", 0)] == 3.5
+
+
+def _f32_fold_avg(xs):
+    """AveragePayloadFunction in float32: the sum folds one leaf at a time,
+    then divides by the count, every step rounded to float32."""
+    acc = np.float32(0.0)
+    for x in xs:
+        acc = np.float32(acc + np.float32(x))
+    return np.float32(acc / np.float32(len(xs)))
+
+
+def test_payload_avg_folds_in_float32(spark):
+    from lucene_spark.fixtures.transcripts import transcripts_df
+    from lucene_spark.index import IndexBuilder
+    from lucene_spark.search import IndexSearcher
+    from lucene_spark.search.query import PayloadScoreQuery
+    from lucene_spark.search.spans import SpanTermQuery
+
+    payloads = (0.1, 0.2, 0.4)
+    f32 = _f32_fold_avg(payloads)
+    f64 = np.float32(sum(float(np.float32(x)) for x in payloads) / len(payloads))
+    assert f32.view(np.uint32) != f64.view(np.uint32), "folds must differ"
+    text = " ".join(f"w|{x}" for x in payloads)
+    df = transcripts_df(
+        spark,
+        rows=[{"conv_id": "c0", "turn_idx": 0, "role": "user", "text": text,
+               "tool": "", "ts": None}],
+    )
+    idx = IndexBuilder(num_segments=1, payload_delimiter="|").build(df)
+    got = _by_key(IndexSearcher(idx), PayloadScoreQuery(SpanTermQuery("w"), "avg"))
+    assert np.float32(got[("c0", 0)]).view(np.uint32) == f32.view(np.uint32)
 
 
 def test_payload_include_span_score(payload_searcher):

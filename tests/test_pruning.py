@@ -100,8 +100,8 @@ def test_pruning_actually_prunes(packed_index, searcher):
         .count()
     )
     # chunks surviving the bound filter
-    pk = packed_index.packed.filter(F.col("term").isin(list(weights))).join(
-        ps._weights_df(weights), "term"
+    pk = packed_index.packed.filter(F.col("term").isin(list(weights))).withColumn(
+        "_w", searcher._term_lookup(weights, searcher._score_dt)
     )
     pk = pk.withColumn(
         "_ub", ps._ub_expr(F.col("_w"), F.col("max_freq"), F.col("min_norm")).cast("double")
