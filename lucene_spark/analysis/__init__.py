@@ -2,7 +2,6 @@ from lucene_spark.analysis.tokenizer import (  # noqa: F401
     MAX_TOKEN_LENGTH,
     TOKEN_PATTERN,
     tokenize_text,
-    tokens_expr,
 )
 from lucene_spark.analysis.analyzer import (  # noqa: F401
     DICT_STEMMERS,

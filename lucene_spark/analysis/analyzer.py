@@ -9,8 +9,8 @@
 * Stemming — ``analysis/common/.../en/PorterStemFilter.java`` (full Porter,
   see analysis/porter.py, validated against the reference's own
   porterTestData vectors) or the S-stemmer (Harman 1991, "How effective is
-  suffixing?"), a 3-rule light stemmer that is expressible as plain SQL /
-  JVM CASE expressions — the cross-engine-checkable option.
+  suffixing?"), a 3-rule light stemmer that is expressible as a plain SQL
+  CASE expression — the cross-engine-checkable option.
 * Synonyms — ``analysis/common/.../synonym/SynonymGraphFilter.java``
   subset: single-token, index-time additive synonyms; each mapped term also
   emits its synonyms at the SAME position (posIncrement 0).
@@ -35,12 +35,14 @@
   portuguese()`` reproduce the analysis-common analyzers' default chains
   (elision, Snowball stop sets, light stemmers — see analysis/lang.py).
 
-Engine lowering: the whole chain except the dictionary stemmers (Porter +
-the per-language light stemmers) runs as JVM column expressions over the
-token array (stopset/synonym maps are tiny literals).  Dictionary stemmers
-are applied by the IndexBuilder on the DISTINCT TERM DICTIONARY via an
+Engine path: ``analyze_text`` is the one executable chain.  The index
+build runs it inside its Arrow-batched invert pass (builder._arrow_base),
+minus the dictionary stemmers (Porter + the per-language light stemmers),
+which the IndexBuilder applies on the DISTINCT TERM DICTIONARY via an
 Arrow-batched UDF + broadcast join — O(|vocabulary|) Python work, never
-per token (see builder.apply_dict_stemmer).
+per token (see builder.apply_dict_stemmer).  Every other Spark caller
+uses ``analyze_column``, the same chain as an Arrow-batched column
+function.  The DuckDB oracle twins lower the chain to SQL independently.
 """
 
 from __future__ import annotations
@@ -50,11 +52,6 @@ from dataclasses import dataclass, field
 from lucene_spark.analysis.lang import (
     CJK_STOP_WORDS,
     ELISION_PATTERNS,
-    KANA_COMBINE_PAIRS,
-    WIDTH_FOLD_FROM,
-    WIDTH_FOLD_TO,
-    WIDTH_MARK_FROM,
-    WIDTH_MARK_TO,
     cjk_bigram_expand,
     cjk_width_fold,
     FRENCH_STOP_WORDS,
@@ -192,8 +189,8 @@ ENGLISH_STOP_WORDS = frozenset(
 
 # Dictionary-stage stemmers: pure per-term functions the IndexBuilder
 # applies to the DISTINCT TERM DICTIONARY (builder.apply_dict_stemmer),
-# never per token.  's' stays a JVM expression (s_stem_sql twin); these
-# run as one Arrow batch over the vocabulary.
+# never per token.  's' runs per token in analyze_text (s_stem_sql is its
+# SQL twin); these run as one Arrow batch over the vocabulary.
 DICT_STEMMERS = {
     "porter": porter_stem,
     "kstem": kstem_stem,
@@ -411,34 +408,6 @@ def _check_replacement(rep: str) -> None:
         i += 1
 
 
-def _java_replacement(rep: str) -> str:
-    """Convert a Python-re replacement string to Java's regexp_replace
-    syntax: \\N backrefs become $N, a literal '$' is escaped (Java reads
-    it as a group sigil), and backslash-escaped literals survive."""
-    out = []
-    i = 0
-    while i < len(rep):
-        c = rep[i]
-        if c == "\\" and i + 1 < len(rep):
-            n = rep[i + 1]
-            if n.isdigit():
-                out.append("$" + n)
-            elif n == "\\":
-                out.append("\\\\")
-            else:
-                out.append("\\" + n)
-            i += 2
-            continue
-        if c == "$":
-            out.append("\\$")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-
 @dataclass(frozen=True)
 class Analyzer:
     """Immutable analyzer spec shared by engine, oracle, and SQL twins.
@@ -515,9 +484,9 @@ class Analyzer:
     # char_fold and before elision.  Lowers the raw-case-dependent
     # per-token filters that cannot be 1:1 translates — ApostropheFilter
     # (tr/ApostropheFilter.java) and the Irish eclipsis split
-    # (wave3.py).  Patterns stay inside the shared Python-re / Java /
-    # RE2 subset (no lookaround, numbered backrefs only) so the JVM
-    # lowering and the DuckDB oracle twins replay them verbatim.
+    # (wave3.py).  Patterns stay inside the shared Python-re / RE2
+    # subset (no lookaround, numbered backrefs only) so the DuckDB
+    # oracle twins replay them verbatim.
     pre_sub: tuple = ()
     # WordDelimiterGraphFilter flags (analysis/worddelim.py — 0 = off).
     # When set, the chain becomes the reference's canonical WDGF stack
@@ -586,8 +555,7 @@ class Analyzer:
     # replace-first variant is out of scope): (pattern, replacement)
     # pairs applied IN ORDER to every token right after the tokenize
     # rewrites, before stop.  Patterns stay inside the shared
-    # Python-re/Java/RE2 subset; replacements use Python backref syntax
-    # (converted to Java's $N in the JVM lowering, like pre_sub).
+    # Python-re/RE2 subset; replacements use Python backref syntax.
     pattern_replace: tuple = ()
     # ReverseStringFilter (reverse/ReverseStringFilter.java:36): reverse
     # every surviving token — the reversed-field layout that turns a
@@ -633,10 +601,11 @@ class Analyzer:
         if self.token_match_pattern or self.token_split_pattern:
             pat = self.token_match_pattern or self.token_split_pattern
             if _re.compile(pat).groups:
-                # re.findall/re.split return group captures, while the JVM
-                # lowering matches group 0 / drops separators — a grouped
-                # pattern silently diverges between the two paths.  Use
-                # non-capturing (?:...) groups.
+                # re.findall/re.split return group captures, while SQL
+                # regexp_extract_all/split match group 0 / drop
+                # separators — a grouped pattern silently diverges between
+                # the chain and its SQL twins.  Use non-capturing (?:...)
+                # groups.
                 raise ValueError(
                     "custom token patterns must not contain capture "
                     "groups (use (?:...))"
@@ -713,12 +682,16 @@ class Analyzer:
                 or self.cjk_bigrams
                 or self.elision
                 or self.possessive
+                or self.pattern_replace
+                or self.limit_tokens
+                or self.urls_emails
             ):
                 # WDGF replaces the tokenizer stage; the raw-stream
-                # rewriters assume the standard tokenizer — documented
-                # orthogonal-stages subset (stopwords/stemmer/synonyms
-                # compose, like the reference chains that follow WDGF
-                # with LowerCase/Stop/Stem)
+                # rewriters and tokenizer options assume the standard
+                # tokenizer, and analyze_text's WDGF branch skips them —
+                # documented orthogonal-stages subset (stopwords/stemmer/
+                # synonyms compose, like the reference chains that follow
+                # WDGF with LowerCase/Stop/Stem)
                 raise ValueError(
                     "word_delimiter composes with stopwords/stemmer/"
                     "synonyms only"
@@ -1587,6 +1560,39 @@ class Analyzer:
                     out.append((f"{toks[i]}_{toks[i + 1]}", i))
         return out
 
+    def analyze_column(self, col):
+        """Column(string) -> Column(array<struct<term:string,pos:int>>):
+        :meth:`analyze_text` in one Arrow-batched ``pandas_udf`` (null
+        text -> no entries) — the column form of the chain for callers
+        that analyze text outside the index build (suggesters, classify,
+        the monitor).  ``Analyzer()`` gives the plain ``tokenize_text``
+        stream with dense positions."""
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        an = self
+        # session-registered stemmers (hunspell.register_stemmer) exist
+        # only in the driver's table: ship the resolved function and
+        # register it in the worker's module (a closure-captured global
+        # would be a pickled copy, not the table analyze_text reads)
+        stem = DICT_STEMMERS.get(self.stemmer)
+
+        @F.pandas_udf("array<struct<term:string,pos:int>>")
+        def _entries(texts):
+            if stem is not None:
+                from lucene_spark.analysis.analyzer import DICT_STEMMERS as table
+
+                table[an.stemmer] = stem
+            return pd.Series(
+                [
+                    [{"term": t, "pos": p} for t, p in an.analyze_text(x)]
+                    for x in texts
+                ],
+                index=texts.index,
+            )
+
+        return _entries(col)
+
     def analyze_query_positions(self, text: str | None) -> list[tuple[str, int]]:
         """Query-side analysis with hole-carrying positions (for
         PhraseQuery).  No synonym expansion — the reference expands query
@@ -1666,8 +1672,7 @@ class Analyzer:
         """PatternCaptureGroupTokenFilter emission (preserveOriginal=true):
         original first, then each (pattern, group)'s matches in order,
         skipping empty / non-participating / whole-token captures; per-token
-        dedup keeps the first occurrence (matches the JVM lowering's
-        array_distinct over the same concat order)."""
+        dedup keeps the first occurrence."""
         out = []
         for t, pos in pairs:
             emit = [t]
@@ -1721,406 +1726,3 @@ class Analyzer:
 
     def analyze_query(self, text: str | None) -> list[str]:
         return [t for t, _ in self.analyze_query_positions(text)]
-
-    # -- JVM lowering ----------------------------------------------------
-    def _graph_entries_expr(self, toks):
-        """JVM fold of the greedy graph-synonym scan (_graph_scan): an
-        F.aggregate over the token indices with a (skip, pos, acc) state —
-        ``skip`` swallows the tail of a consumed multi-token input, ``pos``
-        is the flattened position counter.  Rule tables are tiny literals,
-        lowered as a longest-first WHEN cascade per index."""
-        from pyspark.sql import functions as F
-
-        entry_t = "array<struct<term:string,pos:int>>"
-        rules = self.graph_rules
-
-        idxs = F.when(
-            F.size(toks) > 0, F.sequence(F.lit(0), F.size(toks) - 1)
-        ).otherwise(F.array().cast("array<int>"))
-        init = F.struct(
-            F.lit(0).alias("skip"),
-            F.lit(0).alias("pos"),
-            F.array().cast(entry_t).alias("acc"),
-        )
-
-        def step(a, i):
-            tok = F.try_element_at(toks, i + 1)
-            no_match = F.struct(
-                F.lit(0).alias("skip"),
-                (a["pos"] + 1).alias("pos"),
-                F.concat(
-                    a["acc"],
-                    F.array(
-                        F.struct(
-                            tok.alias("term"), a["pos"].cast("int").alias("pos")
-                        )
-                    ),
-                ).alias("acc"),
-            )
-            branch = no_match
-            for inp, outp in reversed(rules):  # WHEN cascade: longest last-built = first-checked
-                n, m = len(inp), len(outp)
-                cond = None
-                for j, w in enumerate(inp):
-                    c = F.try_element_at(toks, i + 1 + j) == F.lit(w)
-                    cond = c if cond is None else (cond & c)
-                emit = F.array(
-                    *[
-                        F.struct(
-                            F.lit(w).alias("term"),
-                            (a["pos"] + j).cast("int").alias("pos"),
-                        )
-                        for j, w in enumerate(inp)
-                    ],
-                    *[
-                        F.struct(
-                            F.lit(o).alias("term"),
-                            (a["pos"] + j).cast("int").alias("pos"),
-                        )
-                        for j, o in enumerate(outp)
-                    ],
-                )
-                matched = F.struct(
-                    F.lit(n - 1).alias("skip"),
-                    (a["pos"] + max(n, m)).alias("pos"),
-                    F.concat(a["acc"], emit).alias("acc"),
-                )
-                branch = F.when(cond, matched).otherwise(branch)
-            return F.when(
-                a["skip"] > 0,
-                F.struct(
-                    (a["skip"] - 1).alias("skip"),
-                    a["pos"].alias("pos"),
-                    a["acc"].alias("acc"),
-                ),
-            ).otherwise(branch)
-
-        return F.aggregate(idxs, init, step, lambda a: a["acc"])
-
-    def entries_expr(self, col):
-        """Column(string) -> Column(array<struct<term string, pos int>>)
-        applying tokenize → stop → s-stem → synonyms, all JVM.  For
-        stemmer='porter' the PORTER STAGE IS NOT APPLIED here — the builder
-        stems the term dictionary (builder.apply_porter); everything else
-        (stop holes, positions, synonyms ordering) is identical."""
-        from pyspark.sql import functions as F
-
-        from lucene_spark.analysis.tokenizer import tokens_expr
-
-        if self.word_delimiter:
-            # WDGF's per-token graph (split runs, catenation spans, the
-            # position sorter) has no faithful Catalyst-expression form;
-            # the engine path is the Arrow invert (builder._arrow_base
-            # runs analyze_text — the default strategy), where the filter
-            # is a vocabulary-bounded per-token function like the
-            # dictionary stemmers.
-            raise NotImplementedError(
-                "word_delimiter analyzers build through the Arrow invert "
-                "path (IndexBuilder strategy='arrow'), not the HOF "
-                "expression chain"
-            )
-        if self.ascii_folding:
-            col = F.translate(col, _FOLD_FROM, _FOLD_TO)
-        if self.width_fold:
-            # full CJKWidthFilter: 1:1 translate (fullwidth ASCII +
-            # halfwidth kana), then the voiced/semi-voiced mark combining
-            # as a constant chain of literal replaces (the pattern set is
-            # disjoint and over already-normalized text — see lang.py), then
-            # the U+3099/U+309A fallback for marks that could not combine
-            col = F.translate(col, WIDTH_FOLD_FROM, WIDTH_FOLD_TO)
-            for pat, rep in KANA_COMBINE_PAIRS:
-                col = F.replace(col, F.lit(pat), F.lit(rep))
-            col = F.translate(col, WIDTH_MARK_FROM, WIDTH_MARK_TO)
-        if self.char_fold:
-            col = F.translate(col, self.char_fold[0], self.char_fold[1])
-        for pat, rep in self.pre_sub:
-            # Python replacement syntax -> Java's (backrefs, $ escaping)
-            col = F.regexp_replace(col, pat, _java_replacement(rep))
-        if self.elision:
-            col = F.regexp_replace(
-                col, f"(?i){ELISION_PATTERNS[self.elision]}", " "
-            )
-        if self.token_match_pattern:
-            toks = F.regexp_extract_all(
-                F.lower(col), F.lit(self.token_match_pattern), F.lit(0)
-            )
-        elif self.token_split_pattern:
-            toks = F.filter(
-                F.split(F.lower(col), self.token_split_pattern),
-                lambda t: t != F.lit(""),
-            )
-        else:
-            toks = tokens_expr(
-                col,
-                latin1=self.latin1,
-                cjk=self.cjk_bigrams,
-                extra=self.extra_letters,
-                urls=self.urls_emails,
-            )
-        if self.limit_tokens:
-            toks = F.slice(toks, 1, self.limit_tokens)
-        if self.cjk_bigrams:
-            # run -> bigrams (lone char / non-CJK token pass through), all
-            # JVM: the flatten keeps emission order, positions assigned next
-            is_run = lambda t: t.rlike(f"^[{CJK_RUN_CLASS}]") & (  # noqa: E731
-                F.length(t) > 1
-            )
-            toks = F.flatten(
-                F.transform(
-                    toks,
-                    lambda t: F.when(
-                        is_run(t),
-                        F.transform(
-                            F.sequence(F.lit(1), F.length(t) - 1),
-                            lambda i: F.substring(t, i.cast("int"), F.lit(2)),
-                        ),
-                    ).otherwise(F.array(t)),
-                )
-            )
-        if self.possessive:
-            toks = F.transform(toks, lambda t: F.regexp_replace(t, "'s$", ""))
-        if self.scandinavian == "normalize":
-            # digraph passes (leftmost-first per pass == the reference's
-            # single positional scan for this pattern set), then translate;
-            # lowercase-only patterns — the chain lowercases at tokenize
-            def _scan_norm(t):
-                t = F.regexp_replace(t, "a[ao]", "å")
-                t = F.regexp_replace(t, "ae", "æ")
-                t = F.regexp_replace(t, "o[eo]", "ø")
-                return F.translate(t, "äö", "æø")
-
-            toks = F.transform(toks, _scan_norm)
-        elif self.scandinavian == "fold":
-            def _scan_fold(t):
-                t = F.regexp_replace(t, "(a)[aeo]|(o)[eo]", "$1$2")
-                return F.translate(t, "åäæöø", "aaaoo")
-
-            toks = F.transform(toks, _scan_fold)
-        def _mk_replace(p, r):
-            # bind via closure: a default-arg lambda would change the HOF
-            # arity PySpark infers from the signature
-            return lambda t: F.regexp_replace(t, p, r)
-
-        for pat, rep in self.pattern_replace:
-            toks = F.transform(toks, _mk_replace(pat, _java_replacement(rep)))
-        if self.graph_synonyms:
-            entries = self._graph_entries_expr(toks)
-        else:
-            entries = F.transform(
-                toks,
-                lambda t, i: F.struct(t.alias("term"), i.cast("int").alias("pos")),
-            )
-        if self.pattern_capture:
-            cap_specs = [
-                (pat, g)
-                for pat in self.pattern_capture
-                for g in range(1, _re.compile(pat).groups + 1)
-            ]
-
-            def _expand_entry(e):
-                parts = [F.array(e)]
-                for pat, g in cap_specs:
-                    def _mk(p_, g_, ent):
-                        caps = F.regexp_extract_all(
-                            ent["term"], F.lit(p_), F.lit(g_)
-                        )
-                        caps = F.filter(
-                            caps,
-                            lambda c: (c != F.lit("")) & (c != ent["term"]),
-                        )
-                        return F.transform(
-                            caps,
-                            lambda c: F.struct(
-                                c.alias("term"), ent["pos"].alias("pos")
-                            ),
-                        )
-
-                    parts.append(_mk(pat, g, e))
-                return F.array_distinct(F.concat(*parts))
-
-            entries = F.flatten(F.transform(entries, _expand_entry))
-        if self.stopwords:
-            stop_lit = F.array(*[F.lit(s) for s in sorted(self.stopwords)])
-            entries = F.filter(
-                entries, lambda e: ~F.array_contains(stop_lit, e["term"])
-            )
-        if self.length_range is not None:
-            mn, mx = self.length_range
-            entries = F.filter(
-                entries,
-                lambda e: (F.length(e["term"]) >= mn)
-                & (F.length(e["term"]) <= mx),
-            )
-        if self.keep_words:
-            keep_lit = F.array(*[F.lit(s) for s in sorted(self.keep_words)])
-            entries = F.filter(
-                entries, lambda e: F.array_contains(keep_lit, e["term"])
-            )
-        if self.truncate:
-            entries = F.transform(
-                entries,
-                lambda e: F.struct(
-                    F.substring(e["term"], 1, self.truncate).alias("term"),
-                    e["pos"].alias("pos"),
-                ),
-            )
-        if self.reverse_tokens:
-            entries = F.transform(
-                entries,
-                lambda e: F.struct(
-                    F.reverse(e["term"]).alias("term"),
-                    e["pos"].alias("pos"),
-                ),
-            )
-        if self.stemmer == "s":
-            if self.stem_exclusions:
-                excl_lit = F.array(
-                    *[F.lit(s) for s in sorted(self.stem_exclusions)]
-                )
-                entries = F.transform(
-                    entries,
-                    lambda e: F.struct(
-                        F.when(
-                            F.array_contains(excl_lit, e["term"]), e["term"]
-                        )
-                        .otherwise(_s_stem_col(e["term"]))
-                        .alias("term"),
-                        e["pos"].alias("pos"),
-                    ),
-                )
-            else:
-                entries = F.transform(
-                    entries,
-                    lambda e: F.struct(
-                        _s_stem_col(e["term"]).alias("term"),
-                        e["pos"].alias("pos"),
-                    ),
-                )
-        if self.ngram is not None:
-            mn, mx = self.ngram
-            entries = F.flatten(
-                F.transform(
-                    entries,
-                    lambda e: F.flatten(
-                        F.transform(
-                            F.sequence(F.lit(mn), F.lit(mx)),
-                            lambda ln: F.when(
-                                F.length(e["term"]) >= ln,
-                                F.transform(
-                                    F.sequence(F.lit(1), F.length(e["term"]) - ln + 1),
-                                    lambda s: F.struct(
-                                        F.substring(e["term"], s, ln).alias("term"),
-                                        e["pos"].alias("pos"),
-                                    ),
-                                ),
-                            ).otherwise(
-                                F.array().cast("array<struct<term:string,pos:int>>")
-                            ),
-                        )
-                    ),
-                )
-            )
-        if self.edge_ngram is not None:
-            mn, mx = self.edge_ngram
-            entries = F.flatten(
-                F.transform(
-                    entries,
-                    lambda e: F.flatten(
-                        F.transform(
-                            F.sequence(F.lit(mn), F.lit(mx)),
-                            lambda ln: F.when(
-                                F.length(e["term"]) >= ln,
-                                F.array(
-                                    F.struct(
-                                        e["term"]
-                                        .substr(F.lit(1), ln)
-                                        .alias("term"),
-                                        e["pos"].alias("pos"),
-                                    )
-                                ),
-                            ).otherwise(
-                                F.array().cast("array<struct<term:string,pos:int>>")
-                            ),
-                        )
-                    ),
-                )
-            )
-        if self.shingle_size:
-            n = self.shingle_size
-            idxs = F.when(
-                F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-            ).otherwise(F.array().cast("array<int>"))
-            shingles = F.transform(
-                idxs,
-                lambda i: F.struct(
-                    F.concat_ws(
-                        " ", *[F.element_at(toks, i + j + 1) for j in range(n)]
-                    ).alias("term"),
-                    i.cast("int").alias("pos"),
-                ),
-            )
-            entries = (
-                shingles  # FixedShingleFilter: no unigram stream
-                if self.fixed_shingles
-                else F.concat(entries, shingles)
-            )
-        if self.common_grams:
-            cg_lit = F.array(*[F.lit(s) for s in sorted(self.common_grams)])
-            idxs2 = F.when(
-                F.size(toks) >= 2, F.sequence(F.lit(0), F.size(toks) - 2)
-            ).otherwise(F.array().cast("array<int>"))
-            grams = F.filter(
-                F.transform(
-                    idxs2,
-                    lambda i: F.struct(
-                        F.concat_ws(
-                            "_",
-                            F.element_at(toks, i + 1),
-                            F.element_at(toks, i + 2),
-                        ).alias("term"),
-                        i.cast("int").alias("pos"),
-                    ),
-                ),
-                lambda e: F.array_contains(
-                    cg_lit, F.element_at(toks, e["pos"] + 1)
-                )
-                | F.array_contains(cg_lit, F.element_at(toks, e["pos"] + 2)),
-            )
-            entries = F.concat(entries, grams)
-        if self.synonyms:
-            # emit [token, syn1, syn2...] per entry, then flatten — additive
-            # same-position synonyms
-            pairs = sorted(self.syn_map.items())
-            def expand(e):
-                cases = None
-                for src, extras in pairs:
-                    arr = F.array(
-                        e["term"].alias("term"),
-                        *[F.lit(x) for x in extras],
-                    )
-                    c = F.when(e["term"] == F.lit(src), arr)
-                    cases = c if cases is None else cases.when(e["term"] == F.lit(src), arr)
-                cases = cases.otherwise(F.array(e["term"]))
-                return F.transform(
-                    cases, lambda t: F.struct(t.alias("term"), e["pos"].alias("pos"))
-                )
-
-            entries = F.flatten(F.transform(entries, expand))
-        return entries
-
-
-def _s_stem_col(col):
-    from pyspark.sql import functions as F
-
-    def cut(n):
-        return F.substring(col, 1, F.length(col) - n)
-
-    return (
-        F.when(col.endswith("eies") | col.endswith("aies"), col)
-        .when(col.endswith("ies"), F.concat(cut(3), F.lit("y")))
-        .when(col.endswith("aes") | col.endswith("ees") | col.endswith("oes"), col)
-        .when(col.endswith("es"), cut(1))
-        .when(col.endswith("us") | col.endswith("ss"), col)
-        .when(col.endswith("s"), cut(1))
-        .otherwise(col)
-    )

@@ -530,12 +530,10 @@ _WIDTH_FROM = "".join(chr(c) for c in range(0xFF01, 0xFF5F)) + "".join(
 _WIDTH_TO = "".join(chr(c - 0xFEE0) for c in range(0xFF01, 0xFF5F)) + "".join(
     chr(_KANA_NORM[c - 0xFF65]) for c in range(0xFF65, 0xFF9E)
 )
-WIDTH_FOLD_FROM, WIDTH_FOLD_TO = _WIDTH_FROM, _WIDTH_TO
 _WIDTH_TABLE = str.maketrans(_WIDTH_FROM, _WIDTH_TO)
 
-# (normalized base + halfwidth mark) -> composed form, for the chained-
-# replace JVM lowering AND the python twin.  Derived from the delta
-# tables; only deltas != 0 combine (CJKWidthFilter.combine:93-98).
+# (normalized base + halfwidth mark) -> composed form, for the chained
+# replaces of cjk_width_fold.  Derived from the delta tables; only deltas != 0 combine (CJKWidthFilter.combine:93-98).
 KANA_COMBINE_PAIRS: list[tuple[str, str]] = []
 for _i, _d in enumerate(_KANA_COMBINE_VOICED):
     if _d:
@@ -548,13 +546,12 @@ for _i, _d in enumerate(_KANA_COMBINE_HALF_VOICED):
             (chr(0x30A6 + _i) + "ﾟ", chr(0x30A6 + _i + _d))
         )
 # fallback for marks that could not combine (java:57 KANA_NORM tail)
-WIDTH_MARK_FROM, WIDTH_MARK_TO = "ﾞﾟ", "゙゚"
-_MARK_TABLE = str.maketrans(WIDTH_MARK_FROM, WIDTH_MARK_TO)
+_MARK_TABLE = str.maketrans("ﾞﾟ", "゙゚")
 
 
 def cjk_width_fold(text: str) -> str:
-    """Python twin of the JVM lowering (translate -> combining replaces ->
-    fallback translate) — equivalent to CJKWidthFilter's left-to-right
+    """CJKWidthFilter as translate -> combining replaces -> fallback
+    translate — equivalent to CJKWidthFilter's left-to-right
     in-place loop because each combining pattern is over ALREADY-normalized
     text and the pattern sets are disjoint."""
     t = text.translate(_WIDTH_TABLE)

@@ -22,10 +22,11 @@ break); full UAX#29 (ideographs, emoji, extended scripts) is out of the
 declared subset — callers needing it plug in a custom pandas-UDF analyzer
 (the UDF surface, SURVEY.md §2.12).
 
-The engine applies the SAME pattern JVM-side via ``regexp_extract_all`` so the
-hot tokenize path never leaves whole-stage codegen; the chop is a JVM array
-expression.  ``tokenize_text`` is the reference Python implementation used by
-the oracle and by property tests.
+``tokenize_text`` is the one implementation: the engine runs it inside
+Arrow-batched Python (the index build's invert pass, and
+``Analyzer.analyze_column`` for every other Spark caller), and the Python
+oracle calls it directly.  The DuckDB oracle twins replay ``token_pattern``
+as SQL.
 """
 
 from __future__ import annotations
@@ -162,37 +163,3 @@ def tokenize_text(
             )
     return out
 
-
-def tokens_expr(
-    col,
-    max_token_length: int = MAX_TOKEN_LENGTH,
-    latin1: bool = False,
-    cjk: bool = False,
-    extra: str = "",
-    urls: bool = False,
-):
-    """JVM-side tokenizer: Column(string) -> Column(array<string>).
-
-    Pure built-in expressions (regexp_extract_all + flatten/transform) so the
-    tokenize stage stays inside whole-stage codegen — no Python in the hot
-    path (input_hint requirement).  Exactly equivalent to ``tokenize_text``.
-    """
-    from pyspark.sql import functions as F
-
-    pattern = token_pattern(latin1=latin1, cjk=cjk, extra=extra, urls=urls)
-    runs = F.regexp_extract_all(F.lower(col), F.lit(pattern), 0)
-    m = max_token_length
-    # chop each run into <=m-char chunks; fast path (no chop) is the common case
-    chopped = F.flatten(
-        F.transform(
-            runs,
-            lambda t: F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.floor((F.length(t) - F.lit(1)) / F.lit(m)).cast("int"),
-                ),
-                lambda i: F.substring(t, (i * m + 1).cast("int"), F.lit(m)),
-            ),
-        )
-    )
-    return F.when(col.isNull(), F.array().cast("array<string>")).otherwise(chopped)

@@ -9,18 +9,19 @@ DataFrame stages:
       -> deterministic dense doc_id (global rank over (conv_id, turn_idx) —
          two-pass offsets, no global window; ≙ DocIDMerger's stable remap,
          core/index/DocIDMerger.java:32)
-      -> tokenize (pure JVM expressions, lucene_spark.analysis.tokens_expr)
+      -> analyze + per-doc invert in one Arrow-batched mapInPandas pass
+         (Analyzer.analyze_text / tokenize_text; see IndexBuilder._arrow_base)
+         (term, doc_id) -> freq, positions       (≙ TermsHashPerField.add)
       -> norms: intToByte4(token_count) as integer-exact JVM expression
          (≙ IndexingChain.java:1158-1164 + SmallFloat.java:103-156)
-      -> posexplode + two hash aggregations:
-           (term, doc_id) -> freq, positions     (≙ TermsHashPerField.add)
-           (term)         -> doc_freq, ttf, ...  (≙ term dictionary stats)
+      -> explode the per-doc entries to postings rows; dictionary stemmers
+         re-aggregate on the distinct term dictionary (apply_dict_stemmer)
+      -> (term) -> doc_freq, ttf, ...            (≙ term dictionary stats)
       -> stats: global docCount / sumTotalTermFreq
          (≙ IndexSearcher.collectionStatistics, IndexSearcher.java:913-928)
 
-Everything stays inside whole-stage codegen: no Python UDF anywhere in the
-build hot path.  The block codec (compressed segment format) is layered on
-top in ``lucene_spark.index.segments``.
+No shuffle touches per-token rows.  The block codec (compressed segment
+format) is layered on top in ``lucene_spark.index.segments``.
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lucene_spark.analysis.analyzer import DICT_STEMMERS, Analyzer
-from lucene_spark.analysis.tokenizer import tokens_expr
 from lucene_spark.util.smallfloat import NUM_FREE_VALUES
 
 DOC_KEY = ("conv_id", "turn_idx")
@@ -269,21 +269,18 @@ class IndexBuilder:
         b: float = 0.75,
         num_segments: Optional[int] = None,
         text_col: str = "text",
-        invert: str = "arrow",
         analyzer: Optional[Analyzer] = None,
         keyword_repeat: bool = False,
         payload_delimiter: Optional[str] = None,
         payload_encoder: str = "float",
         term_freq_delimiter: Optional[str] = None,
     ):
-        if invert not in ("arrow", "mapside", "shuffle"):
-            raise ValueError(f"unknown invert strategy {invert}")
         if term_freq_delimiter is not None:
             # DelimitedTermFrequencyTokenFilter (analysis/common/.../
             # miscellaneous/DelimitedTermFrequencyTokenFilter.java:41):
             # "term|N" sets the token's term frequency to N; the field is
             # indexed DOCS_AND_FREQS — no positions.  Same tokenizer caveat
-            # as payloads: whitespace tokenization, Arrow invert only.
+            # as payloads: whitespace tokenization.
             if payload_delimiter is not None:
                 raise ValueError(
                     "term_freq_delimiter and payload_delimiter are exclusive"
@@ -293,12 +290,10 @@ class IndexBuilder:
                     "term_freq_delimiter uses whitespace tokenization; "
                     "an analyzer chain is not supported"
                 )
-            if invert != "arrow":
-                raise ValueError("term_freq_delimiter requires invert='arrow'")
         if payload_delimiter is not None:
             # DelimitedPayloadTokenFilter (analysis/payloads.py): whitespace
             # tokenization only (the reference's "tokenizer must not split on
-            # the delimiter" caveat), Arrow invert only, no analyzer chain
+            # the delimiter" caveat), no analyzer chain
             from lucene_spark.analysis.payloads import PAYLOAD_ENCODERS
 
             if analyzer is not None:
@@ -306,8 +301,6 @@ class IndexBuilder:
                     "payload_delimiter uses whitespace tokenization; "
                     "an analyzer chain is not supported"
                 )
-            if invert != "arrow":
-                raise ValueError("payload_delimiter requires invert='arrow'")
             if payload_encoder not in PAYLOAD_ENCODERS:
                 raise ValueError(
                     f"payload_encoder must be one of {sorted(PAYLOAD_ENCODERS)}"
@@ -325,7 +318,6 @@ class IndexBuilder:
         self.b = b
         self.num_segments = num_segments
         self.text_col = text_col
-        self.invert = invert
         self.analyzer = analyzer
         self.keyword_repeat = keyword_repeat
         self.payload_delimiter = payload_delimiter
@@ -525,21 +517,14 @@ class IndexBuilder:
     def _arrow_base(self, with_ids: DataFrame) -> DataFrame:
         """Tokenize + per-doc invert in ONE Arrow-batched ``mapInPandas``
         pass — the north-star shape ("tokenize/normalize transcript turns
-        with vectorized Arrow UDFs").  The analysis chain runs through the
-        Python reference implementation (``Analyzer.analyze_text`` /
-        ``tokenize_text``), which the property tests hold equal to the JVM
-        expression chain — parity by construction with the DuckDB oracle.
-
-        Why not the HOF expression inversion (``mapside``): Spark's
-        higher-order functions have NO whole-stage codegen — they evaluate
-        through ``SimpleHigherOrderFunction.eval`` (interpreted, one boxed
-        lambda call per array element), so the O(L*D) per-doc inversion
-        burns ~10x the cycles of this O(L) dict pass and its
-        allocation-heavy interpret loop degrades sharply when many
-        executor cores contend for shared cache (measured: 4x1-JVM
-        local[2] builds each slow 2.5-5x vs solo; the Arrow path scales
-        ~linearly).  Per-doc Python here is a C-speed regex + dict append;
-        batches move as Arrow columns, never per-row Python UDF calls.
+        with vectorized Arrow UDFs").  The analysis chain is the one
+        implementation (``Analyzer.analyze_text`` / ``tokenize_text``) the
+        Python oracle also runs; the DuckDB twins check it independently.
+        Per-doc Python here is a C-speed regex + dict append — Lucene's
+        doc-at-a-time ``IndexingChain``/``TermsHashPerField`` hash
+        (IndexingChain.java:561, TermsHashPerField.java:190) as a per-doc
+        dict; batches move as Arrow columns, never per-row Python UDF
+        calls.
         """
         import pandas as pd
 
@@ -557,9 +542,8 @@ class IndexBuilder:
         if an is not None and an.stemmer in DICT_STEMMERS:
             # dictionary stemmers are deferred to the term dictionary
             # (apply_dict_stemmer); the index chain runs everything BUT the
-            # stem, exactly like entries_expr (dict-stemmer+synonyms is
-            # rejected at Analyzer init, so dropping the stem here changes
-            # nothing else).
+            # stem (dict-stemmer+synonyms is rejected at Analyzer init, so
+            # dropping the stem here changes nothing else).
             an = dc_replace(an, stemmer=None)
         text_col = self.text_col
         pay_delim = self.payload_delimiter
@@ -696,174 +680,74 @@ class IndexBuilder:
 
     # -- full build ------------------------------------------------------
     def build(self, transcripts: DataFrame) -> InvertedIndex:
-        """Three invert strategies:
-
-        * ``arrow`` (default): tokenize + per-doc inversion in one
-          Arrow-batched ``mapInPandas`` pass (see :meth:`_arrow_base`) —
-          Lucene's doc-at-a-time ``IndexingChain``/``TermsHashPerField``
-          hash (IndexingChain.java:561, TermsHashPerField.java:190) as a
-          per-doc dict at C speed.  NO shuffle touches per-token rows.
-        * ``mapside``: the same per-document inversion as a higher-order
-          array expression.  Same plan shape, but Spark HOFs evaluate
-          interpreted (no codegen) and the inversion is O(L*distinct) per
-          doc — kept as the pure-JVM reference for parity tests.
-        * ``shuffle``: posexplode + groupBy(term, doc_id) — one hash-agg
-          shuffle over per-token rows; scales to arbitrarily long single
-          documents (no per-doc quadratic term).
-        """
+        """Assign doc ids, then analyze + invert each document in one
+        Arrow-batched pass (:meth:`_arrow_base`) and fan the inverted base
+        out to docs, postings and term stats."""
         spark = transcripts.sparkSession
         with_ids = self.assign_doc_ids(transcripts)
 
-        # analysis chain -> array<struct<term,pos>> token entries.  Plain
-        # standard-analyze (no analyzer) keeps dense positions; an analyzer
-        # adds stop holes / stemming / synonyms (analysis/analyzer.py).  The
-        # Porter stage is deferred to the term dictionary (apply_porter).
-        if self.invert != "arrow":
-            if self.analyzer is None or self.analyzer.is_noop():
-                te = F.transform(
-                    tokens_expr(F.col(self.text_col)),
-                    lambda t, i: F.struct(
-                        t.alias("term"), i.cast("int").alias("pos")
-                    ),
-                )
-            else:
-                te = self.analyzer.entries_expr(F.col(self.text_col))
-            toks = with_ids.withColumn("_te", te)
-
-        if self.invert in ("arrow", "mapside"):
-            # base is localCheckpoint'ed (eager) purely as a MATERIALIZATION
-            # point: docs/postings/term_stats all fan out from it, and without
-            # a cut here each would re-tokenize the corpus.  doc_id itself is
-            # deterministic lineage (assign_doc_ids: rank over the data), so a
-            # lost checkpoint block is only a recompute cost, never an id
-            # desync.  On a real cluster the durable path is
-            # CheckpointedIndexBuilder, which writes the base to parquet.
-            # ≙ Lucene's docIDs being fixed at flush time
-            # (index/DocumentsWriterPerThread.java).
-            if self.invert == "arrow":
-                base = self._arrow_base(with_ids).localCheckpoint(eager=True)
-            else:
-                tcol = F.col("_te")
-                entries = F.transform(
-                    F.array_distinct(F.transform(tcol, lambda e: e["term"])),
-                    lambda t: F.struct(
-                        t.alias("term"),
-                        F.transform(
-                            F.filter(tcol, lambda e: e["term"] == t),
-                            lambda e: e["pos"],
-                        ).alias("positions"),
-                    ),
-                )
-                base = (
-                    toks.withColumn("length", F.size("_te"))
-                    .withColumn("norm", _byte4_encode("length"))
-                    .withColumn(
-                        "_entries",
-                        F.when(F.size(tcol) > 0, entries).otherwise(
-                            F.array().cast(
-                                "array<struct<term:string,positions:array<int>>>"
-                            )
-                        ),
-                    )
-                    .drop("_te", self.text_col)
-                    .localCheckpoint(eager=True)
-                )
-            # base's checkpoint truncated lineage, so the conv-offsets
-            # checkpoint behind doc_id is no longer referenced — free it now
-            co = getattr(self, "_conv_offsets", None)
-            if co is not None:
-                self._conv_offsets = None
-                _release_local_checkpoint(co)
-            docs = base.select(
-                "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                "length", "norm", "segment",
-            )
-            if self.term_freq_delimiter is not None:
-                # DOCS_AND_FREQS: explicit freq, typed-null positions
-                post_cols = [
-                    F.col("_e.term").alias("term"),
-                    F.col("doc_id"),
-                    F.col("_e.freq").alias("freq"),
-                    F.lit(None).cast("array<int>").alias("positions"),
-                    F.col("norm"),
-                    F.col("segment"),
-                ]
-            else:
-                post_cols = [
-                    F.col("_e.term").alias("term"),
-                    F.col("doc_id"),
-                    F.size("_e.positions").cast("int").alias("freq"),
-                    F.col("_e.positions").alias("positions"),
-                    F.col("norm"),
-                    F.col("segment"),
-                ]
-            if self.payload_delimiter is not None:
-                # payloads ride the postings rows, aligned with positions
-                # (≙ the .pay file of Lucene90PostingsFormat)
-                post_cols.insert(4, F.col("_e.payloads").alias("payloads"))
-            postings = base.select(
-                "doc_id", "segment", "norm", F.explode("_entries").alias("_e")
-            ).select(*post_cols)
-            cached = (base,)
-            if self.analyzer is not None and self.analyzer.stemmer in DICT_STEMMERS:
-                postings = self.apply_dict_stemmer(
-                    postings,
-                    self.analyzer.stemmer,
-                    self.analyzer.stem_exclusions,
-                    keyword_repeat=self.keyword_repeat,
-                ).persist()
-                cached = cached + (postings,)
-            # positions stay cached (re-derived on demand for phrases);
-            # scoring scans hit only the slim primitive columns
-            postings_slim = postings.select(
-                "term", "doc_id", "freq", "norm"
-            ).persist()
-            docs = docs.persist()
-            cached = cached + (docs, postings_slim)
+        # base is localCheckpoint'ed (eager) purely as a MATERIALIZATION
+        # point: docs/postings/term_stats all fan out from it, and without
+        # a cut here each would re-tokenize the corpus.  doc_id itself is
+        # deterministic lineage (assign_doc_ids: rank over the data), so a
+        # lost checkpoint block is only a recompute cost, never an id
+        # desync.  On a real cluster the durable path is
+        # CheckpointedIndexBuilder, which writes the base to parquet.
+        # ≙ Lucene's docIDs being fixed at flush time
+        # (index/DocumentsWriterPerThread.java).
+        base = self._arrow_base(with_ids).localCheckpoint(eager=True)
+        # base's checkpoint truncated lineage, so the conv-offsets
+        # checkpoint behind doc_id is no longer referenced — free it now
+        co = getattr(self, "_conv_offsets", None)
+        if co is not None:
+            self._conv_offsets = None
+            _release_local_checkpoint(co)
+        docs = base.select(
+            "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
+            "length", "norm", "segment",
+        )
+        if self.term_freq_delimiter is not None:
+            # DOCS_AND_FREQS: explicit freq, typed-null positions
+            post_cols = [
+                F.col("_e.term").alias("term"),
+                F.col("doc_id"),
+                F.col("_e.freq").alias("freq"),
+                F.lit(None).cast("array<int>").alias("positions"),
+                F.col("norm"),
+                F.col("segment"),
+            ]
         else:
-            docs = (
-                toks.withColumn("length", F.size("_te"))
-                .withColumn("norm", _byte4_encode("length"))
-                .select(
-                    "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                    "length", "norm", "segment",
-                )
-                .persist()
-            )
-            exploded = (
-                toks.select(
-                    "doc_id",
-                    "segment",
-                    F.size("_te").alias("length"),
-                    F.explode("_te").alias("_e"),
-                )
-                .withColumn("norm", _byte4_encode("length"))
-                .select(
-                    "doc_id", "segment", "norm",
-                    F.col("_e.pos").alias("pos"),
-                    F.col("_e.term").alias("term"),
-                )
-            )
-
-            postings = (
-                exploded.groupBy("term", "doc_id")
-                .agg(
-                    F.count("*").cast("int").alias("freq"),
-                    F.sort_array(F.collect_list("pos")).alias("positions"),
-                    F.first("norm").alias("norm"),
-                    F.first("segment").alias("segment"),
-                )
-            )
-            if self.analyzer is not None and self.analyzer.stemmer in DICT_STEMMERS:
-                postings = self.apply_dict_stemmer(
-                    postings,
-                    self.analyzer.stemmer,
-                    self.analyzer.stem_exclusions,
-                    keyword_repeat=self.keyword_repeat,
-                )
-            postings = postings.persist()
-            postings_slim = postings.select("term", "doc_id", "freq", "norm")
-            cached = (docs, postings)
+            post_cols = [
+                F.col("_e.term").alias("term"),
+                F.col("doc_id"),
+                F.size("_e.positions").cast("int").alias("freq"),
+                F.col("_e.positions").alias("positions"),
+                F.col("norm"),
+                F.col("segment"),
+            ]
+        if self.payload_delimiter is not None:
+            # payloads ride the postings rows, aligned with positions
+            # (≙ the .pay file of Lucene90PostingsFormat)
+            post_cols.insert(4, F.col("_e.payloads").alias("payloads"))
+        postings = base.select(
+            "doc_id", "segment", "norm", F.explode("_entries").alias("_e")
+        ).select(*post_cols)
+        cached = (base,)
+        if self.analyzer is not None and self.analyzer.stemmer in DICT_STEMMERS:
+            postings = self.apply_dict_stemmer(
+                postings,
+                self.analyzer.stemmer,
+                self.analyzer.stem_exclusions,
+                keyword_repeat=self.keyword_repeat,
+            ).persist()
+            cached = cached + (postings,)
+        # positions stay cached (re-derived on demand for phrases);
+        # scoring scans hit only the slim primitive columns
+        postings_slim = postings.select(
+            "term", "doc_id", "freq", "norm"
+        ).persist()
+        docs = docs.persist()
+        cached = cached + (docs, postings_slim)
 
         term_stats = (
             postings_slim.groupBy("term")
@@ -876,13 +760,6 @@ class IndexBuilder:
             .persist()
         )
         cached = cached + (term_stats,)
-        # shuffle path: docs/postings lineage still reaches the conv-offsets
-        # checkpoint (a cache-evicted block recomputes through it), so it is
-        # released with the index, not before
-        co = getattr(self, "_conv_offsets", None)
-        if co is not None:
-            self._conv_offsets = None
-            cached = cached + (co,)
 
         srow = docs.agg(
             F.count("*").alias("max_doc"),

@@ -310,7 +310,8 @@ def bm25_nb_classify(
 
     Scale shape: per-(class, term) max is ONE hash agg over the scored
     postings relation; the class dim is broadcast; classification is the
-    exploded-token left join + per-doc hash agg.  No UDF, no driver
+    exploded-token left join + per-doc hash agg over the test text
+    analyzed by the index chain (one Arrow-batched UDF).  No driver
     state."""
     ids = list(id_cols)
     k1, b = index.k1, index.b
@@ -361,29 +362,17 @@ def bm25_nb_classify(
     )
     cdim = cdim.select("_cls", cls_score.alias("_cs"))
 
-    # the reference analyzes unseen text with the INDEX's analyzer —
-    # plain index: the engine StandardTokenizer twin (tokens_expr, NOT the
-    # SQL-regex helper — they differ on NUM tokens like "1,000" and on
-    # maxTokenLength splits); analyzed index: the chain's JVM lowering, so
-    # test tokens live in the postings vocabulary.  Dictionary-stage
-    # stemmers and WDGF have no complete entries_expr form — refuse
-    # rather than silently classifying with a mismatched vocabulary.
-    from lucene_spark.analysis.analyzer import DICT_STEMMERS
-    from lucene_spark.analysis.tokenizer import tokens_expr
+    # the reference analyzes unseen text with the INDEX's analyzer: the
+    # same chain the build ran (the engine StandardTokenizer for a plain
+    # index, NOT the SQL-regex helper — they differ on NUM tokens like
+    # "1,000" and on maxTokenLength splits), so test tokens live in the
+    # postings vocabulary
+    from lucene_spark.analysis.analyzer import Analyzer
 
-    an = index.analyzer
-    if an is None or an.is_noop():
-        toks_col = tokens_expr(F.col(text_col))
-    elif an.stemmer in DICT_STEMMERS or an.word_delimiter:
-        raise NotImplementedError(
-            "bm25_nb_classify needs the index analyzer's JVM lowering; "
-            "dictionary-stage stemmers / word_delimiter chains are not "
-            "supported"
-        )
-    else:
-        toks_col = F.transform(
-            an.entries_expr(F.col(text_col)), lambda e: e["term"]
-        )
+    an = index.analyzer or Analyzer()
+    toks_col = F.transform(
+        an.analyze_column(F.col(text_col)), lambda e: e["term"]
+    )
     toks = test_df.select(*ids, F.explode(toks_col).alias("term"))
     per_tok = (
         toks.crossJoin(F.broadcast(cdim))

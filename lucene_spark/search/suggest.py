@@ -81,7 +81,7 @@ def build_analyzing_suggester(
     )
     key = F.concat_ws(
         " ",
-        F.transform(analyzer.entries_expr(F.col("surface")), lambda e: e["term"]),
+        F.transform(analyzer.analyze_column(F.col("surface")), lambda e: e["term"]),
     )
     cols = [key.alias("key"), "surface", "weight"] + (
         [F.col(context_col).alias("context")] if context_col else []
@@ -471,33 +471,43 @@ def build_freetext_model(
     token shingle of the analyzed corpus with its occurrence count (the
     reference stores the same shingles in an FST keyed by the separator-
     joined gram with encodeWeight(totalTermFreq)).  Space is the token
-    separator.  Pure JVM: tokenize -> per-order slice/concat transforms ->
-    explode -> one hash agg; at scale write it sorted by (ord, gram) so
-    parquet min/max stats prune every prefix lookup."""
-    arr = F.transform(
-        analyzer.entries_expr(F.col(text_col)), lambda e: e["term"]
+    separator.  One pass: analyze (Arrow-batched, once per row) -> every
+    1..grams shingle with its order in one array -> one explode -> one
+    hash agg; at scale write it sorted by (ord, gram) so parquet min/max
+    stats prune every prefix lookup."""
+    toks = texts.select(
+        F.transform(
+            analyzer.analyze_column(F.col(text_col)), lambda e: e["term"]
+        ).alias("_t")
     )
+    arr = F.col("_t")
+
     def _shingle(n):
         # NOTE: a two-parameter lambda would make F.transform pass
         # (element, index) — bind n via closure, not a default arg
-        return lambda i: F.concat_ws(" ", F.slice(arr, i, n))
-
-    per_order = []
-    for n in range(1, grams + 1):
-        # guard: Spark's sequence(1, 0) would DESCEND ([1, 0]); docs with
-        # fewer than n tokens contribute no n-grams
-        g = F.when(
-            F.size(arr) >= n,
-            F.transform(F.sequence(F.lit(1), F.size(arr) - (n - 1)), _shingle(n)),
-        ).otherwise(F.array().cast("array<string>"))
-        per_order.append(
-            texts.select(F.explode(g).alias("gram"))
-            .withColumn("ord", F.lit(n))
+        return lambda i: F.struct(
+            F.concat_ws(" ", F.slice(arr, i, n)).alias("gram"),
+            F.lit(n).alias("ord"),
         )
-    u = per_order[0]
-    for p in per_order[1:]:
-        u = u.unionByName(p)
-    return u.groupBy("gram", "ord").agg(F.count("*").cast("long").alias("cnt"))
+
+    # guard: Spark's sequence(1, 0) would DESCEND ([1, 0]); docs with
+    # fewer than n tokens contribute no n-grams
+    shingles = F.concat(
+        *[
+            F.when(
+                F.size(arr) >= n,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(arr) - (n - 1)), _shingle(n)
+                ),
+            ).otherwise(F.array().cast("array<struct<gram:string,ord:int>>"))
+            for n in range(1, grams + 1)
+        ]
+    )
+    return (
+        toks.select(F.inline(shingles))
+        .groupBy("gram", "ord")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
 
 
 def freetext_lookup(

@@ -11,7 +11,8 @@ Spark-first shape (the SURVEY §2.10 stream-static join):
 
 * registered queries parse once on the driver; their POSITIVE terms form a
   tiny (query_id, term) relation that is broadcast;
-* a batch of docs tokenizes JVM-side and explodes to (doc, term) rows which
+* a batch of docs runs through the analysis chain (one Arrow-batched UDF,
+  Analyzer.analyze_column) and explodes to (doc, term) rows which
   join the broadcast query-term relation -> candidate pairs.  Candidates
   per doc are bounded by the registered queries containing its terms —
   never |docs| x |queries|;
@@ -34,8 +35,7 @@ import fnmatch
 
 from pyspark.sql import DataFrame, functions as F
 
-from lucene_spark.analysis.analyzer import DICT_STEMMERS
-from lucene_spark.analysis.tokenizer import tokens_expr
+from lucene_spark.analysis.analyzer import Analyzer
 from lucene_spark.search.query import (
     BooleanQuery,
     BoostQuery,
@@ -257,29 +257,9 @@ class Monitor:
 
         spark = docs.sparkSession
 
-        # document tokenization through the index chain: JVM where the
-        # chain lowers (tokenize/stop/s-stem/synonyms), Arrow-batched
-        # python only for dictionary stemmers (no JVM lowering exists) —
+        # document tokenization through the index chain, Arrow-batched —
         # per incoming doc, the stream's unit of work, never per-corpus-row
-        if self.analyzer is None:
-            entries = F.transform(
-                tokens_expr(F.col(text_col)),
-                lambda t, i: F.struct(t.alias("term"), i.cast("int").alias("pos")),
-            )
-        elif self.analyzer.stemmer in DICT_STEMMERS:
-            analyzer = self.analyzer
-
-            @F.pandas_udf("array<struct<term:string,pos:int>>")
-            def _analyze(texts):
-                return texts.map(
-                    lambda t: [
-                        {"term": w, "pos": p} for w, p in analyzer.analyze_text(t)
-                    ]
-                )
-
-            entries = _analyze(F.col(text_col))
-        else:
-            entries = self.analyzer.entries_expr(F.col(text_col))
+        entries = (self.analyzer or Analyzer()).analyze_column(F.col(text_col))
         toks = docs.select(*id_cols, entries.alias("_ent"))
 
         # universal anchors (MatchAll: prefix '') must reach verification

@@ -479,8 +479,9 @@ def main():
         ),
         (
             "FreeText suggest (n-gram model + stupid backoff lookup)",
-            "Model build: tokenize -> per-order shingle transforms -> ONE "
-            "hash agg. Lookup: per-order prefix filters over the model "
+            "Model build: ONE ArrowEvalPython analysis pass -> every "
+            "order's shingles in one array -> ONE Generate -> ONE hash "
+            "agg (no Union). Lookup: per-order prefix filters over the model "
             "relation union'd, one window dedup by predicted token, "
             "TakeOrderedAndProject at k. The model scan carries the "
             "ord/gram predicates (write the relation sorted by (ord, gram) "
@@ -611,8 +612,9 @@ def main():
             "postings relation (map-side partial max); the class dim is a "
             "BroadcastNestedLoopJoin-free broadcast cross of a few rows; "
             "the vocabulary-sized max relation joins the exploded test "
-            "tokens WITHOUT broadcast (AQE picks sides); the argmax is one "
-            "per-doc window.",
+            "tokens WITHOUT broadcast (AQE picks sides); the test text is "
+            "analyzed by ONE ArrowEvalPython (the index chain); the argmax "
+            "is one per-doc window.",
             bm25_nb_classify(idx, corpus.filter(F.col("turn_idx") == 0)),
         ),
     ]

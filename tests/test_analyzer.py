@@ -253,8 +253,9 @@ def test_shingle_ngram_constraints():
     ],
 )
 def test_entries_expr_matches_python_chain(spark, an_kwargs):
-    """JVM lowering == the python reference for the new stages (same
-    multiset of (term, pos) entries; order may differ across stages)."""
+    """The column form of the chain (analyze_column, run on the executors
+    — the path suggest/classify/monitor take) == analyze_text on the
+    driver, null and empty text included."""
     from pyspark.sql import functions as F
 
     from lucene_spark.analysis import Analyzer
@@ -269,7 +270,7 @@ def test_entries_expr_matches_python_chain(spark, an_kwargs):
         "repeat repeat repeat",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -311,7 +312,7 @@ def test_ascii_folding_entries_expr_parity(spark, an_kwargs):
         None,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -444,7 +445,7 @@ def test_graph_entries_expr_matches_python_chain(spark, an_kwargs):
         None,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -659,7 +660,7 @@ def test_scandinavian_reference_vectors():
 def test_scandinavian_pass_decomposition_randomized():
     """The ordered global-regex lowering (digraph passes then translate) ==
     the reference's single positional scan on lowercase tokens — the
-    equivalence the JVM/DuckDB twins rely on."""
+    equivalence the DuckDB twins rely on."""
     import random
     import re
 
@@ -713,7 +714,7 @@ def test_scandinavian_entries_expr_parity(spark, an_kwargs):
         None,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -766,7 +767,7 @@ def test_edge_ngram_entries_expr_parity(spark, an_kwargs):
     an = Analyzer(**an_kwargs)
     texts = ["the quick brown fox", "a bc def ghij klmno", "", None]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -807,7 +808,7 @@ def test_limit_tokens_entries_expr_parity(spark, an_kwargs):
     an = Analyzer(**an_kwargs)
     texts = ["the quick brown fox jumps over", "a b", "", None]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -869,7 +870,7 @@ def test_common_grams_entries_expr_parity(spark, an_kwargs):
         None,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))

@@ -7,9 +7,10 @@ import re
 import pytest
 
 
-def _simulate(rows, test_keys, k1=1.2, b=0.75):
+def _simulate(rows, test_keys, tokenize, k1=1.2, b=0.75):
     """Independent simulation from raw text: plain BM25 with
-    byte4-quantized dl, per-class top-1 semantics."""
+    byte4-quantized dl, per-class top-1 semantics; ``tokenize`` maps a
+    text to its index terms."""
     from lucene_spark.util.smallfloat import NUM_FREE_VALUES
 
     def byte4(dl):
@@ -24,11 +25,9 @@ def _simulate(rows, test_keys, k1=1.2, b=0.75):
         q = enc << shift
         return NUM_FREE_VALUES + q
 
-    from lucene_spark.analysis.tokenizer import tokenize_text
-
     docs = {}
     for r in rows:
-        toks = tokenize_text(r["text"])
+        toks = tokenize(r["text"])
         docs[(r["conv_id"], r["turn_idx"])] = (r["role"], toks)
     n = sum(1 for _, t in docs.values() if t)
     sttf = sum(len(t) for _, t in docs.values())
@@ -72,22 +71,51 @@ def _simulate(rows, test_keys, k1=1.2, b=0.75):
     return out
 
 
-def test_bm25_nb_matches_simulation(spark, tiny_corpus, tiny_index):
+def _check_against_simulation(spark, rows, index, tokenize):
     from lucene_spark.fixtures import transcripts_df
     from lucene_spark.pipeline.classify import bm25_nb_classify
 
-    df = transcripts_df(spark, rows=tiny_corpus)
+    df = transcripts_df(spark, rows=rows)
     test = df.filter("turn_idx = 0")
     got = {
         (r.conv_id, r.turn_idx): (r.assigned, r.log_score)
-        for r in bm25_nb_classify(tiny_index, test).collect()
+        for r in bm25_nb_classify(index, test).collect()
     }
     keys = list(got)
-    exp = _simulate(tiny_corpus, keys)
+    exp = _simulate(rows, keys, tokenize)
     assert set(got) == set(exp)
     for k in keys:
         assert got[k][0] == exp[k][0], k
         assert got[k][1] == pytest.approx(exp[k][1], rel=1e-9), k
+
+
+def test_bm25_nb_matches_simulation(spark, tiny_corpus, tiny_index):
+    from lucene_spark.analysis.tokenizer import tokenize_text
+
+    _check_against_simulation(spark, tiny_corpus, tiny_index, tokenize_text)
+
+
+def test_bm25_nb_matches_simulation_porter(spark, tiny_corpus):
+    """An English (stopwords + Porter) index: the test text runs the same
+    chain, dictionary stem included, so its tokens meet the stemmed
+    postings vocabulary."""
+    from lucene_spark.analysis import Analyzer
+    from lucene_spark.fixtures import transcripts_df
+    from lucene_spark.index import IndexBuilder
+
+    an = Analyzer.english()
+    idx = IndexBuilder(num_segments=4, analyzer=an).build(
+        transcripts_df(spark, rows=tiny_corpus)
+    )
+    try:
+        _check_against_simulation(
+            spark,
+            tiny_corpus,
+            idx,
+            lambda text: [t for t, _ in an.analyze_text(text)],
+        )
+    finally:
+        idx.unpersist_all()
 
 
 def test_knn_fuzzy_classify_vote_math(spark, tiny_index):

@@ -155,6 +155,39 @@ def test_analyzing_suggester_dedups_surface_max_weight(spark):
     ]
 
 
+def test_stemming_analyzer_keys_and_grams_carry_the_stem(spark):
+    """Suggester keys and FreeText grams run the full chain, dictionary
+    stem included, so they meet the stemmed form analyze_query gives the
+    typed text: "running shoes" keys as "run shoe", and "dogs running"
+    counts toward the gram "dog run"."""
+    from lucene_spark.analysis import Analyzer
+    from lucene_spark.search.suggest import (
+        analyzing_lookup,
+        build_analyzing_suggester,
+        build_freetext_model,
+        freetext_lookup,
+    )
+
+    an = Analyzer.english()
+    entries = spark.createDataFrame(
+        [("running shoes", 5), ("running late", 3)],
+        "surface string, weight int",
+    )
+    sugg = build_analyzing_suggester(entries, an)
+    got = analyzing_lookup(sugg, an, "running shoes", 10).collect()
+    assert [(r.surface, r.weight) for r in got] == [("running shoes", 5)]
+    got = analyzing_lookup(sugg, an, "runs", 10).collect()
+    assert [r.surface for r in got] == ["running shoes", "running late"]
+
+    texts = spark.createDataFrame(
+        [("the dogs running home",), ("dogs run fast",)], "text string"
+    )
+    m = build_freetext_model(texts, an, grams=2)
+    assert {(r.gram, r.ord): r.cnt for r in m.collect()}[("dog run", 2)] == 2
+    got = freetext_lookup(m, an, "dogs run", 10, grams=2).collect()
+    assert [(r.surface, r.lastfrag) for r in got][0] == ("dog run", "run")
+
+
 def test_word_breaks_and_combinations(spark, tiny_index):
     """WordBreakSpellChecker subset: splits where both sides are dictionary
     terms (ranked by summed doc freq), combinations where the concatenation

@@ -88,3 +88,11 @@ def test_decompound_index_build(spark):
     # norms = surface counts (2 tokens per doc)
     assert {r.length for r in idx.docs.collect()} <= {2, 3}
     idx.unpersist_all()
+    # the column form (suggesters, classify, the monitor) runs the
+    # session-registered stage on the executors too
+    from pyspark.sql import functions as F
+
+    got = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
+    assert [[(x.term, x.pos) for x in r.e] for r in got] == [
+        an.analyze_text(r[3]) for r in rows
+    ]

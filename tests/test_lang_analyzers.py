@@ -1,6 +1,6 @@
 """Per-language analyzers (fr/de/es): light stemmers vs the reference's own
-test vectors, elision, Latin-1 tokenization, JVM chain parity, and engine ==
-oracle rank+f32-score parity for the presets."""
+test vectors, elision, Latin-1 tokenization, executor-side chain parity,
+and engine == oracle rank+f32-score parity for the presets."""
 
 import numpy as np
 import pytest
@@ -224,9 +224,9 @@ def test_latin1_tokenizer_keeps_accents():
 
 
 def test_latin1_tokens_expr_parity(spark):
+    """The Latin-1 tokenizer through the column form of the chain (run on
+    the executors) == tokenize_text on the driver."""
     from pyspark.sql import functions as F
-
-    from lucene_spark.analysis import tokens_expr
 
     texts = [
         "Requêtes optimisées très vite",
@@ -236,9 +236,10 @@ def test_latin1_tokens_expr_parity(spark):
         None,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(tokens_expr(F.col("text"), latin1=True).alias("t")).collect()
+    col = Analyzer(latin1=True).analyze_column(F.col("text"))
+    rows = df.select(col.alias("e")).collect()
     for t, r in zip(texts, rows):
-        assert list(r.t or []) == tokenize_text(t, latin1=True), t
+        assert [x.term for x in r.e] == tokenize_text(t, latin1=True), t
 
 
 def test_elision_italian():
@@ -262,7 +263,7 @@ def test_preset_roundtrip_and_noop(preset):
     assert Analyzer.from_json(an.to_json()) == an
 
 
-# -- JVM chain parity (stem deferred to dictionary, like porter) -------------
+# -- column form of the chain (executors, full chain incl. stem) -------------
 
 
 @pytest.mark.parametrize(
@@ -278,7 +279,7 @@ def test_preset_roundtrip_and_noop(preset):
         ("finnish", ["nopeat kyselyt tauluista", "yhdessä ja erikseen"]),
         ("hungarian", ["gyors lekérdezések a táblákról", "tükörképe őrült"]),
         # round-5 international wave — fa/el exercise the char_fold
-        # translate (JVM F.translate vs python str.translate)
+        # translate
         ("arabic", ["الكتاب والحسن فاطمة", "ولداً ونلْسون", ""]),
         ("persian", ["این کتابها و دوستان", "كتابۀ زادہ های"]),
         ("czech", ["velcí páni a hrady", "stavení mužů"]),
@@ -294,19 +295,16 @@ def test_preset_roundtrip_and_noop(preset):
          "ar", "fa", "cs", "bg", "el", "hi", "bn", "id", "lv", "no"],
 )
 def test_preset_entries_expr_matches_python_chain(spark, preset, texts):
-    """entries_expr (stem stage deferred) == analyze_text with stemmer
-    stripped — the exact builder contract for dictionary stemmers."""
-    from dataclasses import replace as dc_replace
-
+    """analyze_column (run on the executors, dictionary stem included —
+    what suggest/classify/monitor run) == analyze_text on the driver."""
     from pyspark.sql import functions as F
 
     an = getattr(Analyzer, preset)()
-    nostem = dc_replace(an, stemmer=None)
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(nostem.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
-        want = sorted(nostem.analyze_text(t))
+        want = sorted(an.analyze_text(t))
         assert got == want, (preset, t)
 
 
@@ -605,8 +603,8 @@ def test_cjk_width_fold_halfwidth_kana():
 
 
 def test_cjk_width_fold_jvm_parity(spark):
-    """The chained-replace JVM lowering equals the python twin char-for-
-    char on a mark-dense sample (entries through the full cjk chain)."""
+    """The full cjk chain (width fold + bigrams) through the column form
+    on the executors equals analyze_text on a mark-dense sample."""
     import random
 
     from pyspark.sql import functions as F
@@ -623,7 +621,7 @@ def test_cjk_width_fold_jvm_parity(spark):
     ]
     an = Analyzer.cjk()
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
@@ -650,7 +648,7 @@ def test_cjk_entries_expr_parity(spark):
         None,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))

@@ -118,6 +118,26 @@ def test_monitor_analyzer_chain(spark):
     # "the models were training" -> model@1, train@3 (stop holes kept)
     assert got == {(1, "q_stem"), (1, "q_phrase_hole")}
 
+    # a word_delimiter chain: split parts carry the filter's positions
+    from lucene_spark.analysis.worddelim import DEFAULT_FLAGS
+
+    wd = Analyzer(word_delimiter=DEFAULT_FLAGS)
+    assert wd.analyze_query("Wi-Fi PowerShot500") == [
+        "wi", "fi", "power", "shot", "500",
+    ]
+    wd_docs = spark.createDataFrame(
+        [(1, "the Wi-Fi PowerShot500"), (2, "wifi powershot")],
+        "doc_id long, text string",
+    )
+    mon = Monitor(
+        {"q_part": TermQuery("shot"),
+         "q_phrase": PhraseQuery(("wi", "fi")),
+         "q_whole": TermQuery("powershot")},
+        analyzer=wd,
+    )
+    got = {(r.doc_id, r.query_id) for r in mon.match_batch(wd_docs).collect()}
+    assert got == {(1, "q_part"), (1, "q_phrase"), (2, "q_whole")}
+
 
 def test_scored_percolation_equals_forward_single_doc_search(spark):
     """Monitor(scored=True) == the float32 score a forward IndexSearcher

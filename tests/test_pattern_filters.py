@@ -1,48 +1,34 @@
 """PatternReplaceFilter / ReverseStringFilter / FixedShingleFilter stages
 (pattern/PatternReplaceFilter.java, reverse/ReverseStringFilter.java,
-shingle/FixedShingleFilter.java): python-vs-JVM parity + semantics."""
+shingle/FixedShingleFilter.java) and the pattern tokenizers: semantics
+pinned by hard-coded analyze_text vectors."""
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from lucene_spark.analysis import Analyzer
 
 
-def _jvm(spark, an, text):
-    row = (
-        spark.createDataFrame([(text,)], "text string")
-        .select(an.entries_expr(F.col("text")).alias("e"))
-        .collect()[0]
-        .e
-    )
-    return [(x.term, x.pos) for x in row]
-
-
-def test_pattern_replace_basic(spark):
+def test_pattern_replace_basic():
     an = Analyzer(pattern_replace=(("(ab)+", "x"),))
     got = an.analyze_text("fooabab bar cabd")
     assert got == [("foox", 0), ("bar", 1), ("cxd", 2)]
-    assert _jvm(spark, an, "fooabab bar cabd") == got
 
 
-def test_pattern_replace_backref(spark):
+def test_pattern_replace_backref():
     # collapse doubled letters via a backref — Python \1 syntax, lowered
     # to Java's $1
     an = Analyzer(pattern_replace=((r"([a-z])\1", r"\1"),))
     got = an.analyze_text("aabbcc dd spark")
     assert got == [("abc", 0), ("d", 1), ("spark", 2)]
-    assert _jvm(spark, an, "aabbcc dd spark") == got
 
 
-def test_pattern_replace_before_stop(spark):
+def test_pattern_replace_before_stop():
     # a replacement that produces a stopword: the token drops WITH a hole
     an = Analyzer(
         stopwords=frozenset({"the"}), pattern_replace=(("^spk$", "the"),)
     )
     got = an.analyze_text("spk data")
     assert got == [("data", 1)]
-    assert _jvm(spark, an, "spk data") == got
 
 
 def test_pattern_replace_query_side():
@@ -50,11 +36,10 @@ def test_pattern_replace_query_side():
     assert an.analyze_query("fooabab bar") == ["foox", "bar"]
 
 
-def test_reverse_tokens(spark):
+def test_reverse_tokens():
     an = Analyzer(reverse_tokens=True)
     got = an.analyze_text("Spark data")
     assert got == [("kraps", 0), ("atad", 1)]
-    assert _jvm(spark, an, "Spark data") == got
     assert an.analyze_query("spark") == ["kraps"]
 
 
@@ -87,14 +72,12 @@ def test_reverse_guard():
         Analyzer(reverse_tokens=True, stemmer="s")
 
 
-def test_fixed_shingles(spark):
+def test_fixed_shingles():
     an = Analyzer(shingle_size=2, fixed_shingles=True)
     got = an.analyze_text("a b c")
     assert got == [("a b", 0), ("b c", 1)]
-    assert _jvm(spark, an, "a b c") == got
     # sub-size stream: no output at all (FixedShingleFilter emits nothing)
     assert an.analyze_text("solo") == []
-    assert _jvm(spark, an, "solo") == []
 
 
 def test_fixed_shingles_guards():
@@ -164,7 +147,7 @@ def test_pattern_capture_reference_camelcase_vector():
     assert pairs[0][0] == "letsPartyLIKEits1999_dude"  # original first
 
 
-def test_pattern_capture_full_chain(spark):
+def test_pattern_capture_full_chain():
     an = Analyzer(pattern_capture=(r"(\d+)",))
     got = an.analyze_text("table42 x9 plain")
     assert got == [
@@ -174,10 +157,9 @@ def test_pattern_capture_full_chain(spark):
         ("9", 1),
         ("plain", 2),
     ]
-    assert _jvm(spark, an, "table42 x9 plain") == got
 
 
-def test_pattern_capture_url_groups(spark):
+def test_pattern_capture_url_groups():
     # the class javadoc example: nested groups emit both the URL and host
     an = Analyzer(
         urls_emails=True,
@@ -191,17 +173,15 @@ def test_pattern_capture_url_groups(spark):
         ("http://www.foo.com", 1),
         ("www.foo.com", 1),
     ]
-    assert _jvm(spark, an, text) == got
 
 
-def test_pattern_capture_stop_after_expand(spark):
+def test_pattern_capture_stop_after_expand():
     # captures that are stopwords drop; originals too
     an = Analyzer(
         stopwords=frozenset({"the"}), pattern_capture=("x(the)y",)
     )
     got = an.analyze_text("xthey data")
     assert got == [("xthey", 0), ("data", 1)]
-    assert _jvm(spark, an, "xthey data") == got
 
 
 def test_pattern_capture_guards():
@@ -215,29 +195,26 @@ def test_pattern_capture_guards():
     assert Analyzer.from_json(an.to_json()) == an
 
 
-def test_pattern_tokenizer_match_mode(spark):
+def test_pattern_tokenizer_match_mode():
     an = Analyzer(token_match_pattern="[a-z]+")
     got = an.analyze_text("Spark 42 data3x the")
     assert got == [("spark", 0), ("data", 1), ("x", 2), ("the", 3)]
-    assert _jvm(spark, an, "Spark 42 data3x the") == got
     assert an.analyze_query("42 spark") == ["spark"]
 
 
-def test_pattern_tokenizer_split_mode(spark):
+def test_pattern_tokenizer_split_mode():
     an = Analyzer(token_split_pattern="[^a-z0-9.]+")
     text = "Spark, 3.14! data..x"
     got = an.analyze_text(text)
     assert got == [("spark", 0), ("3.14", 1), ("data..x", 2)]
-    assert _jvm(spark, an, text) == got
 
 
-def test_pattern_tokenizer_composes_with_stop(spark):
+def test_pattern_tokenizer_composes_with_stop():
     an = Analyzer(
         token_match_pattern="[a-z]+", stopwords=frozenset({"the"})
     )
     got = an.analyze_text("the Spark the data")
     assert got == [("spark", 1), ("data", 3)]
-    assert _jvm(spark, an, "the Spark the data") == got
 
 
 def test_pattern_tokenizer_guards():
@@ -252,10 +229,11 @@ def test_pattern_tokenizer_guards():
 
 
 def test_randomized_new_stage_parity(spark):
-    """Randomized python-vs-JVM parity for the wave-6 stages: random
+    """Randomized executor-vs-driver parity for the wave-6 stages: random
     texts through random pattern_replace / pattern_capture /
-    reverse_tokens / fixed_shingles / custom-tokenizer configs — the two
-    lowerings must emit identical (term, pos) sequences."""
+    reverse_tokens / fixed_shingles / custom-tokenizer configs —
+    analyze_column on the executors must emit analyze_text's (term, pos)
+    sequences."""
     import random
 
     from pyspark.sql import functions as F
@@ -282,13 +260,12 @@ def test_randomized_new_stage_parity(spark):
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     for an in configs:
-        jvm_rows = (
-            df.select(an.entries_expr(F.col("text")).alias("e")).collect()
-        )
-        for text, row in zip(texts, jvm_rows):
-            py = an.analyze_text(text)
-            jv = [(x.term, x.pos) for x in row.e]
-            assert py == jv, (an, text)
+        rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
+        for text, row in zip(texts, rows):
+            assert [(x.term, x.pos) for x in row.e] == an.analyze_text(text), (
+                an,
+                text,
+            )
 
 
 def test_named_tokenizers_as_pattern_instances(spark):
@@ -303,17 +280,14 @@ def test_named_tokenizers_as_pattern_instances(spark):
     """
     kw = Analyzer(token_match_pattern="(?s).+")
     assert kw.analyze_text("Hello,  World\nx") == [("hello,  world\nx", 0)]
-    assert _jvm(spark, kw, "Hello,  World\nx") == [("hello,  world\nx", 0)]
 
     letter = Analyzer(token_match_pattern="[a-z]+")
     got_l = letter.analyze_text("don't x2y")
     assert got_l == [("don", 0), ("t", 1), ("x", 2), ("y", 3)]
-    assert _jvm(spark, letter, "don't x2y") == got_l
 
     ws = Analyzer(token_split_pattern=r"\s+")
     got = ws.analyze_text("foo   bar-baz\tqux")
     assert got == [("foo", 0), ("bar-baz", 1), ("qux", 2)]
-    assert _jvm(spark, ws, "foo   bar-baz\tqux") == got
 
 
 def test_delimited_boost_query_builder(spark, tiny_index):
@@ -349,23 +323,20 @@ def test_delimited_boost_query_builder(spark, tiny_index):
     assert isinstance(one, BoostQuery) and one.boost == 3.0
 
 
-def test_review_fixes_regressions(spark):
+def test_review_fixes_regressions():
     """Round-5 review fixes: grouped custom-token patterns rejected;
-    '$'-bearing replacements survive the JVM lowering; phrase snippets
-    anchor on token boundaries."""
+    '$'-bearing replacements stay literal."""
     import pytest as _pt
 
-    # capture groups in custom token patterns diverge python<->JVM
+    # capture groups in custom token patterns diverge from the SQL twins
     with _pt.raises(ValueError, match="capture"):
         Analyzer(token_match_pattern="(ab)+")
     with _pt.raises(ValueError, match="capture"):
         Analyzer(token_split_pattern="(,)")
-    # literal '$' in a replacement: Java regexp_replace reads '$' as a
-    # group sigil unless escaped — both paths must agree
+    # literal '$' in a replacement is not a group sigil
     an = Analyzer(pattern_replace=(("usd", "$"), (r"(\d)x", r"\1y")))
     got = an.analyze_text("usd42 3x1")
     assert got == [("$42", 0), ("3y1", 1)]
-    assert _jvm(spark, an, "usd42 3x1") == got
 
 
 def test_phrase_snippet_boundaries(spark):

@@ -256,8 +256,6 @@ def test_payload_builder_guards(spark):
     with pytest.raises(ValueError):
         IndexBuilder(payload_delimiter="|", analyzer=Analyzer(stemmer="porter"))
     with pytest.raises(ValueError):
-        IndexBuilder(payload_delimiter="|", invert="shuffle")
-    with pytest.raises(ValueError):
         IndexBuilder(payload_delimiter="|", payload_encoder="identity")
 
 

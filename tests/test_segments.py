@@ -69,36 +69,45 @@ def test_chunk_doc_freqs_sum_to_term_stats(tiny_index, packed):
     assert bad == 0
 
 
-def test_mapside_equals_shuffle_invert(spark, tiny_corpus):
-    """All three invert strategies must produce identical postings (the
-    per-doc in-memory inversion is Lucene's own IndexingChain design; the
-    arrow path must match the pure-JVM expression chain byte-for-byte)."""
-    from lucene_spark.fixtures import transcripts_df
-    from lucene_spark.index import IndexBuilder
-
-    df = transcripts_df(spark, rows=tiny_corpus)
-    a = IndexBuilder(num_segments=4, invert="mapside").build(df)
-    b = IndexBuilder(num_segments=4, invert="shuffle").build(df)
-    c = IndexBuilder(num_segments=4, invert="arrow").build(df)
-    cols = ["term", "doc_id", "freq", "positions", "norm"]
-    for x, y in ((a, b), (a, c)):
-        assert x.postings.select(cols).exceptAll(y.postings.select(cols)).count() == 0
-        assert y.postings.select(cols).exceptAll(x.postings.select(cols)).count() == 0
-        assert x.stats == y.stats
-
-
-def test_arrow_invert_matches_mapside_with_analyzer(spark, tiny_corpus):
-    """The Arrow tokenize+invert pass must agree with the JVM expression
-    chain under a full analysis chain (stop holes + Porter deferral)."""
+@pytest.mark.parametrize(
+    "analyzer",
+    [None, "stop_porter"],
+    ids=["plain", "stop_porter"],
+)
+def test_arrow_build_matches_oracle(spark, tiny_corpus, analyzer):
+    """The Arrow tokenize+invert build == the python oracle index, row for
+    row: (term, doc_id, freq, positions, norm) and the global stats — with
+    dense positions (no analyzer) and under stop holes + the deferred
+    Porter dictionary stem."""
     from lucene_spark.analysis import Analyzer
     from lucene_spark.fixtures import transcripts_df
     from lucene_spark.index import IndexBuilder
+    from lucene_spark.oracle import OracleIndex
 
-    df = transcripts_df(spark, rows=tiny_corpus)
-    an = Analyzer(stopwords=("the", "a", "to"), stemmer="porter")
-    a = IndexBuilder(num_segments=4, invert="mapside", analyzer=an).build(df)
-    c = IndexBuilder(num_segments=4, invert="arrow", analyzer=an).build(df)
-    cols = ["term", "doc_id", "freq", "positions", "norm"]
-    assert a.postings.select(cols).exceptAll(c.postings.select(cols)).count() == 0
-    assert c.postings.select(cols).exceptAll(a.postings.select(cols)).count() == 0
-    assert a.stats == c.stats
+    an = (
+        Analyzer(stopwords=frozenset({"the", "a", "to"}), stemmer="porter")
+        if analyzer
+        else None
+    )
+    idx = IndexBuilder(num_segments=4, analyzer=an).build(
+        transcripts_df(spark, rows=tiny_corpus)
+    )
+    orc = OracleIndex.build(tiny_corpus, analyzer=an)
+    got = sorted(
+        (r.term, r.doc_id, r.freq, list(r.positions), r.norm)
+        for r in idx.postings.select(
+            "term", "doc_id", "freq", "positions", "norm"
+        ).collect()
+    )
+    want = sorted(
+        (t, d, f, orc.positions[t][d], orc.docs[d].norm)
+        for t, per_doc in orc.postings.items()
+        for d, f in per_doc.items()
+    )
+    assert got == want
+    assert idx.stats == {
+        "max_doc": len(orc.docs),
+        "doc_count": orc.doc_count,
+        "sum_total_term_freq": orc.sum_total_term_freq,
+    }
+    idx.unpersist_all()

@@ -117,8 +117,6 @@ def test_custom_tf_guards(spark):
         IndexBuilder(term_freq_delimiter="|", payload_delimiter="|")
     with pytest.raises(ValueError):
         IndexBuilder(term_freq_delimiter="|", analyzer=Analyzer(stemmer="s"))
-    with pytest.raises(ValueError):
-        IndexBuilder(term_freq_delimiter="|", invert="mapside")
     # malformed frequency raises (ArrayUtil.parseInt semantics)
     with pytest.raises(Exception):
         _tf_index(spark, [("c0", 0, "a|x")]).postings.collect()

@@ -2,7 +2,7 @@
 
 import pytest
 
-from lucene_spark.analysis import MAX_TOKEN_LENGTH, tokenize_text, tokens_expr
+from lucene_spark.analysis import MAX_TOKEN_LENGTH, Analyzer, tokenize_text
 
 
 CASES = [
@@ -38,6 +38,13 @@ def test_long_token_chop():
     assert tokenize_text("z" * 256) == ["z" * 255, "z"]
 
 
+def _spark_tokens(col):
+    """The executors' tokenize: the column form of the plain chain."""
+    from pyspark.sql import functions as F
+
+    return F.transform(Analyzer().analyze_column(col), lambda e: e["term"])
+
+
 def test_spark_parity(spark):
     from pyspark.sql import functions as F
 
@@ -48,7 +55,7 @@ def test_spark_parity(spark):
         "a" * 255 + " " + "b" * 256,
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = df.select(tokens_expr(F.col("text")).alias("toks")).collect()
+    got = df.select(_spark_tokens(F.col("text")).alias("toks")).collect()
     for t, row in zip(texts, got):
         assert row.toks == tokenize_text(t), f"mismatch for {t!r}"
 
@@ -65,7 +72,7 @@ def test_spark_null_and_random_parity(spark):
         for _ in range(300)
     ]
     df = spark.createDataFrame([(t,) for t in texts] + [(None,)], "text string")
-    got = df.select("text", tokens_expr(F.col("text")).alias("toks")).collect()
+    got = df.select("text", _spark_tokens(F.col("text")).alias("toks")).collect()
     for row in got:
         assert row.toks == tokenize_text(row.text), f"mismatch for {row.text!r}"
 
@@ -123,7 +130,7 @@ def test_uax29_url_email_entries_expr_parity(spark):
             None,
         ]
         df = spark.createDataFrame([(t,) for t in texts], "text string")
-        rows = df.select(an.entries_expr(F.col("text")).alias("e")).collect()
+        rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
         for t, r in zip(texts, rows):
             got = sorted((x["term"], x["pos"]) for x in (r.e or []))
             want = sorted(an.analyze_text(t))

@@ -1,7 +1,7 @@
 """Round-5 wave-3 analyzers (the Snowball-stemmed chains, analysis/wave3.py
 + analysis/snowball/): full-preset parity against the reference's OWN
-Test*Analyzer.java assertions, serialization roundtrips, JVM chain parity
-(including the new pre_sub lowering), and engine == oracle search parity.
+Test*Analyzer.java assertions, serialization roundtrips, executor-side
+chain parity, and engine == oracle search parity.
 
 The stemmers themselves are separately replayed against 503k vectors from
 the compiled reference Snowball programs in tests/test_snowball.py; this
@@ -129,7 +129,7 @@ def test_english_snowball_variant():
     ]
 
 
-# -- JVM chain parity (stem deferred to dictionary stage) ---------------------
+# -- column form of the chain (executors, full chain incl. stem) -------------
 
 _PARITY_TEXTS = {
     "danish": ["undersøgelse på kvinderne", "де er store", ""],
@@ -150,21 +150,19 @@ _PARITY_TEXTS = {
 
 @pytest.mark.parametrize("preset", WAVE3, ids=_IDS)
 def test_preset_entries_expr_matches_python_chain(spark, preset):
-    """entries_expr (stem stage deferred) == analyze_text with stemmer
-    stripped — the builder contract; exercises the pre_sub JVM lowering
-    (tr apostrophe, ga eclipsis) and the char_fold digit rows."""
-    from dataclasses import replace as dc_replace
-
+    """analyze_column (run on the executors, Snowball stem included —
+    what suggest/classify/monitor run) == analyze_text on the driver;
+    covers pre_sub (tr apostrophe, ga eclipsis) and the char_fold digit
+    rows."""
     from pyspark.sql import functions as F
 
     an = getattr(Analyzer, preset)()
-    nostem = dc_replace(an, stemmer=None)
     texts = _PARITY_TEXTS[preset]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(nostem.entries_expr(F.col("text")).alias("e")).collect()
+    rows = df.select(an.analyze_column(F.col("text")).alias("e")).collect()
     for t, r in zip(texts, rows):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
-        want = sorted(nostem.analyze_text(t))
+        want = sorted(an.analyze_text(t))
         assert got == want, (preset, t)
 
 

@@ -355,13 +355,30 @@ def test_analyzer_integration():
     assert an2.analyze_query("Wi-Fi sharing") == ["wi", "share"]
     # serialization round-trip (commit.json)
     assert Analyzer.from_json(an2.to_json()) == an2
-    # the HOF expression chain is explicitly not available
     import pytest as _pytest
 
-    with _pytest.raises(NotImplementedError):
-        an.entries_expr(None)
     with _pytest.raises(ValueError):
         Analyzer(word_delimiter=DEFAULT_FLAGS, shingle_size=2)
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        dict(pattern_replace=(("foo", "bar"),)),
+        dict(limit_tokens=1),
+        dict(urls_emails=True),
+    ],
+    ids=["pattern_replace", "limit_tokens", "urls_emails"],
+)
+def test_analyzer_rejects_stages_wdgf_skips(stage):
+    """The WDGF chain runs its own whitespace tokenizer, so the standard
+    tokenizer's options and the token rewriters after it would be dropped
+    without a word (e.g. limit_tokens=1 still emitted every part of
+    "foo-baz qux"): the analyzer refuses the combination instead."""
+    from lucene_spark.analysis import Analyzer
+
+    with pytest.raises(ValueError, match="word_delimiter"):
+        Analyzer(word_delimiter=DEFAULT_FLAGS, **stage)
 
 
 def test_index_and_phrase_across_parts(spark):
