@@ -47,7 +47,7 @@ function.  The DuckDB oracle twins lower the chain to SQL independently.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, fields
 
 from lucene_spark.analysis.lang import (
     CJK_STOP_WORDS,
@@ -408,6 +408,83 @@ def _check_replacement(rep: str) -> None:
         i += 1
 
 
+def _to_plain(v):
+    if isinstance(v, frozenset):
+        return sorted(v)
+    if isinstance(v, tuple):
+        return [_to_plain(x) for x in v]
+    return v
+
+
+def _from_plain(v):
+    return tuple(map(_from_plain, v)) if isinstance(v, list) else v
+
+
+# Stage composition, checked in one place (Analyzer.__post_init__): a
+# stage is "on" when its field differs from the default.  Each entry below
+# names a restricted stage and the stages it refuses; a pair not listed
+# either way composes.  An unsupported pair raises — the chain never drops
+# a stage silently.
+_REFUSES = {
+    # custom token patterns replace the tokenizer: the alphabet and
+    # tokenizer specials have nothing to act on
+    "token_match_pattern": (
+        "token_split_pattern", "latin1", "extra_letters", "cjk_bigrams",
+        "urls_emails", "word_delimiter",
+    ),
+    "token_split_pattern": (
+        "latin1", "extra_letters", "cjk_bigrams", "urls_emails",
+        "word_delimiter",
+    ),
+    # WDGF brings its own whitespace tokenizer: the standard tokenizer's
+    # options and the raw-stream rewriters after it would be skipped;
+    # stopwords/stemmer/synonyms compose, like the reference chains that
+    # follow WDGF with LowerCase/Stop/Stem
+    "word_delimiter": (
+        "latin1", "extra_letters", "urls_emails", "limit_tokens",
+        "cjk_bigrams", "elision", "possessive", "scandinavian",
+        "pattern_replace", "graph_synonyms", "shingle_size", "ngram",
+        "common_grams", "pattern_capture",
+    ),
+    # bigrams rewrite the raw stream; the stem/synonym/shingle/gram stages
+    # assume word tokens
+    "cjk_bigrams": (
+        "stemmer", "synonyms", "graph_synonyms", "shingle_size", "ngram",
+        "scandinavian", "common_grams",
+    ),
+    # shingles and common grams read the raw stream: a stem/synonym/gram
+    # stage on the unigram side would make the two vocabularies diverge,
+    # and a position-shifting graph stage would desynchronize them
+    "shingle_size": ("stemmer", "synonyms", "graph_synonyms", "ngram"),
+    "common_grams": (
+        "stemmer", "synonyms", "graph_synonyms", "shingle_size", "ngram",
+        "edge_ngram",
+    ),
+    # FixedShingleFilter drops the unigram stream, so every unigram-side
+    # stage would have nothing to act on
+    "fixed_shingles": (
+        "stopwords", "stemmer", "synonyms", "length_range", "keep_words",
+        "truncate", "edge_ngram", "stem_exclusions",
+    ),
+    "graph_synonyms": ("ngram",),
+    "ngram": ("stemmer", "synonyms", "edge_ngram"),
+    "edge_ngram": ("stemmer", "synonyms"),
+    # a stem of a reversed token is meaningless; grams/shingles of it too
+    "reverse_tokens": (
+        "stemmer", "synonyms", "graph_synonyms", "shingle_size", "ngram",
+        "edge_ngram", "common_grams",
+    ),
+    "pattern_capture": (
+        "stemmer", "synonyms", "graph_synonyms", "shingle_size", "ngram",
+        "edge_ngram", "reverse_tokens",
+    ),
+}
+_REQUIRES = {
+    "fixed_shingles": ("shingle_size",),
+    "wd_prot_words": ("word_delimiter",),
+}
+
+
 @dataclass(frozen=True)
 class Analyzer:
     """Immutable analyzer spec shared by engine, oracle, and SQL twins.
@@ -423,6 +500,17 @@ class Analyzer:
     slot) at the first word's position; stop/stem apply to unigrams only.
     ngram: (min, max) character n-grams REPLACING each surviving token at
     its position (NGramTokenFilter.java, preserveOriginal=false).
+
+    Each stage is one field below; a field left at its default is off.
+    Which stages compose is decided only by the module-level ``_REFUSES``
+    table and the ``_REQUIRES`` list, checked by one loop in
+    ``__post_init__``: an unsupported pair raises ``ValueError`` naming
+    both stages instead of silently dropping one.  ``is_noop``,
+    ``to_json`` and ``from_json`` derive from the field list, and
+    ``analyze_text`` / ``analyze_query_positions`` share one chain
+    (``_token_stream`` + ``_token_filters``), so adding a stage means
+    one field declaration, its step in the chain, and a table entry if
+    it is restricted.
     """
 
     stopwords: frozenset = frozenset()
@@ -498,7 +586,7 @@ class Analyzer:
     # (FieldInvertState.length counts what the filter emits).
     word_delimiter: int = 0
     # WDGF protected words (pass through unsplit), matched case-sensitively
-    # against the raw whitespace tokens
+    # against the raw whitespace tokens; requires word_delimiter
     wd_prot_words: tuple = ()
     # SetKeywordMarkerFilter (miscellaneous/SetKeywordMarkerFilter.java:28,
     # KeywordMarkerFilter.java:38): surface forms the stem stage passes
@@ -561,13 +649,13 @@ class Analyzer:
     # every surviving token — the reversed-field layout that turns a
     # leading wildcard into a prefix seek (the filter's documented use).
     # Applied after the hole-preserving drops and truncate; composes with
-    # the drop/rewrite stages only (a stem of a reversed token is
-    # meaningless — guarded below).
+    # the drop/rewrite stages only (_REFUSES).  Stem exclusions do not
+    # protect a token from it (ReverseStringFilter ignores KeywordAttribute).
     reverse_tokens: bool = False
     # FixedShingleFilter (shingle/FixedShingleFilter.java:35 — a
     # ShingleFilter with outputUnigrams=false): ONLY the size-n word
-    # shingles are emitted; requires shingle_size, composes with nothing
-    # else (the unigram-side filters have no stream to act on).
+    # shingles are emitted; requires shingle_size and refuses the
+    # unigram-side stages, which have no stream to act on (_REFUSES).
     fixed_shingles: bool = False
     # PatternCaptureGroupTokenFilter (pattern/PatternCaptureGroupTokenFilter.
     # java:56) with preserveOriginal=true: every capture group of every
@@ -594,13 +682,24 @@ class Analyzer:
     token_split_pattern: str | None = None
 
     def __post_init__(self):
-        if self.token_match_pattern and self.token_split_pattern:
-            raise ValueError(
-                "token_match_pattern and token_split_pattern are exclusive"
-            )
-        if self.token_match_pattern or self.token_split_pattern:
-            pat = self.token_match_pattern or self.token_split_pattern
-            if _re.compile(pat).groups:
+        active = [
+            f.name for f in fields(self) if getattr(self, f.name) != f.default
+        ]
+        errors = [
+            f"{stage} requires {other}"
+            for stage in active
+            for other in _REQUIRES.get(stage, ())
+            if other not in active
+        ] + [
+            f"{stage} does not compose with {other}"
+            for stage in active
+            for other in _REFUSES.get(stage, ())
+            if other in active
+        ]
+        if errors:
+            raise ValueError("; ".join(errors))
+        for pat in (self.token_match_pattern, self.token_split_pattern):
+            if pat and _re.compile(pat).groups:
                 # re.findall/re.split return group captures, while SQL
                 # regexp_extract_all/split match group 0 / drop
                 # separators — a grouped pattern silently diverges between
@@ -610,64 +709,14 @@ class Analyzer:
                     "custom token patterns must not contain capture "
                     "groups (use (?:...))"
                 )
-            if (
-                self.latin1
-                or self.extra_letters
-                or self.cjk_bigrams
-                or self.urls_emails
-                or self.word_delimiter
-            ):
-                raise ValueError(
-                    "custom token patterns replace the tokenizer; alphabet/"
-                    "tokenizer specials do not compose"
-                )
-        if self.pattern_capture:
-            for pat in self.pattern_capture:
-                if _re.compile(pat).groups < 1:
-                    raise ValueError(
-                        f"pattern_capture pattern has no groups: {pat!r}"
-                    )
-            if (
-                self.stemmer is not None
-                or self.synonyms
-                or self.graph_synonyms
-                or self.shingle_size
-                or self.ngram
-                or self.edge_ngram
-                or self.reverse_tokens
-                or self.word_delimiter
-            ):
-                raise ValueError(
-                    "pattern_capture composes with stopwords/length/keep "
-                    "stages only"
-                )
-        if self.pattern_replace:
-            for pat, rep in self.pattern_replace:
-                _re.compile(pat)  # raise early on a bad pattern
-                _check_replacement(rep)
-        if self.pre_sub:
-            for pat, rep in self.pre_sub:
-                _check_replacement(rep)
-        if self.reverse_tokens and (
-            self.stemmer is not None
-            or self.synonyms
-            or self.graph_synonyms
-            or self.shingle_size
-            or self.ngram
-            or self.edge_ngram
-            or self.common_grams
-        ):
-            raise ValueError(
-                "reverse_tokens composes with the drop/rewrite stages only"
-            )
-        if self.fixed_shingles:
-            if not self.shingle_size:
-                raise ValueError("fixed_shingles requires shingle_size")
-            if self.stopwords or self.stemmer or self.synonyms:
-                raise ValueError(
-                    "fixed_shingles drops the unigram stream; unigram-side "
-                    "stages do not compose"
-                )
+        for pat in self.pattern_capture:
+            if _re.compile(pat).groups < 1:
+                raise ValueError(f"pattern_capture pattern has no groups: {pat!r}")
+        for pat, rep in self.pattern_replace:
+            _re.compile(pat)  # raise early on a bad pattern
+            _check_replacement(rep)
+        for pat, rep in self.pre_sub:
+            _check_replacement(rep)
         if self.word_delimiter:
             from lucene_spark.analysis.worddelim import _ALL_FLAGS
 
@@ -675,42 +724,12 @@ class Analyzer:
                 raise ValueError(
                     f"unknown word_delimiter flags: {self.word_delimiter}"
                 )
-            if (
-                self.graph_synonyms
-                or self.shingle_size
-                or self.ngram
-                or self.cjk_bigrams
-                or self.elision
-                or self.possessive
-                or self.pattern_replace
-                or self.limit_tokens
-                or self.urls_emails
-            ):
-                # WDGF replaces the tokenizer stage; the raw-stream
-                # rewriters and tokenizer options assume the standard
-                # tokenizer, and analyze_text's WDGF branch skips them —
-                # documented orthogonal-stages subset (stopwords/stemmer/
-                # synonyms compose, like the reference chains that follow
-                # WDGF with LowerCase/Stop/Stem)
-                raise ValueError(
-                    "word_delimiter composes with stopwords/stemmer/"
-                    "synonyms only"
-                )
         if self.stemmer not in (None, "s", *DICT_STEMMERS):
             raise ValueError(f"unknown stemmer {self.stemmer!r}")
         if self.elision not in (None, *ELISION_PATTERNS):
             raise ValueError(f"unknown elision language {self.elision!r}")
-        if self.cjk_bigrams and (
-            self.stemmer is not None
-            or self.synonyms
-            or self.graph_synonyms
-            or self.shingle_size
-            or self.ngram
-        ):
-            # bigrams rewrite the raw stream; stem/synonym/shingle/ngram
-            # stages assume word tokens — documented orthogonal subset
-            raise ValueError("cjk_bigrams composes only with stopwords")
         if self.stemmer in DICT_STEMMERS and self.synonyms:
+            # a composition rule on the stemmer's VALUE, not its presence:
             # dictionary stemmers run on the term dictionary AFTER
             # inversion; a synonym stage ordered after them would need a
             # second dictionary pass — out of scope (use stemmer='s' with
@@ -718,68 +737,30 @@ class Analyzer:
             raise ValueError(
                 f"synonyms are not supported with stemmer={self.stemmer!r}"
             )
-        if self.graph_synonyms:
-            for rule in self.graph_synonyms:
-                inp, out = rule
-                if not str(inp).split() or not str(out).split():
-                    raise ValueError(f"empty side in graph synonym rule {rule!r}")
-            if self.shingle_size or self.ngram:
-                # shingles/ngrams read the raw stream; a position-shifting
-                # graph stage would desynchronize them
-                raise ValueError(
-                    "graph_synonyms compose with stopwords/stemmer only"
-                )
-        if self.shingle_size:
-            if self.shingle_size < 2:
-                raise ValueError("shingle_size must be >= 2 (or 0 to disable)")
-            if self.stemmer is not None or self.synonyms or self.ngram:
-                # shingles read the raw stream; a stem/synonym/ngram stage
-                # would make unigram and shingle vocabularies diverge —
-                # documented orthogonal-stages subset
-                raise ValueError(
-                    "shingle_size composes only with stopwords (unigram side)"
-                )
-        if self.ngram is not None:
-            mn, mx = self.ngram
-            if not (1 <= mn <= mx):
-                raise ValueError(f"bad ngram range {self.ngram!r}")
-            if self.stemmer is not None or self.synonyms:
-                raise ValueError("ngram composes only with stopwords")
-        if self.edge_ngram is not None:
-            mn, mx = self.edge_ngram
-            if not (1 <= mn <= mx):
+        for rule in self.graph_synonyms:
+            inp, out = rule
+            if not str(inp).split() or not str(out).split():
+                raise ValueError(f"empty side in graph synonym rule {rule!r}")
+        if self.shingle_size and self.shingle_size < 2:
+            raise ValueError("shingle_size must be >= 2 (or 0 to disable)")
+        for name in ("ngram", "edge_ngram"):
+            rng = getattr(self, name)
+            if rng is not None and not (1 <= rng[0] <= rng[1]):
                 # EdgeNGramTokenFilter.java:58-63 rejects minGram < 1 and
                 # minGram > maxGram
-                raise ValueError(f"bad edge_ngram range {self.edge_ngram!r}")
-            if self.stemmer is not None or self.synonyms or self.ngram is not None:
-                raise ValueError("edge_ngram composes only with stopwords")
+                raise ValueError(f"bad {name} range {rng!r}")
         if self.length_range is not None:
             mn, mx = self.length_range
             if not (0 <= mn <= mx):
                 # LengthFilter.java:44 rejects negative min / max < min
                 raise ValueError(f"bad length_range {self.length_range!r}")
-        if self.scandinavian not in (None, "normalize", "fold"):
+        if self.scandinavian not in (None, *_SCANDINAVIAN_PY):
             raise ValueError(
                 f"scandinavian must be normalize|fold, got {self.scandinavian!r}"
-            )
-        if self.scandinavian and (self.word_delimiter or self.cjk_bigrams):
-            raise ValueError(
-                "scandinavian composes with the standard tokenizer chain only"
             )
         if self.truncate < 0:
             # TruncateTokenFilter.java:38 requires length >= 1
             raise ValueError(f"truncate must be >= 0, got {self.truncate}")
-        if self.common_grams and (
-            self.stemmer is not None
-            or self.synonyms
-            or self.graph_synonyms
-            or self.shingle_size
-            or self.ngram is not None
-            or self.edge_ngram is not None
-            or self.cjk_bigrams
-            or self.word_delimiter
-        ):
-            raise ValueError("common_grams composes only with stopwords")
         if self.limit_tokens < 0:
             # LimitTokenCountFilter.java:52: maxTokenCount must be > 0
             raise ValueError(
@@ -1311,125 +1292,33 @@ class Analyzer:
         return [rules[j] for j in order]
 
     def is_noop(self) -> bool:
-        return (
-            not self.stopwords
-            and self.stemmer is None
-            and not self.synonyms
-            and not self.graph_synonyms
-            and not self.shingle_size
-            and self.ngram is None
-            and not self.ascii_folding
-            and not self.possessive
-            and not self.elision
-            and not self.latin1
-            and not self.extra_letters
-            and not self.cjk_bigrams
-            and not self.width_fold
-            and not self.char_fold
-            and not self.pre_sub
-            and not self.word_delimiter
-            and not self.stem_exclusions
-            and self.length_range is None
-            and not self.keep_words
-            and not self.truncate
-            and not self.scandinavian
-            and self.edge_ngram is None
-            and not self.urls_emails
-            and not self.limit_tokens
-            and not self.common_grams
-            and not self.pattern_replace
-            and not self.reverse_tokens
-            and not self.fixed_shingles
-            and not self.pattern_capture
-            and self.token_match_pattern is None
-            and self.token_split_pattern is None
-        )
+        return all(getattr(self, f.name) == f.default for f in fields(self))
 
     # -- commit.json round-trip -----------------------------------------
     def to_json(self) -> dict | None:
+        """Every field by name: frozensets as sorted lists, tuples as
+        lists (recursively); ``None`` for the no-op analyzer."""
         if self.is_noop():
             return None
-        return {
-            "stopwords": sorted(self.stopwords),
-            "stemmer": self.stemmer,
-            "synonyms": [list(p) for p in self.synonyms],
-            "graph_synonyms": [list(p) for p in self.graph_synonyms],
-            "shingle_size": self.shingle_size,
-            "ngram": list(self.ngram) if self.ngram else None,
-            "edge_ngram": list(self.edge_ngram) if self.edge_ngram else None,
-            "ascii_folding": self.ascii_folding,
-            "possessive": self.possessive,
-            "elision": self.elision,
-            "latin1": self.latin1,
-            "extra_letters": self.extra_letters,
-            "cjk_bigrams": self.cjk_bigrams,
-            "width_fold": self.width_fold,
-            "char_fold": list(self.char_fold),
-            "pre_sub": [list(p) for p in self.pre_sub],
-            "word_delimiter": self.word_delimiter,
-            "wd_prot_words": list(self.wd_prot_words),
-            "stem_exclusions": sorted(self.stem_exclusions),
-            "length_range": list(self.length_range) if self.length_range else None,
-            "keep_words": sorted(self.keep_words),
-            "truncate": self.truncate,
-            "scandinavian": self.scandinavian,
-            "urls_emails": self.urls_emails,
-            "limit_tokens": self.limit_tokens,
-            "common_grams": sorted(self.common_grams),
-            "pattern_replace": [list(p) for p in self.pattern_replace],
-            "reverse_tokens": self.reverse_tokens,
-            "fixed_shingles": self.fixed_shingles,
-            "pattern_capture": list(self.pattern_capture),
-            "token_match_pattern": self.token_match_pattern,
-            "token_split_pattern": self.token_split_pattern,
-        }
+        return {f.name: _to_plain(getattr(self, f.name)) for f in fields(self)}
 
     @classmethod
     def from_json(cls, d: dict | None) -> "Analyzer | None":
+        """Inverse of :meth:`to_json`, typed by each field's default; a
+        missing key (a commit written before the stage existed) gives
+        the default."""
         if not d:
             return None
-        ng = d.get("ngram")
         return cls(
-            stopwords=frozenset(d.get("stopwords", ())),
-            stemmer=d.get("stemmer"),
-            synonyms=tuple((s, e) for s, e in d.get("synonyms", ())),
-            graph_synonyms=tuple(
-                (s, e) for s, e in d.get("graph_synonyms", ())
-            ),
-            shingle_size=d.get("shingle_size", 0),
-            ngram=tuple(ng) if ng else None,
-            ascii_folding=d.get("ascii_folding", False),
-            possessive=d.get("possessive", False),
-            elision=d.get("elision") or None,
-            latin1=d.get("latin1", False),
-            extra_letters=d.get("extra_letters", ""),
-            cjk_bigrams=d.get("cjk_bigrams", False),
-            width_fold=d.get("width_fold", False),
-            char_fold=tuple(d.get("char_fold", ())),
-            pre_sub=tuple((p, r) for p, r in d.get("pre_sub", ())),
-            word_delimiter=d.get("word_delimiter", 0),
-            wd_prot_words=tuple(d.get("wd_prot_words", ())),
-            stem_exclusions=frozenset(d.get("stem_exclusions", ())),
-            length_range=(
-                tuple(d["length_range"]) if d.get("length_range") else None
-            ),
-            keep_words=frozenset(d.get("keep_words", ())),
-            truncate=d.get("truncate", 0),
-            scandinavian=d.get("scandinavian") or None,
-            edge_ngram=(
-                tuple(d["edge_ngram"]) if d.get("edge_ngram") else None
-            ),
-            urls_emails=d.get("urls_emails", False),
-            limit_tokens=d.get("limit_tokens", 0),
-            common_grams=frozenset(d.get("common_grams", ())),
-            pattern_replace=tuple(
-                (p, r) for p, r in d.get("pattern_replace", ())
-            ),
-            reverse_tokens=d.get("reverse_tokens", False),
-            fixed_shingles=d.get("fixed_shingles", False),
-            pattern_capture=tuple(d.get("pattern_capture", ())),
-            token_match_pattern=d.get("token_match_pattern") or None,
-            token_split_pattern=d.get("token_split_pattern") or None,
+            **{
+                f.name: (
+                    frozenset(d[f.name])
+                    if isinstance(f.default, frozenset)
+                    else _from_plain(d[f.name])
+                )
+                for f in fields(cls)
+                if f.name in d
+            }
         )
 
     # -- python reference (oracle path) ---------------------------------
@@ -1463,93 +1352,16 @@ class Analyzer:
     def analyze_text(self, text: str | None) -> list[tuple[str, int]]:
         """[(term, position)] after the full chain.  Positions carry stop
         holes; synonym emissions share their source's position."""
-        if self.ascii_folding and text is not None:
-            text = ascii_fold(text)
-        if self.width_fold and text is not None:
-            text = cjk_width_fold(text)
-        if self.char_fold and text is not None:
-            text = text.translate(self._char_fold_trans())
-        if self.pre_sub and text is not None:
-            for pat, rep in self.pre_sub:
-                text = _re.sub(pat, rep, text)
-        if self.elision and text is not None:
-            text = elide(text, self.elision)
-        if self.word_delimiter:
-            # whitespace tokenizer (case-preserving) → WDGF → lowercase
-            from lucene_spark.analysis.worddelim import wdg_stream
-
-            raw = (text or "").split()
-            pairs = [
-                (t.lower(), p)
-                for t, p in wdg_stream(
-                    raw, self.word_delimiter, frozenset(self.wd_prot_words)
-                )
-            ]
-            toks = [t for t, _ in pairs]
-        else:
-            toks = self._tokenize_py(text)
-            if self.limit_tokens:
-                toks = toks[: self.limit_tokens]
-            if self.cjk_bigrams:
-                toks = [e for t in toks for e in cjk_bigram_expand(t, _CJK_RUN_RE)]
-            if self.possessive:
-                toks = [t[:-2] if t.endswith("'s") else t for t in toks]
-            if self.scandinavian:
-                fn = _SCANDINAVIAN_PY[self.scandinavian]
-                toks = [fn(t) for t in toks]
-            if self.pattern_replace:
-                for pat, rep in self.pattern_replace:
-                    toks = [_re.sub(pat, rep, t) for t in toks]
-            if self.graph_synonyms:
-                pairs = self._graph_scan(toks)
-            else:
-                pairs = list(zip(toks, range(len(toks))))
-            if self.pattern_capture:
-                pairs = self._capture_expand(pairs)
+        toks, positions = self._token_stream(text)
         if self.fixed_shingles:
-            pairs = []  # outputUnigrams=false: only the shingles below
-        out: list[tuple[str, int]] = []
-        syn = self.syn_map
-        for t, pos in pairs:
-            if t in self.stopwords:
-                continue
-            if self.length_range is not None and not (
-                self.length_range[0] <= len(t) <= self.length_range[1]
-            ):
-                continue
-            if self.keep_words and t not in self.keep_words:
-                continue
-            if self.truncate:
-                t = t[: self.truncate]
-            if self.reverse_tokens:
-                t = t[::-1]
-            if self.ngram is not None:
-                mn, mx = self.ngram
-                for ln in range(mn, mx + 1):
-                    for s in range(len(t) - ln + 1):
-                        out.append((t[s : s + ln], pos))
-                continue
-            if self.edge_ngram is not None:
-                mn, mx = self.edge_ngram
-                for ln in range(mn, min(mx, len(t)) + 1):
-                    out.append((t[:ln], pos))
-                continue
-            if t in self.stem_exclusions:
-                pass
-            elif self.stemmer == "s":
-                t = s_stem(t)
-            elif self.stemmer in DICT_STEMMERS:
-                fn = DICT_STEMMERS[self.stemmer]
-                if getattr(fn, "emits_multiple", False):
-                    # multi-output stemmers (hunspell all_stems): every
-                    # stem at the token's position
-                    for s in dict.fromkeys(fn(t)):
-                        out.append((s, pos))
-                    continue
-                t = fn(t)
-            out.append((t, pos))
-            for extra in syn.get(t, ()):
-                out.append((extra, pos))
+            pairs = ()  # outputUnigrams=false: only the shingles below
+        elif self.graph_synonyms:
+            pairs = self._graph_scan(toks)
+        else:
+            pairs = zip(toks, positions)
+        if self.pattern_capture:
+            pairs = self._capture_expand(pairs)
+        out = self._token_filters(pairs, expand=True)
         if self.shingle_size:
             n = self.shingle_size
             for i in range(len(toks) - n + 1):
@@ -1595,52 +1407,106 @@ class Analyzer:
 
     def analyze_query_positions(self, text: str | None) -> list[tuple[str, int]]:
         """Query-side analysis with hole-carrying positions (for
-        PhraseQuery).  No synonym expansion — the reference expands query
-        synonyms via SynonymQuery, not the index chain; QueryParser does
-        that explicitly."""
-        if self.ascii_folding and text is not None:
-            text = ascii_fold(text)
-        if self.width_fold and text is not None:
-            text = cjk_width_fold(text)
-        if self.char_fold and text is not None:
-            text = text.translate(self._char_fold_trans())
-        if self.pre_sub and text is not None:
+        PhraseQuery): the index chain minus its expansions — no synonym,
+        graph-synonym, shingle, common-gram, n-gram or capture emissions,
+        positions dense over the rewritten stream, and the FIRST stem of
+        a multi-output stemmer.  The reference expands query synonyms via
+        SynonymQuery, not the index chain; QueryParser does that
+        explicitly."""
+        toks, positions = self._token_stream(text)
+        return self._token_filters(zip(toks, positions), expand=False)
+
+    def _token_stream(self, text):
+        """Char filters → tokenizer → raw-stream rewrites, shared by the
+        index and query chains: (tokens, positions), positions dense
+        except under WDGF, which carries the filter's own posInc
+        stream."""
+        if text is not None:
+            if self.ascii_folding:
+                text = ascii_fold(text)
+            if self.width_fold:
+                text = cjk_width_fold(text)
+            if self.char_fold:
+                text = text.translate(self._char_fold_trans())
             for pat, rep in self.pre_sub:
                 text = _re.sub(pat, rep, text)
-        if self.elision and text is not None:
-            text = elide(text, self.elision)
+            if self.elision:
+                text = elide(text, self.elision)
         if self.word_delimiter:
+            # whitespace tokenizer (case-preserving) → WDGF → lowercase
             from lucene_spark.analysis.worddelim import wdg_stream
 
-            raw = (text or "").split()
-            pairs = [
-                (t.lower(), p)
-                for t, p in wdg_stream(
-                    raw, self.word_delimiter, frozenset(self.wd_prot_words)
-                )
-            ]
-            out: list[tuple[str, int]] = []
-            for t, pos in pairs:
-                if not self._keeps_token(t):
-                    continue
-                out.append((self._stem_token(t), pos))
-            return out
+            pairs = wdg_stream(
+                (text or "").split(),
+                self.word_delimiter,
+                frozenset(self.wd_prot_words),
+            )
+            return [t.lower() for t, _ in pairs], [p for _, p in pairs]
         toks = self._tokenize_py(text)
         if self.limit_tokens:
             toks = toks[: self.limit_tokens]
         if self.cjk_bigrams:
             toks = [e for t in toks for e in cjk_bigram_expand(t, _CJK_RUN_RE)]
+        if self.possessive:
+            toks = [t[:-2] if t.endswith("'s") else t for t in toks]
+        if self.scandinavian:
+            fn = _SCANDINAVIAN_PY[self.scandinavian]
+            toks = [fn(t) for t in toks]
+        for pat, rep in self.pattern_replace:
+            toks = [_re.sub(pat, rep, t) for t in toks]
+        return toks, range(len(toks))
+
+    def _token_filters(self, pairs, expand: bool) -> list[tuple[str, int]]:
+        """The per-token stages over (token, position) pairs: drop (stop /
+        length / keep, leaving holes) → truncate → reverse → stem
+        (honouring stem_exclusions — the KeywordAttribute contract every
+        reference stemmer checks; ReverseStringFilter ignores it).  With
+        ``expand`` (index side) n-grams replace the token, a multi-output
+        stemmer emits every stem and synonyms follow the stem; without
+        it (query side) the token is kept whole and the first stem
+        wins."""
         out: list[tuple[str, int]] = []
-        for pos, t in enumerate(toks):
-            if self.possessive and t.endswith("'s"):
-                t = t[:-2]
-            if self.scandinavian:
-                t = _SCANDINAVIAN_PY[self.scandinavian](t)
-            for pat, rep in self.pattern_replace:
-                t = _re.sub(pat, rep, t)
-            if not self._keeps_token(t):
+        syn = self.syn_map if expand else {}
+        stem = s_stem if self.stemmer == "s" else DICT_STEMMERS.get(self.stemmer)
+        multi = getattr(stem, "emits_multiple", False)
+        for t, pos in pairs:
+            if t in self.stopwords:
                 continue
-            out.append((self._stem_token(t), pos))
+            if self.length_range is not None and not (
+                self.length_range[0] <= len(t) <= self.length_range[1]
+            ):
+                continue
+            if self.keep_words and t not in self.keep_words:
+                continue
+            if self.truncate:
+                t = t[: self.truncate]
+            if self.reverse_tokens:
+                t = t[::-1]
+            if expand and self.ngram is not None:
+                mn, mx = self.ngram
+                for ln in range(mn, mx + 1):
+                    for s in range(len(t) - ln + 1):
+                        out.append((t[s : s + ln], pos))
+                continue
+            if expand and self.edge_ngram is not None:
+                mn, mx = self.edge_ngram
+                for ln in range(mn, min(mx, len(t)) + 1):
+                    out.append((t[:ln], pos))
+                continue
+            if stem is not None and t not in self.stem_exclusions:
+                if multi:
+                    # multi-output stemmers (hunspell all_stems): every
+                    # stem at the token's position
+                    stems = list(dict.fromkeys(stem(t)))
+                    if expand:
+                        out.extend((s, pos) for s in stems)
+                        continue
+                    t = stems[0] if stems else t
+                else:
+                    t = stem(t)
+            out.append((t, pos))
+            for extra in syn.get(t, ()):
+                out.append((extra, pos))
         return out
 
     def _tokenize_py(self, text):
@@ -1689,40 +1555,6 @@ class Analyzer:
             for term in dict.fromkeys(emit):
                 out.append((term, pos))
         return out
-
-    def _keeps_token(self, t: str) -> bool:
-        """The hole-preserving drop stages (FilteringTokenFilter family):
-        StopFilter, LengthFilter, KeepWordFilter."""
-        if t in self.stopwords:
-            return False
-        if self.length_range is not None and not (
-            self.length_range[0] <= len(t) <= self.length_range[1]
-        ):
-            return False
-        if self.keep_words and t not in self.keep_words:
-            return False
-        return True
-
-    def _stem_token(self, t: str) -> str:
-        """Truncate + stem (honouring stem_exclusions — the Keyword-
-        Attribute contract every reference stemmer checks).  For
-        multi-output stemmers the FIRST stem is the query-side term
-        (callers needing every stem use analyze_text)."""
-        if self.truncate:
-            t = t[: self.truncate]
-        if t in self.stem_exclusions:
-            return t
-        if self.stemmer == "s":
-            return s_stem(t)
-        if self.stemmer in DICT_STEMMERS:
-            fn = DICT_STEMMERS[self.stemmer]
-            if getattr(fn, "emits_multiple", False):
-                outs = list(dict.fromkeys(fn(t)))
-                return outs[0] if outs else t
-            return fn(t)
-        if self.reverse_tokens:
-            return t[::-1]
-        return t
 
     def analyze_query(self, text: str | None) -> list[str]:
         return [t for t, _ in self.analyze_query_positions(text)]

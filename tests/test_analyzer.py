@@ -59,6 +59,224 @@ def test_porter_plus_synonyms_rejected():
         Analyzer(stemmer="porter", synonyms=(("a", "b"),))
 
 
+# -- unit: stage composition table, serialization, index/query agreement ----
+
+# one sample value per stage field; fixed_shingles and wd_prot_words carry
+# the stage they require
+STAGE_SAMPLES = {
+    "stopwords": dict(stopwords=frozenset({"the", "a"})),
+    "stemmer": dict(stemmer="s"),
+    "synonyms": dict(synonyms=(("fox", "hound"),)),
+    "graph_synonyms": dict(graph_synonyms=(("quick brown", "fast"),)),
+    "shingle_size": dict(shingle_size=2),
+    "ngram": dict(ngram=(2, 3)),
+    "edge_ngram": dict(edge_ngram=(1, 3)),
+    "ascii_folding": dict(ascii_folding=True),
+    "possessive": dict(possessive=True),
+    "elision": dict(elision="fr"),
+    "latin1": dict(latin1=True),
+    "extra_letters": dict(extra_letters="а-яё"),
+    "cjk_bigrams": dict(cjk_bigrams=True),
+    "width_fold": dict(width_fold=True),
+    "char_fold": dict(char_fold=("éÉ", "ee")),
+    "pre_sub": dict(pre_sub=((r"-\s+", ""),)),
+    "word_delimiter": dict(word_delimiter=1 | 2 | 32 | 64 | 128),
+    "wd_prot_words": dict(wd_prot_words=("Wi-Fi",), word_delimiter=1 | 2),
+    "stem_exclusions": dict(stem_exclusions=frozenset({"repeat", "foxes"})),
+    "length_range": dict(length_range=(2, 5)),
+    "keep_words": dict(keep_words=frozenset({"quick", "fox", "repeat"})),
+    "truncate": dict(truncate=4),
+    "common_grams": dict(common_grams=frozenset({"the", "of"})),
+    "limit_tokens": dict(limit_tokens=6),
+    "urls_emails": dict(urls_emails=True),
+    "scandinavian": dict(scandinavian="fold"),
+    "pattern_replace": dict(pattern_replace=(("x", "ks"),)),
+    "reverse_tokens": dict(reverse_tokens=True),
+    "fixed_shingles": dict(fixed_shingles=True, shingle_size=2),
+    "pattern_capture": dict(pattern_capture=(r"([a-z])\d",)),
+    "token_match_pattern": dict(token_match_pattern="[a-z]+"),
+    "token_split_pattern": dict(token_split_pattern="[^a-z0-9]+"),
+}
+
+# stages whose index-side emissions the query chain deliberately skips
+EXPANSION_STAGES = {
+    "synonyms", "graph_synonyms", "shingle_size", "ngram", "edge_ngram",
+    "common_grams", "pattern_capture", "fixed_shingles",
+}
+
+AGREEMENT_TEXTS = [
+    "The quick brown foxes jumped over the lazy dog",
+    "abc xyz repeat repeat",
+    "Spark's data-\n lake of the Wi-Fi PowerShot500 a3",
+    "Café Zürich l'avion ÉTÉ blaabær smörgås",
+    "http://example.com/x mail me@example.org now",
+    "東京都に住む ｳﾞｨｯﾂ ＡＢＣ",
+    "привет мир the",
+    "",
+    None,
+]
+
+
+def _sample_pairs():
+    """Every pair of stage samples, merged — except a stage paired with
+    the stage its sample already carries (the one it requires)."""
+    import itertools
+
+    for a, b in itertools.combinations(STAGE_SAMPLES, 2):
+        sa, sb = STAGE_SAMPLES[a], STAGE_SAMPLES[b]
+        if set(sa) & set(sb):
+            continue
+        yield (a, b), {**sa, **sb}
+
+
+def test_stage_samples_cover_every_field():
+    from dataclasses import fields
+
+    assert list(STAGE_SAMPLES) == [f.name for f in fields(Analyzer)]
+
+
+def test_composition_table_refusals_name_both_stages():
+    """Every pair the table refuses raises with a message naming both
+    stages; every sample pair the table does not refuse constructs."""
+    from lucene_spark.analysis.analyzer import _REFUSES
+
+    refused = {(a, b) for a, others in _REFUSES.items() for b in others}
+    seen = set()
+    for _, kwargs in _sample_pairs():
+        hit = {(a, b) for a, b in refused if a in kwargs and b in kwargs}
+        if not hit:
+            Analyzer(**kwargs)
+            continue
+        with pytest.raises(ValueError) as e:
+            Analyzer(**kwargs)
+        assert set(str(e.value).split("; ")) == {
+            f"{a} does not compose with {b}" for a, b in hit
+        }
+        seen |= hit
+    assert seen == refused
+
+
+def test_composition_table_requirements():
+    from lucene_spark.analysis.analyzer import _REQUIRES
+
+    for stage, needs in _REQUIRES.items():
+        kwargs = {
+            k: v for k, v in STAGE_SAMPLES[stage].items() if k not in needs
+        }
+        for other in needs:
+            with pytest.raises(ValueError, match=f"{stage} requires {other}"):
+                Analyzer(**kwargs)
+        Analyzer(**STAGE_SAMPLES[stage])
+
+
+@pytest.mark.parametrize(
+    "kwargs,message",
+    [
+        (
+            dict(fixed_shingles=True, shingle_size=2, length_range=(2, 6)),
+            "fixed_shingles does not compose with length_range",
+        ),
+        (
+            dict(fixed_shingles=True, shingle_size=2, keep_words=frozenset("a")),
+            "fixed_shingles does not compose with keep_words",
+        ),
+        (
+            dict(fixed_shingles=True, shingle_size=2, truncate=3),
+            "fixed_shingles does not compose with truncate",
+        ),
+        (
+            dict(fixed_shingles=True, shingle_size=2, edge_ngram=(1, 2)),
+            "fixed_shingles does not compose with edge_ngram",
+        ),
+        (
+            dict(fixed_shingles=True, shingle_size=2, stem_exclusions=frozenset("a")),
+            "fixed_shingles does not compose with stem_exclusions",
+        ),
+        (
+            dict(word_delimiter=1, latin1=True),
+            "word_delimiter does not compose with latin1",
+        ),
+        (
+            dict(word_delimiter=1, extra_letters="а-яё"),
+            "word_delimiter does not compose with extra_letters",
+        ),
+        (dict(wd_prot_words=("Wi-Fi",)), "wd_prot_words requires word_delimiter"),
+    ],
+    ids=[
+        "fixed_shingles+length_range", "fixed_shingles+keep_words",
+        "fixed_shingles+truncate", "fixed_shingles+edge_ngram",
+        "fixed_shingles+stem_exclusions", "word_delimiter+latin1",
+        "word_delimiter+extra_letters", "wd_prot_words_alone",
+    ],
+)
+def test_stages_that_would_be_dropped_raise(kwargs, message):
+    """Each of these stages had no effect on the output (fixed shingles
+    drop the unigram stream; WDGF brings its own whitespace tokenizer;
+    protected words only exist inside WDGF), so the analyzer refuses the
+    combination instead of accepting it."""
+    with pytest.raises(ValueError) as e:
+        Analyzer(**kwargs)
+    assert str(e.value) == message
+
+
+def _presets():
+    return [
+        name
+        for name, v in vars(Analyzer).items()
+        if isinstance(v, classmethod) and name != "from_json"
+    ]
+
+
+def test_json_roundtrip_every_preset_and_sample():
+    import json
+
+    presets = _presets()
+    assert len(presets) == 39
+    analyzers = [getattr(Analyzer, p)() for p in presets]
+    analyzers += [Analyzer(**kw) for kw in STAGE_SAMPLES.values()]
+    for _, kwargs in _sample_pairs():
+        try:
+            analyzers.append(Analyzer(**kwargs))
+        except ValueError:
+            pass
+    for an in analyzers:
+        d = an.to_json()
+        assert set(d) == set(STAGE_SAMPLES)
+        # through the JSON text, as commit.json stores it
+        assert Analyzer.from_json(json.loads(json.dumps(d))) == an, d
+    assert Analyzer().to_json() is None and Analyzer.from_json(None) is None
+
+
+def test_json_old_format_loads():
+    """A commit written before most stages existed: missing keys take the
+    field defaults."""
+    an = Analyzer.from_json({"stopwords": ["the", "a"], "stemmer": "porter"})
+    assert an == Analyzer(stopwords=frozenset({"the", "a"}), stemmer="porter")
+
+
+def test_query_chain_agrees_with_index_chain():
+    """Without an expansion stage, query analysis is the index chain:
+    same terms at the same positions, for every sample stage alone and
+    every accepted sample pair."""
+    configs = [((k,), kw) for k, kw in STAGE_SAMPLES.items()]
+    configs += list(_sample_pairs())
+    checked = 0
+    for stages, kwargs in configs:
+        if EXPANSION_STAGES & set(kwargs):
+            continue
+        try:
+            an = Analyzer(**kwargs)
+        except ValueError:
+            continue
+        checked += 1
+        for t in AGREEMENT_TEXTS:
+            assert an.analyze_query_positions(t) == an.analyze_text(t), (
+                stages,
+                t,
+            )
+    assert checked > 200
+
+
 # -- engine vs oracle parity ------------------------------------------------
 
 

@@ -223,7 +223,7 @@ def test_latin1_tokenizer_keeps_accents():
     assert tokenize_text("requêtes") == ["requ", "tes"]
 
 
-def test_latin1_tokens_expr_parity(spark):
+def test_latin1_analyze_column_parity(spark):
     """The Latin-1 tokenizer through the column form of the chain (run on
     the executors) == tokenize_text on the driver."""
     from pyspark.sql import functions as F
@@ -266,34 +266,34 @@ def test_preset_roundtrip_and_noop(preset):
 # -- column form of the chain (executors, full chain incl. stem) -------------
 
 
-@pytest.mark.parametrize(
-    "preset,texts",
-    [
-        ("french", ["les requêtes optimisées de l'été", "qu'une table", ""]),
-        ("german", ["die größten häuser und tabellen", "weißbier"]),
-        ("spanish", ["las consultas rápidas y únicas", "el niño"]),
-        ("italian", ["le tabelle dell'analisi ottimizzate", "un'ora"]),
-        ("portuguese", ["as consultas rápidas e otimizadas", "ações"]),
-        ("russian", ["быстрые запросы к таблицам", "СИСТЕМА и Ёлка", ""]),
-        ("swedish", ["snabba frågor om tabeller", "större hus"]),
-        ("finnish", ["nopeat kyselyt tauluista", "yhdessä ja erikseen"]),
-        ("hungarian", ["gyors lekérdezések a táblákról", "tükörképe őrült"]),
-        # round-5 international wave — fa/el exercise the char_fold
-        # translate
-        ("arabic", ["الكتاب والحسن فاطمة", "ولداً ونلْسون", ""]),
-        ("persian", ["این کتابها و دوستان", "كتابۀ زادہ های"]),
-        ("czech", ["velcí páni a hrady", "stavení mužů"]),
-        ("bulgarian", ["градът и чудесата", "вестникът на краищата"]),
-        ("greek", ["ο άνθρωπος και οι άνθρωποι", "ΜΆΪΟΣ ΰϊ σοφός"]),
-        ("hindi", ["लडके और किताबों में", "अँगरेज़ी"]),
-        ("bengali", ["মেয়েরা এবং বাড়ী", "কলকাতা থেকে"]),
-        ("indonesian", ["bukukah dan kepastian", "memberikan pembunuhan"]),
-        ("latvian", ["tēvi un cilvēki", "lielākais valstis"]),
-        ("norwegian", ["hemmeligheten på bilens", "de fineste kakene"]),
-    ],
-    ids=["fr", "de", "es", "it", "pt", "ru", "sv", "fi", "hu",
-         "ar", "fa", "cs", "bg", "el", "hi", "bn", "id", "lv", "no"],
-)
+_PRESET_TEXTS = [
+    ("french", ["les requêtes optimisées de l'été", "qu'une table", ""]),
+    ("german", ["die größten häuser und tabellen", "weißbier"]),
+    ("spanish", ["las consultas rápidas y únicas", "el niño"]),
+    ("italian", ["le tabelle dell'analisi ottimizzate", "un'ora"]),
+    ("portuguese", ["as consultas rápidas e otimizadas", "ações"]),
+    ("russian", ["быстрые запросы к таблицам", "СИСТЕМА и Ёлка", ""]),
+    ("swedish", ["snabba frågor om tabeller", "större hus"]),
+    ("finnish", ["nopeat kyselyt tauluista", "yhdessä ja erikseen"]),
+    ("hungarian", ["gyors lekérdezések a táblákról", "tükörképe őrült"]),
+    # round-5 international wave — fa/el exercise the char_fold
+    # translate
+    ("arabic", ["الكتاب والحسن فاطمة", "ولداً ونلْسون", ""]),
+    ("persian", ["این کتابها و دوستان", "كتابۀ زادہ های"]),
+    ("czech", ["velcí páni a hrady", "stavení mužů"]),
+    ("bulgarian", ["градът и чудесата", "вестникът на краищата"]),
+    ("greek", ["ο άνθρωπος και οι άνθρωποι", "ΜΆΪΟΣ ΰϊ σοφός"]),
+    ("hindi", ["लडके और किताबों में", "अँगरेज़ी"]),
+    ("bengali", ["মেয়েরা এবং বাড়ী", "কলকাতা থেকে"]),
+    ("indonesian", ["bukukah dan kepastian", "memberikan pembunuhan"]),
+    ("latvian", ["tēvi un cilvēki", "lielākais valstis"]),
+    ("norwegian", ["hemmeligheten på bilens", "de fineste kakene"]),
+]
+_PRESET_IDS = ["fr", "de", "es", "it", "pt", "ru", "sv", "fi", "hu",
+               "ar", "fa", "cs", "bg", "el", "hi", "bn", "id", "lv", "no"]
+
+
+@pytest.mark.parametrize("preset,texts", _PRESET_TEXTS, ids=_PRESET_IDS)
 def test_preset_entries_expr_matches_python_chain(spark, preset, texts):
     """analyze_column (run on the executors, dictionary stem included —
     what suggest/classify/monitor run) == analyze_text on the driver."""
@@ -306,6 +306,33 @@ def test_preset_entries_expr_matches_python_chain(spark, preset, texts):
         got = sorted((x["term"], x["pos"]) for x in (r.e or []))
         want = sorted(an.analyze_text(t))
         assert got == want, (preset, t)
+
+
+# the other presets, with texts from (or words of) their own tests:
+# test_analyzer, the CJK tests below, test_brazilian, test_rslp,
+# test_sorani, test_intl; the wave-3 presets are in test_wave3
+_MORE_PRESET_TEXTS = [
+    ("english", ["the model is training the data", "the spark's queries"]),
+    ("brazilian", ["a tabela", "as consultas rápidas"]),
+    ("cjk", ["数据库 the 引擎", "あいうえおabんcかきくけ こ", "the spark ＤＢ 数据库查询"]),
+    ("portuguese_rslp", ["as consultas rápidas e otimizadas", "professora"]),
+    ("galician", ["as consultas rápidas sobre táboas optimizadas", "unha consulta lenta"]),
+    ("sorani", ["پیاوەکان لە هۆتیلێکی گەورە", "دەرگاکان و پیاوان پێکەوە"]),
+    ("telugu", ["వస్తువులు పన్నులు", "ఒౕ చై"]),
+]
+
+
+@pytest.mark.parametrize(
+    "preset,texts",
+    _PRESET_TEXTS + _MORE_PRESET_TEXTS,
+    ids=_PRESET_IDS + [p for p, _ in _MORE_PRESET_TEXTS],
+)
+def test_preset_query_chain_matches_index_chain(preset, texts):
+    """No preset has an expansion stage, so query analysis must give the
+    index chain's terms at the same positions."""
+    an = getattr(Analyzer, preset)()
+    for t in texts + [None]:
+        assert an.analyze_query_positions(t) == an.analyze_text(t), (preset, t)
 
 
 # -- engine vs oracle parity (full build path incl. dictionary stem) ---------
@@ -635,7 +662,7 @@ def test_cjk_positions_dense_over_bigrams():
     assert out == [("数据", 0), ("据库", 1), ("引擎", 3)]
 
 
-def test_cjk_entries_expr_parity(spark):
+def test_cjk_analyze_column_parity(spark):
     from pyspark.sql import functions as F
 
     an = Analyzer.cjk()

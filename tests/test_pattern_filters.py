@@ -354,3 +354,12 @@ def test_phrase_snippet_boundaries(spark):
     }
     assert got[0] == ""  # 'the database' must not bold as 'the data'
     assert got[1] == "see <b>the data</b> now"
+
+
+def test_reverse_ignores_stem_exclusions_on_both_sides():
+    """ReverseStringFilter ignores KeywordAttribute: an excluded token is
+    reversed at index time, so the query side must reverse it too or a
+    query for the word can never match."""
+    an = Analyzer(reverse_tokens=True, stem_exclusions=frozenset({"abc"}))
+    assert an.analyze_query("abc xyz") == ["cba", "zyx"]
+    assert an.analyze_query("abc xyz") == [t for t, _ in an.analyze_text("abc xyz")]

@@ -111,7 +111,7 @@ def test_uax29_url_email_vectors():
     assert tokenize_text("Test@example.com") == ["test", "example", "com"]
 
 
-def test_uax29_url_email_entries_expr_parity(spark):
+def test_uax29_url_email_analyze_column_parity(spark):
     from pyspark.sql import functions as F
 
     from lucene_spark.analysis import Analyzer

@@ -180,6 +180,15 @@ def _mk_rows(texts):
     ]
 
 
+@pytest.mark.parametrize("preset", WAVE3, ids=_IDS)
+def test_preset_query_chain_matches_index_chain(preset):
+    """No preset has an expansion stage, so query analysis must give the
+    index chain's terms at the same positions."""
+    an = getattr(Analyzer, preset)()
+    for t in _PARITY_TEXTS[preset] + [None]:
+        assert an.analyze_query_positions(t) == an.analyze_text(t), (preset, t)
+
+
 @pytest.mark.parametrize(
     "preset,texts,query",
     [
