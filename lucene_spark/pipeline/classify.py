@@ -423,14 +423,24 @@ def knn_fuzzy_classify(
     vote of ``buildListFromTopDocs``: per class, boost = Σ hit_score /
     max_score; final vote = boost / k, rescaled by k/sumdoc when fewer
     than k docs matched (the ``sumdoc < k`` correction) — net
-    boost / min(k, n_hits).  Returns (assigned, vote) ordered by vote
-    desc, class asc."""
-    from lucene_spark.search.query import FuzzyLikeThisQuery
+    boost / min(k, n_hits).  Only docs with a class value are searched
+    (the reference's class-field clause, here a non-scoring FILTER), so
+    a null-class doc never takes a top-k slot.  Returns (assigned, vote)
+    ordered by vote desc, class asc."""
+    from lucene_spark.search.query import (
+        BooleanQuery,
+        FieldExistsQuery,
+        FuzzyLikeThisQuery,
+        Occur,
+    )
 
-    q = FuzzyLikeThisQuery(((text, max_edits, prefix_length),))
+    q = BooleanQuery.of(
+        (FuzzyLikeThisQuery(((text, max_edits, prefix_length),)), Occur.MUST),
+        (FieldExistsQuery(class_col), Occur.FILTER),
+    )
     top = searcher.search(q, k)
     docs = searcher.index.docs.select("doc_id", class_col)
-    hits = top.join(docs, "doc_id").filter(F.col(class_col).isNotNull())
+    hits = top.join(docs, "doc_id")
     n = hits.count()
     if n == 0:
         return hits.select(

@@ -69,13 +69,6 @@ class PackedScorer:
         self.searcher = searcher
         self.index = searcher.index
 
-    # ------------------------------------------------------------------
-    def _ub_expr(self, w_col, maxf_col, minn_col):
-        """Chunk/term upper-bound score as a JVM column expression (same
-        algebra as the real score, evaluated at (max_freq, min_norm))."""
-        s = self.searcher
-        return s._bm25_expr(w_col, maxf_col, minn_col)
-
     def _packed_for(self, terms) -> DataFrame:
         terms = list(terms)
         pk = self.index.bucket_filter(self.index.packed, terms)
@@ -138,30 +131,29 @@ class PackedScorer:
         pk = self._packed_for(term_weights).withColumn(
             "_w", s._term_lookup(term_weights, s._score_dt)
         )
-        pk = pk.withColumn(
-            "_ub",
-            self._ub_expr(F.col("_w"), F.col("max_freq"), F.col("min_norm")).cast(
-                "double"
-            ),
-        )
-
-        if mode == "and":
-            # a chunk can produce a conjunctive match only if every term has
-            # postings in it (doc ranges are aligned) — BlockMaxConjunction's
-            # "all iterators must overlap" precondition
-            chunk_info = pk.groupBy("chunk").agg(
+        if mode == "and" or tau > 0.0:
+            # chunk/term upper bound: the score's own algebra evaluated at
+            # (max_freq, min_norm)
+            pk = pk.withColumn(
+                "_ub", s._score_of("_w", "max_freq", "min_norm").cast("double")
+            )
+            keep = pk.groupBy("chunk").agg(
                 F.sum("_ub").alias("_bound"), F.count("*").alias("_nt")
             )
-            keep = chunk_info.filter(F.col("_nt") == n_terms)
+            if mode == "and":
+                # a chunk can produce a conjunctive match only if every term
+                # has postings in it (doc ranges are aligned) —
+                # BlockMaxConjunction's "all iterators must overlap"
+                # precondition
+                keep = keep.filter(F.col("_nt") == n_terms)
             if tau > 0.0:
                 keep = keep.filter(F.col("_bound") >= tau)
+            pk = pk.join(keep.select("chunk", "_bound"), "chunk")
+            # rest = what the *other* terms of this chunk could still contribute
+            pk = pk.withColumn("_rest", F.col("_bound") - F.col("_ub"))
         else:
-            chunk_info = pk.groupBy("chunk").agg(F.sum("_ub").alias("_bound"))
-            keep = chunk_info.filter(F.col("_bound") >= tau) if tau > 0.0 else chunk_info
-
-        pk = pk.join(keep.select("chunk", "_bound"), "chunk")
-        # rest = what the *other* terms of this chunk could still contribute
-        pk = pk.withColumn("_rest", F.col("_bound") - F.col("_ub"))
+            # an OR with tau 0 can prune nothing: no chunk pass
+            pk = pk.withColumn("_rest", F.lit(0.0))
 
         scored = self._decode_score(pk, tau)
         if mode == "and":
@@ -171,6 +163,9 @@ class PackedScorer:
             return agg.filter(F.col("_nt") == n_terms).select(
                 "doc_id", F.col("_sum").cast(s.score_type).alias("score")
             )
+        if n_terms == 1:
+            # each doc appears once: the sum would be the score itself
+            return scored.select("doc_id", F.col("score").cast(s.score_type))
         return scored.groupBy("doc_id").agg(
             F.sum("score").cast(s.score_type).alias("score")
         )

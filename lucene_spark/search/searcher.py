@@ -7,12 +7,16 @@
    term_stats relation (filter pushed to the scan; never a full collect) +
    GLOBAL collection stats (docCount, avgdl) — IndexSearcher.java:913-928.
 3. Match/score = declarative DataFrame plan over the postings relation:
-   conjunction = inner join / count-distinct constraint, disjunction = union +
-   hash agg, exclusion = left_anti, filter = left_semi — Catalyst/AQE pick
-   broadcast vs shuffle sides (≙ ConjunctionDISI lead-cost ordering).
+   a BooleanQuery is ONE hash aggregation over clause-tagged rows —
+   conjunction / minShouldMatch = all / enough clause bits set (bit_or
+   masks), exclusion = no MUST_NOT row, filter = a required bit with no
+   score.  Match-only plans (``_matches``) still use semi/anti joins, where
+   Catalyst/AQE pick broadcast vs shuffle sides (≙ ConjunctionDISI
+   lead-cost ordering).
 4. top-k = ``orderBy(score desc, doc_id asc).limit(k)`` → Catalyst
    TakeOrderedAndProject (≙ TopScoreDocCollector k-heap + TopDocs.merge
-   tie-break, HitQueue.java:77-84).
+   tie-break, HitQueue.java:77-84); the rank is numbered on its one sorted
+   partition and the k rows are broadcast to their doc keys.
 
 Scoring is Lucene-exact float32: the BM25 algebra runs as FloatType column
 expressions (JVM, whole-stage codegen — Java float ops ≡ IEEE binary32 ≡
@@ -166,9 +170,10 @@ class IndexSearcher:
         )
         self._vectors = None
         self._vectors_ivf_path = None
-        # scoring-table literals (normInverse cache, classic norms, decoded
-        # lengths), each built on first use and reused by every query
-        self._table_lits: dict = {}
+        # per-searcher constants (scoring-table literals, score expressions,
+        # the search() tail), each built on first use and reused by every
+        # query: building them costs py4j round trips, not Spark work
+        self._consts: dict = {}
 
     # ------------------------------------------------------------------
     # vector search surface (KnnFloatVectorQuery.java:45)
@@ -356,14 +361,20 @@ class IndexSearcher:
             one / (self.k1 * ((one - self.b) + self.b * LENGTH_TABLE / self.avgdl))
         ).astype(np.float32)
 
+    def _const(self, key, build):
+        """``build()``, computed once per searcher and shared by every
+        query's plan."""
+        value = self._consts.get(key)
+        if value is None:
+            value = self._consts[key] = build()
+        return value
+
     def _table_lit(self, name: str, build, element_type):
-        """Array literal of the 256-entry table ``build()``, rendered once
-        per searcher (one JVM call) and shared by every query's plan."""
-        col = self._table_lits.get(name)
-        if col is None:
-            col = sql_lit(build(), ArrayType(element_type))
-            self._table_lits[name] = col
-        return col
+        """Array literal of the 256-entry table ``build()``, rendered in one
+        JVM call."""
+        return self._const(
+            ("table", name), lambda: sql_lit(build(), ArrayType(element_type))
+        )
 
     def _cache_lit(self):
         return self._table_lit("norm_inverse", self.norm_inverse_cache, FloatType())
@@ -414,6 +425,21 @@ class IndexSearcher:
         if self.scoring == "plain_f64":
             return self._bm25_expr_f64(weight_col, freq_col, norm_col)
         return self._bm25_expr_f32(weight_col, freq_col, norm_col)
+
+    def _score_of(self, weight: str, freq: str, norm: str) -> Column:
+        """:meth:`_bm25_expr` over the named columns.  The Column-DSL build
+        costs ~170 py4j round trips, so each column triple is built once."""
+        return self._const(
+            ("score", weight, freq, norm),
+            lambda: self._bm25_expr(F.col(weight), F.col(freq), F.col(norm)),
+        )
+
+    def _weight_scored(self, df: DataFrame, weight: float, freq: str = "_freq") -> DataFrame:
+        """(doc_id, score) of ``df``'s (doc_id, ``freq``, norm) rows under one
+        query-level weight."""
+        return df.select(
+            "doc_id", freq, "norm", sql_lit(weight, self._score_dt).alias("_w")
+        ).select("doc_id", self._score_of("_w", freq, "norm").alias("score"))
 
     @staticmethod
     def classic_norm_table() -> np.ndarray:
@@ -490,8 +516,7 @@ class IndexSearcher:
             self._term_lookup(weights, self._score_dt).alias("_w"),
         )
         return pf.select(
-            "doc_id",
-            self._bm25_expr(F.col("_w"), F.col("freq"), F.col("norm")).alias("score"),
+            "doc_id", self._score_of("_w", "freq", "norm").alias("score")
         )
 
     def _scored_terms(self, term_boosts: dict[str, float]) -> DataFrame:
@@ -1089,17 +1114,15 @@ class IndexSearcher:
 
     def _n_should_matched(self, shoulds, need: int) -> DataFrame:
         """doc_ids matching at least ``need`` distinct SHOULD clauses."""
-        parts = [
-            self._matches(s).withColumn("_cl", F.lit(i))
-            for i, s in enumerate(shoulds)
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
+        u = None
+        for i, sub in enumerate(shoulds):
+            p = self._matches(sub).selectExpr("doc_id", f"{i} AS _cl")
+            u = p if u is None else u.unionByName(p)
+        aggs, n = _clause_masks("_cl", len(shoulds))
         return (
             u.groupBy("doc_id")
-            .agg(F.count_distinct("_cl").alias("_n"))
-            .filter(F.col("_n") >= need)
+            .agg(*[F.expr(a) for a in aggs])
+            .filter(f"{n} >= {need}")
             .select("doc_id")
         )
 
@@ -1563,16 +1586,16 @@ class IndexSearcher:
         """CoveringQuery lowering (sandbox/search/CoveringScorer.java):
         per-doc-variable minimumNumberMatch.  Plan shape: the clause
         disjunction is ONE union of the per-clause scored relations with a
-        clause ordinal, one hash agg computes (sum(score),
-        count_distinct(clause)) per doc — map-side partial aggregation
-        applies — and the per-doc threshold rides the final doc_id join
-        against the (column-pruned) docs relation; no per-doc Python and
-        no second pass over the postings.  Score = sum of the matching
+        clause ordinal, one hash agg computes sum(score) and the matched
+        clause bits (``_clause_masks``) per doc — map-side partial
+        aggregation applies — and the per-doc threshold rides the final
+        doc_id join against the (column-pruned) docs relation; no per-doc
+        Python and no second pass over the postings.  Score = sum of the matching
         clauses' scores (CoveringScorer.java:211-217); NULL threshold
         values never match, values < 1 clamp to 1
         (CoveringScorer.java:135-141)."""
         parts = [
-            self._scored(sub).withColumn("_cl", F.lit(i))
+            self._scored(sub).selectExpr("doc_id", "score", f"{i} AS _cl")
             for i, sub in enumerate(q.queries)
         ]
         if not parts:
@@ -1580,9 +1603,10 @@ class IndexSearcher:
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
+        aggs, n = _clause_masks("_cl", len(parts))
         agg = u.groupBy("doc_id").agg(
-            F.sum(F.col("score").cast("double")).alias("_sum"),
-            F.count_distinct("_cl").alias("_n"),
+            F.expr("sum(CAST(score AS DOUBLE)) AS _sum"),
+            *[F.expr(a) for a in aggs],
         )
         need = F.expr(q.min_match_source).cast("long")
         # NULL must be tested on the RAW source (greatest(NULL, 1) = 1 in
@@ -1593,7 +1617,7 @@ class IndexSearcher:
         )
         return (
             agg.join(docs, "doc_id")
-            .filter(F.col("_n") >= F.col("_need"))
+            .filter(f"{n} >= _need")
             .select("doc_id", F.col("_sum").cast(self.score_type).alias("score"))
         )
 
@@ -1712,12 +1736,7 @@ class IndexSearcher:
                 F.first("norm").alias("norm"),
             )
         )
-        return summed.select(
-            "doc_id",
-            self._bm25_expr(
-                F.lit(weight).cast(self.score_type), F.col("freq"), F.col("norm")
-            ).alias("score"),
-        )
+        return self._weight_scored(summed, weight, "freq")
 
     def _scored_fuzzy(self, q: FuzzyQuery) -> DataFrame:
         """FuzzyQuery.java:52-54 with TopTermsScoringBooleanQueryRewrite:
@@ -1779,112 +1798,106 @@ class IndexSearcher:
 
     def _scored_boolean(self, q: BooleanQuery) -> DataFrame:
         """Occur semantics per Boolean2ScorerSupplier.java:130-155 lowered to
-        a single hash aggregation over tagged scored rows + semi/anti joins."""
-        musts = [c.query for c in q.clauses if c.occur == Occur.MUST]
-        shoulds = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
-        filters = [c.query for c in q.clauses if c.occur == Occur.FILTER]
-        must_nots = [c.query for c in q.clauses if c.occur == Occur.MUST_NOT]
+        ONE hash aggregation over tagged rows, the analog of the single leaf
+        pass that feeds ReqExclScorer / ReqOptSumScorer.
+
+        Every clause contributes rows tagged with its ordinal: MUST and
+        FILTER share the required ordinals (``_must``), SHOULD has its own
+        (``_should``) and MUST_NOT rows set ``_not``; FILTER and MUST_NOT
+        rows carry a NULL score.  A doc is kept when every required bit is
+        set, at least minShouldMatch SHOULD bits are set (at least one when
+        nothing is required) and it has no MUST_NOT row.  Its score is the
+        sum of its scoring rows in double, 0 when only FILTER clauses
+        matched it."""
         if not q.clauses:
             # empty BooleanQuery matches nothing (Lucene rewrites it to
             # MatchNoDocsQuery rather than erroring)
             return self._empty_scored()
-        if not musts and not shoulds and not filters:
+        if all(c.occur == Occur.MUST_NOT for c in q.clauses):
             raise ValueError("pure-negation BooleanQuery is illegal (BooleanQuery.java)")
-        msm = q.min_should_match
+        tags = []  # (_must, _should, _not) per clause
+        n_req = n_should = 0
+        for c in q.clauses:
+            if c.occur in (Occur.MUST, Occur.FILTER):
+                tags.append((n_req, None, None))
+                n_req += 1
+            elif c.occur == Occur.SHOULD:
+                tags.append((None, n_should, None))
+                n_should += 1
+            else:
+                tags.append((None, None, 1))
+
+        def tagged(df, score, tag):
+            return df.selectExpr("doc_id", score, *(
+                f"CAST({'NULL' if v is None else v} AS INT) AS {name}"
+                for name, v in zip(("_must", "_should", "_not"), tag)
+            ))
 
         parts = []
-        # Batch all scoring TermQuery clauses into ONE postings scan with
-        # inlined literal weights (one stats lookup total) — the common
-        # "many-term query" fast path; all other clause types lower
-        # individually.  ≙ BooleanWeight building all TermScorers over one
-        # shared leaf pass.
-        term_clauses = []  # (term, boost, must_idx, should_idx)
-        # the batched fast path assumes the idf-weight shape; the LM family
-        # scores per-term via _scored_terms (needs ttf), so route its term
-        # clauses through the generic per-clause lowering
-        batch_terms = not self.simbase
-        for i, sub in enumerate(musts):
-            if batch_terms and isinstance(sub, TermQuery):
-                term_clauses.append((sub.term, sub.boost, i, None))
+        # All TermQuery clauses share ONE postings scan with inlined literal
+        # weights (one stats lookup total), ≙ BooleanWeight building every
+        # TermScorer over one shared leaf pass.  The SimilarityBase families
+        # score terms per clause (they need ttf), so they batch none.
+        term_clauses = []  # (term, boost or None when not scoring, tag)
+        for c, tag in zip(q.clauses, tags):
+            scoring = c.occur in (Occur.MUST, Occur.SHOULD)
+            if isinstance(c.query, TermQuery) and not self.simbase:
+                term_clauses.append((c.query.term, c.query.boost if scoring else None, tag))
+            elif scoring:
+                parts.append(tagged(self._scored(c.query), "score", tag))
             else:
-                parts.append(
-                    self._scored(sub).select(
-                        "doc_id", "score", F.lit(i).alias("_must"),
-                        F.lit(None).cast("int").alias("_should"),
-                    )
-                )
-        for i, sub in enumerate(shoulds):
-            if batch_terms and isinstance(sub, TermQuery):
-                term_clauses.append((sub.term, sub.boost, None, i))
-            else:
-                parts.append(
-                    self._scored(sub).select(
-                        "doc_id", "score", F.lit(None).cast("int").alias("_must"),
-                        F.lit(i).alias("_should"),
-                    )
-                )
+                null_score = f"CAST(NULL AS {self.score_type}) AS score"
+                parts.append(tagged(self._matches(c.query), null_score, tag))
         if term_clauses:
-            dfs = self.term_doc_freqs([t for t, _, _, _ in term_clauses])
-            # term -> one (weight, must, should) entry per clause: a term
-            # repeated across clauses (`+a a`, `a^2 a`) scores once per
-            # clause, since clause scores add
+            dfs = self.term_doc_freqs([t for t, _, _ in term_clauses])
+            # term -> one entry per clause: a term repeated across clauses
+            # (`+a a`, `a^2 a`) scores once per clause, since clause scores add
             by_term: dict[str, list] = {}
-            for t, b, mi, si in term_clauses:
+            for t, boost, tag in term_clauses:
                 if t in dfs:
-                    by_term.setdefault(t, []).append((self._weight(b, dfs[t]), mi, si))
+                    w = None if boost is None else self._weight(boost, dfs[t])
+                    by_term.setdefault(t, []).append((w, *tag))
             if by_term:
                 entry = StructType([
                     StructField("_w", self._score_dt),
                     StructField("_must", IntegerType()),
                     StructField("_should", IntegerType()),
+                    StructField("_not", IntegerType()),
                 ])
                 pf = self.index.postings_for_terms(list(by_term)).select(
                     "doc_id", "freq", "norm",
                     F.inline(self._term_lookup(by_term, ArrayType(entry))),
                 )
-                parts.append(
-                    pf.select(
-                        "doc_id",
-                        self._bm25_expr(
-                            F.col("_w"), F.col("freq"), F.col("norm")
-                        ).alias("score"),
-                        "_must",
-                        "_should",
-                    )
-                )
+                parts.append(pf.select(
+                    "doc_id", self._score_of("_w", "freq", "norm").alias("score"),
+                    "_must", "_should", "_not",
+                ))
+        if not parts:
+            # every clause was a term absent from the dictionary
+            return self._empty_scored()
 
-        if parts:
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            agg = u.groupBy("doc_id").agg(
-                F.sum("score").alias("_dsum"),
-                F.count_distinct(F.col("_must")).alias("_nmust"),
-                F.count_distinct(F.col("_should")).alias("_nshould"),
+        u = parts[0]
+        for p in parts[1:]:
+            u = u.unionByName(p)
+        must_aggs, n_must = _clause_masks("_must", n_req)
+        should_aggs, n_shoulds = _clause_masks("_should", n_should)
+        need = q.min_should_match if n_req else max(1, q.min_should_match)
+        aggs = ["sum(score) AS _dsum", *must_aggs]
+        conds = [f"{n_must} = {n_req}"] if n_req else []
+        if need > 0:
+            aggs += should_aggs
+            conds.append(f"{n_shoulds} >= {need}")
+        if n_req + n_should < len(q.clauses):
+            aggs.append("count(_not) AS _nnot")
+            conds.append("_nnot = 0")
+        return (
+            u.groupBy("doc_id")
+            .agg(*[F.expr(a) for a in aggs])
+            .filter(" AND ".join(conds))
+            .selectExpr(
+                "doc_id", f"CAST(coalesce(_dsum, 0D) AS {self.score_type}) AS score"
             )
-            cond = F.col("_nmust") == len(musts)
-            if musts or filters:
-                if msm > 0:
-                    cond = cond & (F.col("_nshould") >= msm)
-            else:
-                cond = cond & (F.col("_nshould") >= max(1, msm))
-            scored = agg.filter(cond).select(
-                "doc_id", F.col("_dsum").cast(self.score_type).alias("score")
-            )
-        elif filters:
-            # FILTER-only query: constant score 0 over the filter matches
-            scored = self._const_scored(self._matches(filters[0]), 0.0)
-            filters = filters[1:]
-        else:
-            # every scoring clause was a term absent from the dictionary
-            # (rows filtered to nothing) — no document can match
-            scored = self._empty_scored()
-
-        for sub in filters:
-            scored = scored.join(self._matches(sub), "doc_id", "left_semi")
-        for sub in must_nots:
-            scored = scored.join(self._matches(sub), "doc_id", "left_anti")
-        return scored
+        )
 
     def _scored_feature(self, q) -> DataFrame:
         """FeatureQuery lowering: a projection over the docs relation — no
@@ -1926,8 +1939,7 @@ class IndexSearcher:
             ).alias("_w"),
         )
         scored = pf.select(
-            "doc_id",
-            self._bm25_expr(F.col("_w"), F.col("freq"), F.col("norm")).alias("score"),
+            "doc_id", self._score_of("_w", "freq", "norm").alias("score")
         )
         tie = _f32(q.tie_breaker) if self.score_type == "float" else float(q.tie_breaker)
         st = self.score_type
@@ -2102,12 +2114,7 @@ class IndexSearcher:
             )
         )
         out = base.withColumn("_freq", freq).filter(F.col("_freq") > 0)
-        return out.select(
-            "doc_id",
-            self._bm25_expr(
-                F.lit(weight).cast(self.score_type), F.col("_freq"), F.col("norm")
-            ).alias("score"),
-        )
+        return self._weight_scored(out, weight)
 
     def _scored_sloppy_phrase(self, q: PhraseQuery) -> DataFrame:
         """Sloppy phrase (slop > 0) with EXACT reference semantics
@@ -2219,12 +2226,7 @@ class IndexSearcher:
             out = base.withColumn(
                 "_freq", acc.cast("double") / F.lit(float(lq))
             ).filter(F.col("_freq") > 0)
-        return out.select(
-            "doc_id",
-            self._bm25_expr(
-                F.lit(weight).cast(self.score_type), F.col("_freq"), F.col("norm")
-            ).alias("score"),
-        )
+        return self._weight_scored(out, weight)
 
     def _sloppy_udf_scored(
         self,
@@ -2274,12 +2276,7 @@ class IndexSearcher:
         out = base.select("doc_id", "norm", freq.alias("_freq")).filter(
             F.col("_freq") > 0
         )
-        return out.select(
-            "doc_id",
-            self._bm25_expr(
-                F.lit(weight).cast(self.score_type), F.col("_freq"), F.col("norm")
-            ).alias("score"),
-        )
+        return self._weight_scored(out, weight)
 
     def _scored_term_automaton(self, q) -> DataFrame:
         """TermAutomatonQuery (sandbox/search/TermAutomatonQuery.java:63):
@@ -2324,12 +2321,7 @@ class IndexSearcher:
         out = base.select("doc_id", "norm", freq.alias("_freq")).filter(
             F.col("_freq") > 0
         )
-        return out.select(
-            "doc_id",
-            self._bm25_expr(
-                F.lit(weight).cast(self.score_type), F.col("_freq"), F.col("norm")
-            ).alias("score"),
-        )
+        return self._weight_scored(out, weight)
 
     def _scored_multi_phrase(self, q: MultiPhraseQuery) -> DataFrame:
         """MultiPhraseQuery.java — phrase with term alternatives per slot:
@@ -2414,12 +2406,7 @@ class IndexSearcher:
                 )
             )
         out = base.withColumn("_freq", freq).filter(F.col("_freq") > 0)
-        return out.select(
-            "doc_id",
-            self._bm25_expr(
-                F.lit(weight).cast(self.score_type), F.col("_freq"), F.col("norm")
-            ).alias("score"),
-        )
+        return self._weight_scored(out, weight)
 
     # ------------------------------------------------------------------
     # packed/pruned path (block-max WAND analog — search/packed.py)
@@ -2481,19 +2468,26 @@ class IndexSearcher:
                 (F.col("score") < sv)
                 | ((F.col("score") == sv) & (F.col("doc_id") > d))
             )
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        docs = self.index.docs.select("doc_id", "conv_id", "turn_idx")
-        out = top.join(docs, "doc_id")
+        order, rank, keys = self._const("search_tail", self._search_tail)
+        # the rank is numbered inside the top-k stage: TakeOrderedAndProject
+        # already emits one sorted partition, so the window adds no exchange
+        # and no sort; the k ranked rows are then broadcast to the docs keys
+        # and put back in rank order by a root TakeOrderedAndProject
+        top = scored.orderBy(*order).limit(k).select(rank, "doc_id", "score")
+        return (
+            top.join(keys, "doc_id")
+            .select("rank", "doc_id", "conv_id", "turn_idx", "score")
+            .orderBy("rank")
+            .limit(k)
+        )
+
+    def _search_tail(self):
+        """(top-k order, rank column, docs key projection) of :meth:`search`."""
         from pyspark.sql import Window
 
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.select(
-            F.row_number().over(w).alias("rank"),
-            "doc_id",
-            "conv_id",
-            "turn_idx",
-            "score",
-        ).orderBy("rank")
+        order = (F.desc("score"), F.asc("doc_id"))
+        rank = F.row_number().over(Window.orderBy(*order)).alias("rank")
+        return order, rank, self.index.docs.select("doc_id", "conv_id", "turn_idx")
 
     def search_diversified(
         self, query: Query, k: int, max_per_key: int, key_col: str = "conv_id"
@@ -2752,6 +2746,23 @@ def _as_float(v):
     if isinstance(v, datetime.date):
         return float(v.toordinal()) * 86400.0
     return None
+
+
+def _clause_masks(col: str, n: int) -> tuple[list[str], str]:
+    """Which of ``n`` clauses a doc matched, as SQL: a row tagged with
+    clause ordinal ``col`` (NULL: no clause) sets bit ``col % 63`` of word
+    ``col DIV 63``.  Returns one ``bit_or`` aggregate per 63 clauses and
+    the matched-clause count over the aggregated row (the words' summed
+    popcounts).  OR is idempotent, so the count is exact however many rows
+    a clause emits for a doc, and unlike ``count_distinct`` it needs no
+    ``Expand`` and no second aggregation."""
+    words = [f"{col}{w}" for w in range(-(-n // 63))]
+    aggs = [
+        f"coalesce(bit_or(IF({col} DIV 63 = {w}, shiftleft(1L, {col} % 63), NULL)), 0L)"
+        f" AS {word}"
+        for w, word in enumerate(words)
+    ]
+    return aggs, " + ".join(f"bit_count({word})" for word in words) or "0"
 
 
 def _and_all(conds):

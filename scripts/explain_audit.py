@@ -103,15 +103,23 @@ def main():
         (
             "In-memory OR top-k (scoring algebra in codegen)",
             "One InMemoryTableScan of the slim postings relation; the BM25 "
-            "float32 algebra sits inside WholeStageCodegen; top-k lowers to "
-            "TakeOrderedAndProject.",
+            "float32 algebra sits inside WholeStageCodegen; ONE hash "
+            "aggregation sums the scores and ORs the clause bits (bit_or, "
+            "no Expand); top-k lowers to TakeOrderedAndProject, the rank "
+            "Window sits directly on it (no Exchange, no Sort), ONE "
+            "BroadcastExchange ships the k ranked rows to the docs keys and "
+            "a root TakeOrderedAndProject orders by rank.",
             mem_s.search(orq("spark", "query", "data"), 10),
         ),
         (
             "Pruned (block-max) plan",
-            "Chunk bound aggregation + semi-join of surviving chunks happens "
-            "on chunk metadata columns only; the binary payload reaches the "
-            "score UDF only for surviving chunks.",
+            "For an AND, or an OR with a seeded tau > 0: the chunk bound "
+            "aggregation + join of surviving chunks happens on chunk "
+            "metadata columns only, and the binary payload reaches the "
+            "score UDF only for surviving chunks.  An OR with tau 0 can "
+            "prune nothing and runs no chunk pass: the packed scan feeds "
+            "the score UDF directly (and a single term skips the doc "
+            "aggregation too).",
             (idx.with_packed(chunk_bits=6), mem_s.scored_packed(orq("spark", "query", "data"), k=10))[1],
         ),
         (
@@ -131,8 +139,11 @@ def main():
         ),
         (
             "Stored docs top-k join-back",
-            "doc_id range scan: the join back to (conv_id, turn_idx) should "
-            "prune row groups via doc_id min/max.",
+            "A single term has no aggregation: packed scan -> score -> "
+            "TakeOrderedAndProject -> rank Window (no Exchange); the k "
+            "ranked rows are the ONE BroadcastExchange, joined to the "
+            "(conv_id, turn_idx) docs scan (doc_id min/max row-group "
+            "pruning), and a root TakeOrderedAndProject orders by rank.",
             disk_s.search(TermQuery("spark"), 5),
         ),
     ]
@@ -191,9 +202,11 @@ def main():
             mem_s._matches(orq("slow", "legacy")),
         ),
         (
-            "NOT query (scored MUST + match-only anti-join)",
-            "The MUST side carries the BM25 algebra; the MUST_NOT side joins "
-            "in as a LeftAnti against the score-free match plan above.",
+            "NOT query (one tagged scan, no anti-join)",
+            "The MUST and MUST_NOT terms share ONE postings scan; MUST_NOT "
+            "rows carry a NULL score and a `_not` tag, and the one hash "
+            "aggregation drops docs with `_nnot > 0` (ReqExclScorer) — no "
+            "LeftAnti, no second scan, no Expand.",
             mem_s.search(
                 BooleanQuery.of(
                     (TermQuery("spark"), Occur.MUST), (TermQuery("the"), Occur.MUST_NOT)
@@ -441,7 +454,8 @@ def main():
         (
             "CoveringQuery (per-doc minimumNumberMatch)",
             "ONE union of the scored clause relations -> ONE hash agg "
-            "(sum, count_distinct) with map-side partial aggregation; the "
+            "(sum, bit_or clause masks; no Expand) with map-side partial "
+            "aggregation; the "
             "per-doc threshold joins the column-pruned docs relation — no "
             "second postings pass, no UDF.",
             mem_s.search(

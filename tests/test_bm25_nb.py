@@ -147,3 +147,48 @@ def test_knn_fuzzy_classify_vote_math(spark, tiny_index):
         key=lambda x: (-x[1], x[0]),
     )
     assert [(c, pytest.approx(v, rel=1e-12)) for c, v in exp] == got
+
+
+def test_knn_fuzzy_classify_skips_null_class_docs(spark):
+    """A doc with no class value never takes a top-k slot: the vote runs
+    over the k best docs that HAVE a class (the reference searches with a
+    class-field clause), not over what is left of the top k."""
+    from lucene_spark.fixtures.transcripts import transcripts_df
+    from lucene_spark.index import IndexBuilder
+    from lucene_spark.pipeline.classify import knn_fuzzy_classify
+    from lucene_spark.search import IndexSearcher
+    from lucene_spark.search.query import FuzzyLikeThisQuery
+
+    docs = [  # (role, text): the null-class doc is the best match
+        (None, "spark spark spark"),
+        ("a", "spark spark"),
+        ("b", "spark cluster"),
+        ("a", "spark data data data"),
+        ("b", "other words"),
+    ]
+    rows = [
+        {"conv_id": "c", "turn_idx": i, "role": r, "text": t, "tool": "", "ts": None}
+        for i, (r, t) in enumerate(docs)
+    ]
+    idx = IndexBuilder(num_segments=1).build(transcripts_df(spark, rows=rows))
+    try:
+        s = IndexSearcher(idx, scoring="plain_f64")
+        k = 2
+        got = [(r.assigned, r.vote) for r in knn_fuzzy_classify(s, "spark", k=k).collect()]
+        # brute force over the docs that have a class
+        flt = FuzzyLikeThisQuery((("spark", 1, 2),))
+        scored = {r.doc_id: r.score for r in s.scored(flt).collect()}
+        assert max(scored, key=scored.get) == 0, "the null-class doc must rank first"
+        roles = {r.doc_id: r.role for r in idx.docs.collect()}
+        top = sorted(
+            ((-v, d) for d, v in scored.items() if roles[d] is not None)
+        )[:k]
+        mx = -top[0][0]
+        votes = {}
+        for neg, d in top:
+            votes[roles[d]] = votes.get(roles[d], 0.0) + (-neg) / mx
+        exp = sorted(((c, v / k) for c, v in votes.items()), key=lambda x: (-x[1], x[0]))
+        assert len(exp) == 2
+        assert got == [(c, pytest.approx(v, rel=1e-12)) for c, v in exp]
+    finally:
+        idx.unpersist_all()

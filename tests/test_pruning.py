@@ -104,7 +104,7 @@ def test_pruning_actually_prunes(packed_index, searcher):
         "_w", searcher._term_lookup(weights, searcher._score_dt)
     )
     pk = pk.withColumn(
-        "_ub", ps._ub_expr(F.col("_w"), F.col("max_freq"), F.col("min_norm")).cast("double")
+        "_ub", searcher._score_of("_w", "max_freq", "min_norm").cast("double")
     )
     kept = (
         pk.groupBy("chunk")

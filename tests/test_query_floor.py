@@ -7,8 +7,13 @@ relation that needs its own Spark job to broadcast.  These tests pin:
 * the one-call literal builder and the tables it renders keep every bit;
 * inlined weights keep additive semantics for a term repeated across
   clauses (``+a a``, ``a^2 a b``, ...), pruned and unpruned;
-* a stored-index term query plans no weight relation and launches at most
-  3 Spark jobs;
+* a stored-index term query plans no weight relation;
+* per-shape Spark job budgets: the rank is numbered inside the top-k stage,
+  a BooleanQuery is one aggregation (no ``Expand``, no semi/anti join for
+  term FILTER / MUST_NOT clauses) and an OR that can prune nothing runs no
+  chunk pass;
+* clause counting stays exact past 63 clauses and when a clause emits
+  several rows for one doc;
 * lowering stays under a py4j round-trip budget per query shape;
 * a searcher over an empty term dictionary launches no job per lookup.
 """
@@ -36,6 +41,7 @@ from lucene_spark.search import (
     BooleanQuery,
     IndexSearcher,
     Occur,
+    PhraseQuery,
     QueryParser,
     TermQuery,
 )
@@ -64,6 +70,10 @@ def _jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _final_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -204,11 +214,143 @@ def test_term_query_plan_has_no_weight_relation(spark, stored_index):
         df = s.search(TermQuery("model"), 10)
         rows = df.collect()
     assert rows
-    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    final = _final_plan(df)
     assert "ExistingRDD" not in final and "LocalTableScan" not in final
     # the only broadcast left is the top-k rows joined to their doc keys
     assert final.count("BroadcastExchange") <= 1
-    assert len(ids) <= 3, f"term query launched {len(ids)} Spark jobs"
+    assert len(ids) <= 2, f"term query launched {len(ids)} Spark jobs"
+
+
+# ---------------------------------------------------------------------------
+# (d) jobs per query shape: scan -> one score aggregation -> top-k
+
+FLT, NOT = Occur.FILTER, Occur.MUST_NOT
+
+JOB_BUDGETS = {
+    # id: (query, prune, max jobs)
+    "term": (TermQuery("model"), False, 2),
+    "pruned term": (TermQuery("model"), True, 2),
+    "or": (BooleanQuery.of((TermQuery("model"), S), (TermQuery("data"), S)), False, 3),
+    "and": (BooleanQuery.of((TermQuery("model"), M), (TermQuery("data"), M)), False, 3),
+    "not": (BooleanQuery.of((TermQuery("model"), M), (TermQuery("data"), NOT)), False, 3),
+    "filter": (BooleanQuery.of((TermQuery("model"), S), (TermQuery("data"), FLT)), False, 3),
+    "phrase": (PhraseQuery(("the", "model")), False, 3),
+    "slop-2": (PhraseQuery(("the", "model"), slop=2), False, 3),
+}
+
+
+@pytest.mark.parametrize("shape", list(JOB_BUDGETS))
+def test_query_job_budget(spark, stored_index, shape):
+    q, prune, budget = JOB_BUDGETS[shape]
+    s = IndexSearcher(stored_index)
+    s.term_doc_freqs(["model"])  # warm dictionary
+    with _jobs(spark) as ids:
+        df = s.search(q, 10, prune=prune)
+        rows = df.collect()
+    assert rows
+    assert len(ids) <= budget, f"{shape} launched {len(ids)} Spark jobs"
+    final = _final_plan(df)
+    # the k ranked rows broadcast to the docs keys; nothing else
+    assert final.count("BroadcastExchange") == 1, final
+    if isinstance(q, BooleanQuery):
+        assert "Expand" not in final, final
+        assert "LeftAnti" not in final and "LeftSemi" not in final, final
+
+
+# ---------------------------------------------------------------------------
+# (e) clause counting: past 63 clauses, and several rows per doc
+
+WIDE_TERMS = [f"w{i:02d}" for i in range(70)]
+# doc -> the WIDE_TERMS it holds; 63 and 64 straddle the first mask word
+WIDE_DOCS = {
+    "all": WIDE_TERMS,
+    "first65": WIDE_TERMS[:65],
+    "first64": WIDE_TERMS[:64],
+    "first63": WIDE_TERMS[:63],
+    "last65": WIDE_TERMS[5:],
+    "few": WIDE_TERMS[:10] + WIDE_TERMS[60:66],
+}
+
+
+@pytest.fixture(scope="module")
+def wide(spark):
+    from lucene_spark.fixtures.transcripts import transcripts_df
+    from lucene_spark.index import IndexBuilder
+    from lucene_spark.oracle import OracleIndex
+
+    rows = [
+        {"conv_id": name, "turn_idx": 0, "role": "user", "tool": "", "ts": None,
+         "text": " ".join(terms + terms[: i + 1])}  # varied freqs
+        for i, (name, terms) in enumerate(WIDE_DOCS.items())
+    ]
+    idx = IndexBuilder(num_segments=2).build(transcripts_df(spark, rows=rows))
+    yield IndexSearcher(idx), OracleIndex.build(rows)
+    idx.unpersist_all()
+
+
+def _keys_and_bits(rows):
+    return [(r.conv_id, r.turn_idx) for r in rows], np.array(
+        [r.score for r in rows], np.float32
+    ).view(np.uint32)
+
+
+@pytest.mark.parametrize("msm", [63, 64, 65, 70])
+def test_should_mask_past_63_clauses(wide, msm):
+    s, oracle = wide
+    q = BooleanQuery.of(*[(TermQuery(t), S) for t in WIDE_TERMS], min_should_match=msm)
+    per = [oracle.term_scores(t) for t in WIDE_TERMS]
+    docs = {d for d in set().union(*per) if sum(d in ts for ts in per) >= msm}
+    want = oracle.topk_keys(oracle._topk(oracle._sum_scores(per, docs), 10))
+    assert want, "the expectation must not be vacuous"
+    rows = s.search(q, 10).collect()
+    keys, bits = _keys_and_bits(rows)
+    assert keys == [(c, t) for c, t, _ in want]
+    assert np.array_equal(bits, np.array([x for _, _, x in want], np.float32).view(np.uint32))
+    assert s.count(q) == len(docs) == s.scored(q).count()
+
+
+def test_must_mask_past_63_clauses(wide):
+    s, oracle = wide
+    q = BooleanQuery.of(*[(TermQuery(t), M) for t in WIDE_TERMS])
+    want = oracle.topk_keys(oracle.search_and(WIDE_TERMS, 10))
+    rows = s.search(q, 10).collect()
+    keys, bits = _keys_and_bits(rows)
+    assert keys == [(c, t) for c, t, _ in want] == [("all", 0)]
+    assert np.array_equal(bits, np.array([x for _, _, x in want], np.float32).view(np.uint32))
+    assert s.count(q) == 1 == s.scored(q).count()
+
+
+def test_clause_rows_several_per_doc(stored_index):
+    """A non-term clause whose plan emits several rows for one doc still
+    counts as ONE matched clause (and its rows' scores add)."""
+    phrase = PhraseQuery(("the", "model"))
+    plain = IndexSearcher(stored_index)
+    doubled = IndexSearcher(stored_index)
+    for name in ("_scored", "_matches"):
+        orig = getattr(doubled, name)
+
+        def twice(q, _orig=orig):
+            df = _orig(q)
+            return df.unionByName(df) if isinstance(q, PhraseQuery) else df
+
+        setattr(doubled, name, twice)
+    cases = [
+        BooleanQuery.of((phrase, S), (TermQuery("data"), S), (TermQuery("spark"), S),
+                        min_should_match=2),
+        BooleanQuery.of((phrase, FLT), (TermQuery("data"), M)),
+        BooleanQuery.of((phrase, M), (TermQuery("data"), FLT)),
+    ]
+    for q in cases:
+        want = {r.doc_id: r.score for r in plain.scored(q).collect()}
+        got = {r.doc_id: r.score for r in doubled.scored(q).collect()}
+        assert want, f"the expectation must not be vacuous: {q}"
+        assert set(got) == set(want), q
+    # a MUST phrase's two rows per doc both score
+    q = cases[2]
+    phrase_scores = {r.doc_id: r.score for r in plain.scored(phrase).collect()}
+    got = {r.doc_id: r.score for r in doubled.scored(q).collect()}
+    for d, v in got.items():
+        assert v == np.float32(2.0 * float(phrase_scores[d]))
 
 
 # ---------------------------------------------------------------------------

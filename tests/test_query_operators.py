@@ -141,17 +141,18 @@ def test_synonym_query_blended(env):
 
 def test_filter_occur_and_min_should_match(env):
     searcher, by_term, _ = env
-    # FILTER: non-scoring conjunction — same matches as MUST but the
-    # filter clause contributes no score
+    # FILTER: non-scoring required clause — same matches as MUST but the
+    # filter clause contributes no score; next to it the SHOULD clause is
+    # optional (ReqOptSumScorer), so filter-only docs match with score 0
     q_filter = BooleanQuery.of(
         (TermQuery("model"), Occur.SHOULD), (TermQuery("data"), Occur.FILTER)
     )
     got = scores(searcher, q_filter)
-    want_set = set(by_term.get("model", {})) & set(by_term.get("data", {}))
-    assert set(got) == want_set
+    assert set(got) == set(by_term.get("data", {}))
+    assert set(got) - set(by_term.get("model", {})), "no filter-only doc"
     model_alone = scores(searcher, TermQuery("model"))
     for d, v in got.items():
-        assert abs(v - model_alone[d]) < 1e-6, "FILTER must not contribute score"
+        assert v == model_alone.get(d, 0.0), "FILTER must not contribute score"
 
     # minimumNumberShouldMatch = 2 of 3
     terms = ["model", "data", "query"]
@@ -546,3 +547,37 @@ def test_fuzzy_transpositions_osa(spark):
         for me in (1, 2):
             hit = bool(s2.scored(FuzzyQuery(a, max_edits=me)).collect())
             assert hit == (brute_osa(a, b) <= me), (a, b, me)
+
+
+def test_filter_with_should_keeps_filter_only_docs(spark):
+    """SHOULD is optional next to a required FILTER clause (the
+    BooleanQuery docstring; ReqOptSumScorer): a doc matching only the
+    filter comes back with score 0, for a term and a non-term filter, and
+    search() agrees with count()."""
+    from lucene_spark.fixtures.transcripts import transcripts_df
+    from lucene_spark.index import IndexBuilder
+    from lucene_spark.search import PhraseQuery
+
+    texts = ["alpha beta", "alpha", "beta", "gamma", "alpha gamma beta", "gamma alpha"]
+    rows = [
+        {"conv_id": "c", "turn_idx": i, "role": "user", "text": t, "tool": "", "ts": None}
+        for i, t in enumerate(texts)
+    ]
+    idx = IndexBuilder(num_segments=1).build(transcripts_df(spark, rows=rows))
+    try:
+        s = IndexSearcher(idx)
+        beta = {r.doc_id: r.score for r in s.scored(TermQuery("beta")).collect()}
+        for flt, want in [
+            (TermQuery("alpha"), {0, 1, 4, 5}),
+            (PhraseQuery(("gamma", "alpha")), {5}),
+            (PhraseQuery(("alpha", "beta")), {0}),
+        ]:
+            q = BooleanQuery.of((flt, Occur.FILTER), (TermQuery("beta"), Occur.SHOULD))
+            got = {r.doc_id: r.score for r in s.search(q, 10).collect()}
+            assert set(got) == want, flt
+            assert len(got) == s.count(q), flt
+            assert got == {d: beta.get(d, 0.0) for d in want}, flt
+        q = BooleanQuery.of((TermQuery("alpha"), Occur.FILTER), (TermQuery("beta"), Occur.SHOULD))
+        assert s.search(q, 10).filter("doc_id = 1").first().score == 0.0
+    finally:
+        idx.unpersist_all()
