@@ -4,11 +4,12 @@ Re-expresses the reference's IndexWriter lifecycle (SURVEY.md §3.1) as
 DataFrame stages:
 
     read transcripts
-      -> repartitionByRange(conv_id, turn_idx) + sortWithinPartitions
-         (one input partition ≙ one DocumentsWriterPerThread / segment)
-      -> deterministic dense doc_id (global rank over (conv_id, turn_idx) —
-         two-pass offsets, no global window; ≙ DocIDMerger's stable remap,
-         core/index/DocIDMerger.java:32)
+      -> collected conv_id range bounds + per-range turn counts; one
+         repartitionById(range) exchange, each partition sorted by
+         (conv_id, turn_idx) (one range ≙ one DocumentsWriterPerThread)
+      -> deterministic dense doc_id (global rank over (conv_id, turn_idx) =
+         range offset + in-range row_number, no global window; ≙
+         DocIDMerger's stable remap, core/index/DocIDMerger.java:32)
       -> analyze + per-doc invert in one Arrow-batched mapInPandas pass
          (Analyzer.analyze_text / tokenize_text; see IndexBuilder._arrow_base)
          (term, doc_id) -> freq, positions       (≙ TermsHashPerField.add)
@@ -30,11 +31,65 @@ from dataclasses import dataclass, field, replace as dc_replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 from lucene_spark.analysis.analyzer import DICT_STEMMERS, Analyzer
 from lucene_spark.util.smallfloat import NUM_FREE_VALUES
+from lucene_spark.util.sqllit import sql_lit
 
 DOC_KEY = ("conv_id", "turn_idx")
+
+# distinct conv_ids collected to place the conv_id range bounds: each bound
+# then lands within about 0.5% of the convs of its exact quantile, and the
+# sample stays a few MB on the driver
+BOUNDS_SAMPLE_SIZE = 100_000
+
+
+def conv_bounds(df: DataFrame, n: int) -> list:
+    """``n - 1`` conv_id bounds cutting ``df``'s conversations into ``n``
+    near-equal ranges ([] for an empty corpus).
+
+    The sample is the first ``BOUNDS_SAMPLE_SIZE`` distinct conv_ids in
+    ``(xxhash64(conv_id), conv_id)`` order: deterministic, size-bounded and
+    spread over the whole key range.  With fewer convs than ranges the
+    bounds repeat, which leaves some ranges empty."""
+    convs = sorted(
+        r.conv_id
+        for r in df.select("conv_id")
+        .distinct()
+        .orderBy(F.xxhash64("conv_id"), "conv_id")
+        .limit(BOUNDS_SAMPLE_SIZE)
+        .collect()
+    )
+    if not convs:
+        return []
+    return [convs[min(len(convs) - 1, len(convs) * i // n)] for i in range(1, n)]
+
+
+def term_stats_of(postings: DataFrame) -> DataFrame:
+    """Per-term dictionary stats of a postings relation:
+    (term, doc_freq, total_term_freq, max_freq, min_norm)."""
+    return postings.groupBy("term").agg(
+        F.count("*").alias("doc_freq"),
+        F.sum("freq").alias("total_term_freq"),
+        F.max("freq").alias("max_freq"),
+        F.min("norm").alias("min_norm"),
+    )
+
+
+def collection_stats(docs: DataFrame) -> dict:
+    """Global collection stats of a docs relation (one collect):
+    max_doc, doc_count (docs with >= 1 token), sum_total_term_freq."""
+    srow = docs.agg(
+        F.count("*").alias("max_doc"),
+        F.sum(F.when(F.col("length") > 0, 1).otherwise(0)).alias("doc_count"),
+        F.sum("length").alias("sttf"),
+    ).collect()[0]
+    return {
+        "max_doc": int(srow.max_doc or 0),
+        "doc_count": int(srow.doc_count or 0),
+        "sum_total_term_freq": int(srow.sttf or 0),
+    }
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -89,7 +144,6 @@ class InvertedIndex:
     postings: DataFrame
     term_stats: DataFrame
     stats: dict
-    segments: Optional[DataFrame] = None  # block-codec segment table (optional)
     packed: Optional[DataFrame] = None  # packed block-codec postings (segments.py)
     # slim scoring relation (term, doc_id, freq, norm) — cached separately so
     # term-query scans never deserialize the positions arrays
@@ -328,91 +382,50 @@ class IndexBuilder:
     def assign_doc_ids(self, df: DataFrame) -> DataFrame:
         """Dense doc_id = global rank over (conv_id, turn_idx).
 
-        Derived as a pure function of the DATA, never of a physical layout:
-        ``doc_id = conv_start(conv_id) + rank(turn_idx within conv)``.  The
-        only pinned artifact is the per-conversation start-offset relation
-        (one row per conv — corpus-small), computed with a scalable two-pass
-        cumulative sum at the CONV level (range-partition convs, per-partition
-        totals to the driver, window cumsum within partitions).  Everything
-        turn-level is deterministic lineage: a recompute of any postings/docs
-        block after cache eviction or executor loss re-derives byte-identical
-        doc_ids — there is no monotonically_increasing_id and no corpus-sized
-        staging cache to keep alive (round-3 ADVICE).  ≙ Lucene's
+        A pure function of the DATA and of two collected driver constants,
+        never of a physical layout: the conv_id range bounds
+        (:func:`conv_bounds`) and each range's turn count.  With
+        ``_r`` = the row's range (the number of bounds <= conv_id),
+        ``doc_id = offsets[_r] + row_number() over (partition by _r order by
+        conv_id, turn_idx) - 1``, where ``offsets`` are the prefix sums of
+        the per-range counts.  The ranges are contiguous in conv_id, so the
+        ids do not depend on where the bounds fall.  The plan has one
+        Exchange over the corpus (``repartitionById(_r)``, which also feeds
+        the window) and no join, checkpoint or staging cache: a recompute
+        of any docs/postings block after cache eviction or executor loss
+        re-derives byte-identical doc_ids (round-3 ADVICE).  Each partition
+        leaves in global doc_id order — contiguous sorted segments, like a
+        Lucene flush (index sorting, SURVEY §2.5).  ≙ Lucene's
         deterministic docID remap on merge (core/index/DocIDMerger.java:73-83).
 
         ``segment`` becomes ``floor(doc_id * n / total)``: contiguous,
-        balanced doc ranges — the same shape the old range-partition pid
-        produced, but reproducible.
+        balanced doc ranges, reproducible.
         """
         from pyspark.sql.window import Window
 
-        spark = df.sparkSession
-        n = self.num_segments or spark.sparkContext.defaultParallelism
-        # pass 1: per-conv turn counts (map-side combine; one row per conv)
-        conv_sorted = (
-            df.groupBy("conv_id")
-            .agg(F.count("*").alias("_cn"))
-            .repartitionByRange(n, "conv_id")
-            .withColumn("_pid", F.spark_partition_id())
-            .persist()
+        n = self.num_segments or df.sparkSession.sparkContext.defaultParallelism
+        bounds = conv_bounds(df, n)
+        n_ranges = len(bounds) + 1
+        # _r, the row's range: the number of bounds <= conv_id
+        bounds_lit = sql_lit(bounds, ArrayType(df.schema["conv_id"].dataType))
+        ranged = df.withColumn(
+            "_r", F.size(F.filter(bounds_lit, lambda b: b <= F.col("conv_id")))
         )
-        ptot = (
-            conv_sorted.groupBy("_pid")
-            .agg(F.sum("_cn").alias("_docs"), F.count("*").alias("_convs"))
-            .collect()
-        )
-        offsets, acc, n_convs = {}, 0, 0
-        for row in sorted(ptot, key=lambda r: r._pid):
-            offsets[int(row._pid)] = acc
-            acc += int(row._docs)
-            n_convs += int(row._convs)
-        total = acc
-        off_df = F.broadcast(
-            spark.createDataFrame(
-                sorted((p, o) for p, o in offsets.items()), "_pid int, _doff long"
-            )
-        )
-        cum = (
-            Window.partitionBy("_pid")
-            .orderBy("conv_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        # eager checkpoint pins the tiny conv->offset map (its own derivation
-        # used spark_partition_id, so IT must be frozen); after this, nothing
-        # in the build depends on a physical layout
-        conv_offsets = (
-            conv_sorted.join(off_df, "_pid")
-            .withColumn(
-                "_start", F.col("_doff") + F.coalesce(F.sum("_cn").over(cum), F.lit(0))
-            )
-            .select("conv_id", "_start")
-            .localCheckpoint(eager=True)
-        )
-        conv_sorted.unpersist()
-        # hand the checkpoint to build() for lifecycle release: its blocks
-        # stay pinned until nothing derives from them un-materialized
-        self._conv_offsets = conv_offsets
-        # pass 2: join offsets back, rank turns within each conv.  The
-        # repartitionByRange(conv_id) both feeds the window (range
-        # partitioning clusters equal conv_ids) and leaves the output in
-        # global doc_id order — contiguous sorted segments, like a Lucene
-        # flush (index sorting, SURVEY §2.5).
-        rank_w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        # the offsets relation is one slim row per conv: broadcast it below
-        # ~8M convs (a few hundred MB) so the corpus shuffles exactly once
-        # (the range exchange); above that, fall back to a shuffle join —
-        # the AQE-safe shape for billions of convs at 100 TB.  The explicit
-        # hint matters because the localCheckpoint leaf has no stats for AQE.
-        if n_convs <= 8_000_000:
-            conv_offsets = F.broadcast(conv_offsets)
-        out = (
-            df.join(conv_offsets, "conv_id")
-            .repartitionByRange(n, "conv_id")
+        counts = dict(ranged.groupBy("_r").count().collect())
+        offsets, total = [], 0
+        for r in range(n_ranges):
+            offsets.append(total)
+            total += counts.get(r, 0)
+        rank_w = Window.partitionBy("_r").orderBy("conv_id", "turn_idx")
+        return (
+            ranged.repartitionById(n_ranges, "_r")
             .withColumn(
                 "doc_id",
-                (F.col("_start") + F.row_number().over(rank_w) - F.lit(1)).cast(
-                    "long"
-                ),
+                (
+                    sql_lit(offsets, ArrayType(LongType()))[F.col("_r")]
+                    + F.row_number().over(rank_w)
+                    - F.lit(1)
+                ).cast("long"),
             )
             .withColumn(
                 "segment",
@@ -421,9 +434,8 @@ class IndexBuilder:
                     (F.col("doc_id") * n / F.lit(max(total, 1))).cast("int"),
                 ).cast("int"),
             )
-            .drop("_start")
+            .drop("_r")
         )
-        return out
 
     # -- dictionary-stage stemmers (porter + per-language light stems) ---
     @staticmethod
@@ -696,12 +708,6 @@ class IndexBuilder:
         # ≙ Lucene's docIDs being fixed at flush time
         # (index/DocumentsWriterPerThread.java).
         base = self._arrow_base(with_ids).localCheckpoint(eager=True)
-        # base's checkpoint truncated lineage, so the conv-offsets
-        # checkpoint behind doc_id is no longer referenced — free it now
-        co = getattr(self, "_conv_offsets", None)
-        if co is not None:
-            self._conv_offsets = None
-            _release_local_checkpoint(co)
         docs = base.select(
             "doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
             "length", "norm", "segment",
@@ -749,34 +755,14 @@ class IndexBuilder:
         docs = docs.persist()
         cached = cached + (docs, postings_slim)
 
-        term_stats = (
-            postings_slim.groupBy("term")
-            .agg(
-                F.count("*").alias("doc_freq"),
-                F.sum("freq").alias("total_term_freq"),
-                F.max("freq").alias("max_freq"),
-                F.min("norm").alias("min_norm"),
-            )
-            .persist()
-        )
+        term_stats = term_stats_of(postings_slim).persist()
         cached = cached + (term_stats,)
-
-        srow = docs.agg(
-            F.count("*").alias("max_doc"),
-            F.sum(F.when(F.col("length") > 0, 1).otherwise(0)).alias("doc_count"),
-            F.sum("length").alias("sttf"),
-        ).collect()[0]
-        stats = {
-            "max_doc": int(srow.max_doc),
-            "doc_count": int(srow.doc_count or 0),
-            "sum_total_term_freq": int(srow.sttf or 0),
-        }
         return InvertedIndex(
             spark=spark,
             docs=docs,
             postings=postings,
             term_stats=term_stats,
-            stats=stats,
+            stats=collection_stats(docs),
             postings_slim=postings_slim,
             k1=self.k1,
             b=self.b,

@@ -28,10 +28,13 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lucene_spark.index.builder import DOC_KEY, IndexBuilder, InvertedIndex
+from lucene_spark.index.builder import (
+    IndexBuilder,
+    InvertedIndex,
+    conv_bounds,
+    term_stats_of,
+)
 from lucene_spark.index.store import DEFAULT_BUCKETS, load_index, save_index
-
-PLAN_SAMPLES_PER_SHARD = 200
 
 
 class CheckpointedIndexBuilder:
@@ -78,38 +81,26 @@ class CheckpointedIndexBuilder:
     def plan(self, transcripts: DataFrame) -> dict:
         """Deterministic shard boundaries over conv_id (range sharding keeps
         (conv_id, turn_idx) order concatenative across shards, so global
-        doc_id = shard_offset + local doc_id).  Boundaries are sampled once
-        and FROZEN in plan.json — resume never re-samples."""
+        doc_id = shard_offset + local doc_id).  The bounds come from the
+        same sampler as the in-memory build's doc-id ranges
+        (``builder.conv_bounds``); they are sampled once and FROZEN in
+        plan.json — resume never re-samples."""
         if os.path.exists(self._plan_path()):
             with open(self._plan_path()) as f:
                 return json.load(f)
-        n = self.num_shards
-        # deterministic sample: sort before the cap so the boundary
-        # quantiles are stable (an unordered distinct().limit() could pick
-        # an arbitrary, skewed subset)
-        sample = (
-            transcripts.select("conv_id")
-            .distinct()
-            .orderBy("conv_id")
-            .limit(PLAN_SAMPLES_PER_SHARD * n * 50)
-            .collect()
-        )
-        convs = sorted(r.conv_id for r in sample)
-        if not convs:
-            # empty corpus: a single unbounded shard (no boundaries)
-            plan = {"num_shards": 1, "bounds": [], "version": 1}
-            with open(self._plan_path(), "w") as f:
-                json.dump(plan, f, indent=2)
-            return plan
-        bounds = []
-        for i in range(1, n):
-            bounds.append(convs[min(len(convs) - 1, (len(convs) * i) // n)])
-        plan = {"num_shards": n, "bounds": bounds, "version": 1}
+        bounds = conv_bounds(transcripts, self.num_shards)
+        # an empty corpus gets one unbounded shard (no bounds)
+        plan = {"num_shards": len(bounds) + 1, "bounds": bounds, "version": 1}
         with open(self._plan_path(), "w") as f:
             json.dump(plan, f, indent=2)
         return plan
 
     def _shard_filter(self, df: DataFrame, plan: dict, s: int) -> DataFrame:
+        # the rows assign_doc_ids puts in range s (bounds[s-1] <= conv_id <
+        # bounds[s]), written as plain comparisons: those reach the parquet
+        # scan as pushed filters (a conv_id-clustered input skips other
+        # shards' row groups); the builder's array-lambda range id is
+        # neither pushed down nor code-generated
         b = plan["bounds"]
         cond = F.lit(True)
         if s > 0:
@@ -188,12 +179,7 @@ class CheckpointedIndexBuilder:
             .withColumn("doc_id", F.col("doc_id") + F.col("_off"))
             .drop("_off", "shard")
         )
-        term_stats = postings.groupBy("term").agg(
-            F.count("*").alias("doc_freq"),
-            F.sum("freq").alias("total_term_freq"),
-            F.max("freq").alias("max_freq"),
-            F.min("norm").alias("min_norm"),
-        )
+        term_stats = term_stats_of(postings)
         stats = {
             "max_doc": acc,
             "doc_count": sum(m["doc_count"] for m in manifests),

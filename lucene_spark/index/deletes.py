@@ -29,7 +29,12 @@ from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lucene_spark.index.builder import DOC_KEY, InvertedIndex
+from lucene_spark.index.builder import (
+    DOC_KEY,
+    InvertedIndex,
+    collection_stats,
+    term_stats_of,
+)
 
 
 def tombstones_df(spark: SparkSession, keys) -> DataFrame:
@@ -64,7 +69,6 @@ def with_deletes(idx: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
         postings=postings,
         postings_slim=slim,
         packed=None,
-        segments=None,
         cached=(),
     )
     out.prefer_packed = False
@@ -77,27 +81,11 @@ def expunge(idx: InvertedIndex, tombstones: DataFrame) -> InvertedIndex:
     consistent index (doc_ids keep their values; density is not required
     by any reader invariant — gaps behave like a filtered segment)."""
     live = with_deletes(idx, tombstones)
-    term_stats = (
-        live.postings.groupBy("term")
-        .agg(
-            F.count("*").alias("doc_freq"),
-            F.sum("freq").alias("total_term_freq"),
-            F.max("freq").alias("max_freq"),
-            F.min("norm").alias("min_norm"),
-        )
+    return replace(
+        live,
+        term_stats=term_stats_of(live.postings),
+        stats=collection_stats(live.docs),
     )
-    srow = live.docs.agg(
-        F.count("*").alias("max_doc"),
-        F.sum(F.when(F.col("length") > 0, 1).otherwise(0)).alias("doc_count"),
-        F.sum("length").alias("sttf"),
-    ).collect()[0]
-    stats = {
-        "max_doc": int(srow.max_doc or 0),
-        "doc_count": int(srow.doc_count or 0),
-        "sum_total_term_freq": int(srow.sttf or 0),
-    }
-    out = replace(live, term_stats=term_stats, stats=stats)
-    return out
 
 
 def update_doc_values(idx: InvertedIndex, updates: DataFrame, col: str) -> InvertedIndex:

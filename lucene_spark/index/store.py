@@ -37,7 +37,7 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lucene_spark.index.builder import InvertedIndex
+from lucene_spark.index.builder import InvertedIndex, collection_stats, term_stats_of
 from lucene_spark.index.catalog import (
     DEFAULT_CATALOG,
     Catalog,
@@ -409,8 +409,6 @@ def split_index(
     ``doc_id %% n`` (no join) for the modulo modes, a broadcast semi-join
     of the part's doc ids for the predicate mode; then the same stats
     rebuild the one-shot builder runs."""
-    from lucene_spark.index.builder import InvertedIndex
-
     src = load_index(spark, src_path, catalog=catalog)
     n = len(out_paths)
     if predicate is not None:
@@ -440,27 +438,12 @@ def split_index(
             postings = src.postings.join(
                 F.broadcast(docs.select("doc_id")), "doc_id", "left_semi"
             )
-        term_stats = postings.groupBy("term").agg(
-            F.count("*").alias("doc_freq"),
-            F.sum("freq").alias("total_term_freq"),
-            F.max("freq").alias("max_freq"),
-            F.min("norm").alias("min_norm"),
-        )
-        srow = docs.agg(
-            F.count("*").alias("max_doc"),
-            F.sum(F.when(F.col("length") > 0, 1).otherwise(0)).alias("doc_count"),
-            F.sum("length").alias("sttf"),
-        ).collect()[0]
         part = InvertedIndex(
             spark=spark,
             docs=docs,
             postings=postings,
-            term_stats=term_stats,
-            stats={
-                "max_doc": int(srow.max_doc or 0),
-                "doc_count": int(srow.doc_count or 0),
-                "sum_total_term_freq": int(srow.sttf or 0),
-            },
+            term_stats=term_stats_of(postings),
+            stats=collection_stats(docs),
             k1=src.k1,
             b=src.b,
         )
@@ -490,8 +473,6 @@ def add_indexes(
     had been indexed together.  Plan shape: per-source projections + one
     union; the only aggregates are the term_stats/doc-stats rebuilds the
     one-shot builder runs anyway."""
-    from lucene_spark.index.builder import InvertedIndex
-
     srcs = [load_index(spark, p, catalog=catalog) for p in paths]
     if not srcs:
         raise ValueError("add_indexes: no source indexes given")
@@ -527,27 +508,12 @@ def add_indexes(
         docs = docs.unionByName(d)
         postings = postings.unionByName(p)
 
-    term_stats = postings.groupBy("term").agg(
-        F.count("*").alias("doc_freq"),
-        F.sum("freq").alias("total_term_freq"),
-        F.max("freq").alias("max_freq"),
-        F.min("norm").alias("min_norm"),
-    )
-    srow = docs.agg(
-        F.count("*").alias("max_doc"),
-        F.sum(F.when(F.col("length") > 0, 1).otherwise(0)).alias("doc_count"),
-        F.sum("length").alias("sttf"),
-    ).collect()[0]
     merged = InvertedIndex(
         spark=spark,
         docs=docs,
         postings=postings,
-        term_stats=term_stats,
-        stats={
-            "max_doc": int(srow.max_doc or 0),
-            "doc_count": int(srow.doc_count or 0),
-            "sum_total_term_freq": int(srow.sttf or 0),
-        },
+        term_stats=term_stats_of(postings),
+        stats=collection_stats(docs),
         k1=srcs[0].k1,
         b=srcs[0].b,
     )

@@ -38,7 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from lucene_spark.index.builder import IndexBuilder, InvertedIndex
+from lucene_spark.index.builder import IndexBuilder, InvertedIndex, term_stats_of
 from lucene_spark.index.store import DEFAULT_BUCKETS, load_index, save_index
 
 
@@ -267,12 +267,7 @@ class IncrementalIndexer:
         ]
         docs = spark.read.parquet(*d_paths)
         postings = spark.read.parquet(*p_paths)
-        term_stats = postings.groupBy("term").agg(
-            F.count("*").alias("doc_freq"),
-            F.sum("freq").alias("total_term_freq"),
-            F.max("freq").alias("max_freq"),
-            F.min("norm").alias("min_norm"),
-        )
+        term_stats = term_stats_of(postings)
         stats = {
             "max_doc": sum(m["n_docs"] for m in manifests),
             "doc_count": sum(m["doc_count"] for m in manifests),

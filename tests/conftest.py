@@ -1,5 +1,7 @@
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -77,3 +79,23 @@ def py4j_calls():
     finally:
         for cls, orig in saved:
             cls.send_command = orig
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` collects the ids of the Spark jobs
+    launched inside the block (read ``ids`` after it exits)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def collect():
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        ids = []
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return collect

@@ -74,3 +74,107 @@ def test_doc_ids_stable_across_recompute(spark, corpus_df):
     first = {(r.conv_id, r.turn_idx): r.doc_id for r in out.collect()}
     second = {(r.conv_id, r.turn_idx): r.doc_id for r in out.collect()}
     assert first == second
+
+
+# ---------------------------------------------------------------------------
+# edge inputs: empty corpus, fewer convs than segments, conv_ids that need
+# quoting in SQL text (the range bounds are rendered as literals)
+
+
+def _edge_rows(conv_ids, turns=3):
+    from datetime import datetime
+
+    return [
+        {
+            "conv_id": c,
+            "turn_idx": t,
+            "role": "user" if t % 2 == 0 else "assistant",
+            "text": f"turn {t} of {c}",
+            "tool": None,
+            "ts": datetime(2024, 1, 1, i, t),
+        }
+        for i, c in enumerate(conv_ids)
+        for t in range(turns)
+    ]
+
+
+EDGE_CORPORA = {
+    # id: (rows, num_segments)
+    "empty": ([], 4),
+    "fewer-convs-than-segments": (_edge_rows(["b", "a"]), 8),
+    "quote-backslash-non-ascii": (
+        _edge_rows(["it's", "back\\slash", "o'\\'q", "naïve", "日本語", "z\\"]),
+        4,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(EDGE_CORPORA))
+def test_doc_ids_edge_inputs_invariant_dense_ordered(spark, case):
+    from lucene_spark.fixtures import transcripts_df
+
+    rows, n_seg = EDGE_CORPORA[case]
+    df = transcripts_df(spark, rows=rows)
+    a = _ids(spark, df.repartition(1), n_seg)
+    b = _ids(spark, df.repartition(5, "role"), n_seg)
+    c = _ids(spark, df.orderBy(df.ts.desc()), n_seg)
+    assert a == b == c
+    assert sorted(a) == sorted((r["conv_id"], r["turn_idx"]) for r in rows)
+    # dense 0..N-1 in (conv_id, turn_idx) order (UTF-8 byte order, which is
+    # Python's code-point order), segments contiguous and in range
+    by_key = sorted(a.items())
+    assert [d for _, (d, _) in by_key] == list(range(len(rows)))
+    segs = [s for _, (_, s) in by_key]
+    assert segs == sorted(segs) and all(0 <= s < n_seg for s in segs)
+
+
+# ---------------------------------------------------------------------------
+# plan shape and job budgets: one Exchange over the corpus, nothing pinned
+
+
+def test_assign_doc_ids_plan_one_exchange_no_pinned_leaf(spark, corpus_df, tmp_path):
+    from lucene_spark.index import IndexBuilder
+
+    # a file-backed input, so any LogicalRDD leaf would be the builder's own
+    path = str(tmp_path / "corpus")
+    corpus_df.write.parquet(path)
+    out = IndexBuilder(num_segments=4).assign_doc_ids(spark.read.parquet(path))
+    out.collect()
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    names = [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+    assert "LogicalRDD" not in names, names
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    exchanges = [ln for ln in final.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, final
+
+
+def test_doc_id_and_build_job_budgets(spark, spark_jobs, tiny_corpus):
+    from lucene_spark.fixtures import transcripts_df
+    from lucene_spark.index import IndexBuilder
+
+    df = transcripts_df(spark, rows=tiny_corpus)
+    with spark_jobs() as ids:
+        IndexBuilder(num_segments=4).assign_doc_ids(df)
+    assert len(ids) <= 4, f"assign_doc_ids launched {len(ids)} Spark jobs"
+    with spark_jobs() as ids:
+        idx = IndexBuilder(num_segments=4).build(df)
+    assert len(ids) <= 9, f"build launched {len(ids)} Spark jobs"
+    idx.unpersist_all()
+
+
+def test_repeated_builds_release_every_cache(spark, tiny_corpus):
+    """build() + unpersist_all() leaves no persisted RDD behind, cycle after
+    cycle — repeated builds in one JVM (bench reps, NRT batches, checkpoint
+    shards) must not accumulate corpus-sized blocks."""
+    from lucene_spark.fixtures import transcripts_df
+    from lucene_spark.index import IndexBuilder
+
+    jsc = spark.sparkContext._jsc
+    df = transcripts_df(spark, rows=tiny_corpus)
+    for _ in range(2):
+        before = set(jsc.getPersistentRDDs().keySet())
+        idx = IndexBuilder(num_segments=4).build(df)
+        assert set(jsc.getPersistentRDDs().keySet()) - before
+        idx.unpersist_all()
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()

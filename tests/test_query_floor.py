@@ -20,8 +20,6 @@ relation that needs its own Spark job to broadcast.  These tests pin:
 
 import dataclasses
 import math
-import uuid
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -56,20 +54,6 @@ def stored_index(spark, tiny_index, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("floor") / "index")
     save_index(tiny_index, path)
     return load_index(spark, path)
-
-
-@contextmanager
-def _jobs(spark):
-    """Collect the ids of the Spark jobs launched inside the block."""
-    sc = spark.sparkContext
-    group = f"floor-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    ids = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _final_plan(df) -> str:
@@ -207,10 +191,10 @@ def test_duplicate_clause_terms(tiny_index, stored_index, tiny_oracle, case, pru
 # (c) a stored-index term query plans no weight relation
 
 
-def test_term_query_plan_has_no_weight_relation(spark, stored_index):
+def test_term_query_plan_has_no_weight_relation(spark_jobs, stored_index):
     s = IndexSearcher(stored_index)
     s.term_doc_freqs(["model"])  # the dictionary is loaded once per searcher
-    with _jobs(spark) as ids:
+    with spark_jobs() as ids:
         df = s.search(TermQuery("model"), 10)
         rows = df.collect()
     assert rows
@@ -240,11 +224,11 @@ JOB_BUDGETS = {
 
 
 @pytest.mark.parametrize("shape", list(JOB_BUDGETS))
-def test_query_job_budget(spark, stored_index, shape):
+def test_query_job_budget(spark_jobs, stored_index, shape):
     q, prune, budget = JOB_BUDGETS[shape]
     s = IndexSearcher(stored_index)
     s.term_doc_freqs(["model"])  # warm dictionary
-    with _jobs(spark) as ids:
+    with spark_jobs() as ids:
         df = s.search(q, 10, prune=prune)
         rows = df.collect()
     assert rows
@@ -382,7 +366,7 @@ def test_lowering_py4j_budget(stored_index, py4j_calls, text):
 # term dictionary cache states
 
 
-def test_empty_dictionary_lookup_launches_no_job(spark):
+def test_empty_dictionary_lookup_launches_no_job(spark, spark_jobs):
     from lucene_spark.fixtures.transcripts import transcripts_df
     from lucene_spark.index import IndexBuilder
 
@@ -391,20 +375,20 @@ def test_empty_dictionary_lookup_launches_no_job(spark):
         rows=[{"conv_id": "c0", "turn_idx": 0, "role": "user", "text": "", "tool": "", "ts": None}],
     )
     s = IndexSearcher(IndexBuilder(num_segments=1).build(df))
-    with _jobs(spark) as first:
+    with spark_jobs() as first:
         assert s.term_doc_freqs(["x"]) == {}
     assert first, "the first lookup loads the dictionary"
-    with _jobs(spark) as later:
+    with spark_jobs() as later:
         for _ in range(3):
             assert s.term_doc_freqs(["x", "y"]) == {}
     assert later == []
 
 
-def test_dictionary_over_cap_scans_per_query(spark, tiny_index):
+def test_dictionary_over_cap_scans_per_query(spark_jobs, tiny_index):
     terms = ["model", "data", "zzz-missing"]
     cached = IndexSearcher(tiny_index).term_doc_freqs(terms)
     s = IndexSearcher(tiny_index, term_cache_max=1)
     assert s.term_doc_freqs(terms) == cached
-    with _jobs(spark) as ids:
+    with spark_jobs() as ids:
         assert s.term_doc_freqs(terms) == cached
     assert ids, "over the cap every lookup scans term_stats"

@@ -118,6 +118,26 @@ def test_checkpoint_build_is_idempotent(spark, tiny_corpus, tmp_path_factory):
     assert idx2.docs.count() == n1
 
 
+def test_checkpoint_plan_shards_balanced_when_sampled(spark, tmp_path, monkeypatch):
+    """The plan's bounds come from a sample spread over the whole conv_id
+    range, not from the smallest conv_ids: with a sample a quarter of the
+    corpus, every shard still holds within 2x the mean conv count."""
+    from lucene_spark.fixtures import generate_transcripts, transcripts_df
+    from lucene_spark.index import builder
+
+    monkeypatch.setattr(builder, "BOUNDS_SAMPLE_SIZE", 150)
+    df = transcripts_df(spark, rows=generate_transcripts(n_convs=600, seed=3))
+    b = CheckpointedIndexBuilder(str(tmp_path / "plan"), num_shards=3)
+    plan = b.plan(df)
+    assert plan["num_shards"] == 3 and len(plan["bounds"]) == 2
+    sizes = [
+        b._shard_filter(df, plan, s).select("conv_id").distinct().count()
+        for s in range(3)
+    ]
+    assert sum(sizes) == 600
+    assert max(sizes) <= 2 * 600 / 3 and min(sizes) >= 600 / 3 / 2, sizes
+
+
 def test_term_vectors_roundtrip(spark, tiny_index, tmp_path):
     """save_index(term_vectors=True): the doc-major tvecs relation loads
     back, per-doc fetch equals the postings filter, and the scan pushes a
