@@ -35,7 +35,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from lucene_spark.analysis.analyzer import DICT_STEMMERS, Analyzer
 from lucene_spark.util.smallfloat import NUM_FREE_VALUES
-from lucene_spark.util.sqllit import sql_lit
+from lucene_spark.util.sqllit import sql_lit, sql_text
 
 DOC_KEY = ("conv_id", "turn_idx")
 
@@ -169,6 +169,10 @@ class InvertedIndex:
     has_positions: bool = True
     # every DataFrame this index persisted (released by unpersist_all)
     cached: tuple = ()
+    # True when ``postings`` is already materialized, so positional lookups
+    # scan it as it is: the parquet files of an ``open_index`` reader, or a
+    # derived relation once postings_for_terms has persisted it
+    postings_materialized = False
 
     def unpersist_all(self) -> None:
         for df in self.cached:
@@ -256,13 +260,13 @@ class InvertedIndex:
             return unpack_postings(pk, with_positions=with_positions)
         if not with_positions and self.postings_slim is not None:
             return self.postings_slim.filter(F.col("term").isin(terms))
-        # positions path on an in-memory index: cache the positions relation
-        # on first use — phrase plans self-join it per term, and an uncached
-        # derivation would re-run the whole tokenize+invert per join side
-        if not getattr(self, "_positions_cached", False):
+        # positions path on a derived index (a build, a with_deletes view):
+        # cache the positions relation on first use — phrase plans self-join
+        # it per term, and an uncached one re-derives it per join side
+        if not self.postings_materialized:
             self.postings = self.postings.persist()
             self.cached = self.cached + (self.postings,)
-            self._positions_cached = True
+            self.postings_materialized = True
         return self.postings.filter(F.col("term").isin(terms))
 
     def check(self) -> dict:
@@ -406,10 +410,18 @@ class IndexBuilder:
         n = self.num_segments or df.sparkSession.sparkContext.defaultParallelism
         bounds = conv_bounds(df, n)
         n_ranges = len(bounds) + 1
-        # _r, the row's range: the number of bounds <= conv_id
-        bounds_lit = sql_lit(bounds, ArrayType(df.schema["conv_id"].dataType))
+        # _r, the row's range: the number of bounds <= conv_id, as a sum of
+        # typed comparisons that whole-stage codegen compiles (an array
+        # lambda would run interpreted, per corpus row)
+        conv_t = df.schema["conv_id"].dataType
         ranged = df.withColumn(
-            "_r", F.size(F.filter(bounds_lit, lambda b: b <= F.col("conv_id")))
+            "_r",
+            F.expr(
+                " + ".join(
+                    f"CAST(conv_id >= {sql_text(b, conv_t)} AS INT)" for b in bounds
+                )
+                or "0"
+            ),
         )
         counts = dict(ranged.groupBy("_r").count().collect())
         offsets, total = [], 0

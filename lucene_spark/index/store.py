@@ -36,6 +36,7 @@ import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from lucene_spark.index.builder import InvertedIndex, collection_stats, term_stats_of
 from lucene_spark.index.catalog import (
@@ -61,6 +62,28 @@ def _bucket_col(col, n_buckets: int):
     return F.pmod(F.crc32(F.encode(col, "utf-8")), F.lit(n_buckets)).cast("int")
 
 
+def write_family(df: DataFrame, path: str, partition_by: str | None = None) -> str:
+    """Write ``df`` as a parquet family at ``path`` and return its schema as
+    a DDL string, for the commit that names the family (see
+    :func:`read_family`)."""
+    w = df.write.mode("overwrite")
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+    # as a reader sees it: parquet reads every column back as nullable
+    return StructType([StructField(f.name, f.dataType) for f in df.schema]).toDDL()
+
+
+def read_family(spark: SparkSession, paths: list, ddl: str | None) -> DataFrame:
+    """The parquet family at ``paths``, read with the schema its commit
+    recorded: no Spark job, where inferring the schema from the parquet
+    footers runs one (≙ FieldInfos read from the segment's metadata, not
+    from its postings).  ``ddl`` is None for a family committed before
+    schemas were recorded; that one is still read through inference."""
+    reader = spark.read if ddl is None else spark.read.schema(ddl)
+    return reader.parquet(*paths)
+
+
 def _write_families(
     idx: InvertedIndex,
     data_path: str,
@@ -68,9 +91,9 @@ def _write_families(
     chunk_bits: int | None,
     term_vectors: bool,
 ) -> dict:
-    """Write the four parquet families under ``data_path`` and return the
-    commit payload describing them (shared by the single-commit and the
-    snapshot write paths)."""
+    """Write the parquet families under ``data_path`` and return the commit
+    payload describing them, each family's schema included (shared by the
+    single-commit and the snapshot write paths)."""
     from lucene_spark.index.segments import DEFAULT_CHUNK_BITS
 
     if "payloads" in idx.postings.columns:
@@ -92,39 +115,38 @@ def _write_families(
     chunk_bits = chunk_bits or DEFAULT_CHUNK_BITS
     idx.with_packed(chunk_bits=chunk_bits, cache=False)
 
-    (
-        idx.packed.withColumn("bucket", _bucket_col(F.col("term"), n_buckets))
-        .repartition("bucket")
-        .sortWithinPartitions("term", "chunk")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(os.path.join(data_path, "postings"))
-    )
-    (
-        idx.docs.repartitionByRange(max(idx.docs.rdd.getNumPartitions(), 1), "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(data_path, "docs"))
-    )
-    (
-        idx.term_stats.withColumn("bucket", _bucket_col(F.col("term"), n_buckets))
-        .repartition("bucket")
-        .sortWithinPartitions("term")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(os.path.join(data_path, "term_stats"))
-    )
+    schemas = {
+        "postings": write_family(
+            idx.packed.withColumn("bucket", _bucket_col(F.col("term"), n_buckets))
+            .repartition("bucket")
+            .sortWithinPartitions("term", "chunk"),
+            os.path.join(data_path, "postings"),
+            partition_by="bucket",
+        ),
+        "docs": write_family(
+            idx.docs.repartitionByRange(
+                max(idx.docs.rdd.getNumPartitions(), 1), "doc_id"
+            ).sortWithinPartitions("doc_id"),
+            os.path.join(data_path, "docs"),
+        ),
+        "term_stats": write_family(
+            idx.term_stats.withColumn("bucket", _bucket_col(F.col("term"), n_buckets))
+            .repartition("bucket")
+            .sortWithinPartitions("term"),
+            os.path.join(data_path, "term_stats"),
+            partition_by="bucket",
+        ),
+    }
     if term_vectors:
         # doc-major copy of the postings (term/freq/positions), range-
         # partitioned + sorted by doc_id -> a per-doc fetch prunes to one
         # row group (≙ .tvx/.tvd — Lucene90TermVectorsFormat)
         n = max(idx.postings.rdd.getNumPartitions(), 1)
-        (
+        schemas["tvecs"] = write_family(
             idx.postings.select("term", "doc_id", "freq", "positions")
             .repartitionByRange(n, "doc_id")
-            .sortWithinPartitions("doc_id", "term")
-            .write.mode("overwrite")
-            .parquet(os.path.join(data_path, "tvecs"))
+            .sortWithinPartitions("doc_id", "term"),
+            os.path.join(data_path, "tvecs"),
         )
     return {
         "stats": idx.stats,
@@ -134,6 +156,7 @@ def _write_families(
         "chunk_bits": chunk_bits,
         "analyzer": idx.analyzer.to_json() if idx.analyzer else None,
         "term_vectors": term_vectors,
+        "schemas": schemas,
     }
 
 
@@ -327,6 +350,10 @@ def load_index(
     (``DirectoryReader.open(IndexCommit)``, Iceberg read-at-snapshot-id).
     ``tag`` resolves a named ref instead (Iceberg ``VERSION AS OF 'tag'``).
 
+    Each family is read with the schema the commit recorded, so the open
+    launches no Spark job (a commit written before schemas were recorded
+    still opens, inferring them from the parquet footers).
+
     The logical ``postings`` view is reconstructed lazily by decoding the
     packed table; term-filtered queries hit the packed table directly with
     bucket pushdown (see LoadedIndex.packed_for_terms)."""
@@ -351,9 +378,14 @@ def load_index(
         data = catalog.data_location(path, commit["data"])
     elif snapshot_id is not None:
         raise ValueError("snapshot_id requires a snapshot-mode table (v2)")
-    packed = spark.read.parquet(os.path.join(data, "postings"))
-    docs = spark.read.parquet(os.path.join(data, "docs"))
-    term_stats = spark.read.parquet(os.path.join(data, "term_stats"))
+    schemas = commit.get("schemas", {})
+
+    def family(name: str) -> DataFrame:
+        return read_family(spark, [os.path.join(data, name)], schemas.get(name))
+
+    packed = family("postings")
+    docs = family("docs")
+    term_stats = family("term_stats")
 
     from lucene_spark.index.segments import unpack_postings
 
@@ -374,7 +406,7 @@ def load_index(
 
     idx.analyzer = Analyzer.from_json(commit.get("analyzer"))
     if commit.get("term_vectors"):
-        idx.term_vectors = spark.read.parquet(os.path.join(data, "tvecs"))
+        idx.term_vectors = family("tvecs")
     idx.prefer_packed = True
     return idx
 

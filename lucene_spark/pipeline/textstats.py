@@ -662,9 +662,9 @@ def duplicated_ngram_spans(
     (intra- or cross-document).
 
     Returns (doc_id, spans array<struct<start,end>>, n_dup_tokens,
-    n_tokens).  ``skip_canonical=True`` exempts, per k-gram, the doc with
-    the smallest doc_id holding it — the keep-one-copy convention the
-    removal operator uses.
+    n_tokens).  ``skip_canonical=True`` exempts, per k-gram, every
+    occurrence in the doc with the smallest doc_id holding it; the removal
+    operator protects only the first of them.
 
     100 TB shape: gram occurrences reduce to (doc_id, p, h60) — gram
     strings never shuffle; stats are ONE hash agg per gram hash; the
@@ -752,31 +752,31 @@ def remove_duplicated_ngrams(
     docs: DataFrame, k: int = 8, text_col: str = "text"
 ) -> DataFrame:
     """Keep-one-copy exact-substring removal: a token is dropped when it
-    is covered by a duplicated k-window whose canonical holder (smallest
-    doc_id containing that exact gram) is another doc — UNLESS some
-    covering duplicated window is canonical HERE, which protects this
-    doc's copy (without the protection rule, overlapping gram clusters
-    with different canonical docs could destroy every copy of a
-    substring).  Docs with nothing to remove keep their ORIGINAL text
+    is covered by a duplicated k-window that is not the gram's canonical
+    occurrence (the first one: smallest doc_id, then smallest start
+    position) — UNLESS some covering duplicated window is canonical, which
+    protects that copy (without the protection rule, overlapping gram
+    clusters with different canonical docs could destroy every copy of a
+    substring).  A gram repeated inside its canonical doc keeps only its
+    first copy there.  Docs with nothing to remove keep their ORIGINAL text
     verbatim; rewritten docs are rebuilt from the surviving normalized
     tokens (space-joined — token-level surgery cannot preserve the raw
     punctuation around removed spans)."""
     g = _gram_starts(docs, k, text_col)
     st = g.groupBy("h").agg(
-        F.count("*").alias("_cnt"), F.min("doc_id").alias("_mk")
+        F.count("*").alias("_cnt"), F.min(F.struct("doc_id", "p")).alias("_mk")
     )
     dup = g.join(st, "h").filter(F.col("_cnt") >= 2)
+    canonical = (F.col("_mk.doc_id") == F.col("doc_id")) & (
+        F.col("_mk.p") == F.col("p")
+    )
     per_doc = dup.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_set(
-                F.when(F.col("_mk") != F.col("doc_id"), F.col("p"))
-            )
-        ).alias("_drop_ps"),
-        F.array_sort(
-            F.collect_set(
-                F.when(F.col("_mk") == F.col("doc_id"), F.col("p"))
-            )
-        ).alias("_keep_ps"),
+        F.array_sort(F.collect_set(F.when(~canonical, F.col("p")))).alias(
+            "_drop_ps"
+        ),
+        F.array_sort(F.collect_set(F.when(canonical, F.col("p")))).alias(
+            "_keep_ps"
+        ),
     )
     toks = tokens(F.col(text_col))
     joined = docs.select(

@@ -397,9 +397,15 @@ class IndexSearcher:
         if not terms:
             return {}
         if self._term_cache is None:
-            n = self.index.term_stats.count()
-            if n <= self.term_cache_max:
-                rows = self.index.term_stats.select("term", "doc_freq").collect()
+            # one bounded action: a dictionary over the cap shows itself by
+            # returning term_cache_max + 1 rows
+            cap = self.term_cache_max
+            rows = (
+                self.index.term_stats.select("term", "doc_freq")
+                .limit(cap + 1)
+                .collect()
+            )
+            if len(rows) <= cap:
                 self._term_cache = {r.term: int(r.doc_freq) for r in rows}
             else:
                 self._term_cache = self._SCAN_PER_QUERY

@@ -15,7 +15,9 @@ into immutable segments and a reopened reader sees the union of segments
 * ``open_index()`` = reader reopen: segments store ABSOLUTE doc_ids, so a
   reopen is ONE multi-path parquet read per family — the plan node count is
   flat in the number of segments (a FileScan over N root paths, not an
-  N-way union);
+  N-way union).  Each segment manifest records its families' schemas
+  (≙ FieldInfos in the segment metadata), so the reopen reads with them
+  and launches no Spark job: no parquet footer is read for inference;
 * ``maybe_merge()`` = TieredMergePolicy (core/index/TieredMergePolicy.java:
   78 segsPerTier=10, :318 findMerges size-tiering, :394-401 allowed-segment
   budget): when the live segment count exceeds the tier budget, the
@@ -39,7 +41,15 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lucene_spark.index.builder import IndexBuilder, InvertedIndex, term_stats_of
-from lucene_spark.index.store import DEFAULT_BUCKETS, load_index, save_index
+from lucene_spark.index.store import (
+    DEFAULT_BUCKETS,
+    load_index,
+    read_family,
+    save_index,
+    write_family,
+)
+
+FAMILIES = ("docs", "postings")
 
 
 class TieredMergePolicy:
@@ -134,6 +144,16 @@ class IncrementalIndexer:
         out.sort(key=lambda m: m["seq"])
         return out
 
+    def _family(self, spark: SparkSession, manifests: list[dict], fam: str) -> DataFrame:
+        """One parquet relation over ``fam`` of every segment in
+        ``manifests``, read with the schema they all record (inferred when a
+        segment committed before schemas were recorded, or when the
+        segments disagree)."""
+        seg_root = os.path.join(self.dir, "segments")
+        paths = [os.path.join(seg_root, f"seg-{m['seq']:06d}", fam) for m in manifests]
+        ddls = {m.get("schemas", {}).get(fam) for m in manifests}
+        return read_family(spark, paths, ddls.pop() if len(ddls) == 1 else None)
+
     def _batch_ids(self, m: dict) -> set:
         if m.get("batch_ids") is not None:
             return set(m["batch_ids"])
@@ -160,12 +180,13 @@ class IncrementalIndexer:
         ).build(batch_df)
         off = F.lit(offset).cast("long")
         seg = os.path.join(self.dir, "segments", f"seg-{seq:06d}")
-        idx.docs.withColumn("doc_id", F.col("doc_id") + off).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(seg, "docs"))
-        idx.postings.withColumn("doc_id", F.col("doc_id") + off).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(seg, "postings"))
+        schemas = {
+            fam: write_family(
+                getattr(idx, fam).withColumn("doc_id", F.col("doc_id") + off),
+                os.path.join(seg, fam),
+            )
+            for fam in FAMILIES
+        }
         n_postings = idx.postings.count()
         dt = time.time() - t0
         idx.unpersist_all()
@@ -179,6 +200,7 @@ class IncrementalIndexer:
             "sum_total_term_freq": idx.stats["sum_total_term_freq"],
             "n_postings": n_postings,
             "build_sec": round(dt, 3),
+            "schemas": schemas,
         }
         with open(
             os.path.join(self.dir, "segments", f"seg-{seq:06d}.manifest.json"), "w"
@@ -206,13 +228,12 @@ class IncrementalIndexer:
         seg_root = os.path.join(self.dir, "segments")
         out_seg = os.path.join(seg_root, f"seg-{seq:06d}")
         t0 = time.time()
-        for fam in ("docs", "postings"):
-            paths = [
-                os.path.join(seg_root, f"seg-{m['seq']:06d}", fam) for m in members
-            ]
-            spark.read.parquet(*paths).write.mode("overwrite").parquet(
-                os.path.join(out_seg, fam)
+        schemas = {
+            fam: write_family(
+                self._family(spark, members, fam), os.path.join(out_seg, fam)
             )
+            for fam in FAMILIES
+        }
         batch_ids = sorted(set().union(*[self._batch_ids(m) for m in members]))
         manifest = {
             "seq": seq,
@@ -225,6 +246,7 @@ class IncrementalIndexer:
             "n_postings": sum(m["n_postings"] for m in members),
             "build_sec": round(time.time() - t0, 3),
             "replaces": sorted(m["seq"] for m in members),
+            "schemas": schemas,
         }
         with open(os.path.join(seg_root, f"seg-{seq:06d}.manifest.json"), "w") as f:
             json.dump(manifest, f, indent=2)
@@ -253,27 +275,24 @@ class IncrementalIndexer:
 
         Segments carry absolute doc_ids, so the reopen is ONE multi-path
         parquet relation per family: the physical plan has a single
-        FileScan node regardless of segment count."""
+        FileScan node regardless of segment count.  The relations are read
+        with the schemas the manifests record, so the reopen launches no
+        Spark job, and the postings are scanned from their files by every
+        query (the reader persists nothing).  Collection stats are the sums
+        of the manifests'; the term dictionary is an aggregate over the
+        postings, computed when a searcher first needs it."""
         manifests = self._manifests()
         if not manifests:
             raise ValueError("no committed segments yet")
-        seg_root = os.path.join(self.dir, "segments")
-        d_paths = [
-            os.path.join(seg_root, f"seg-{m['seq']:06d}", "docs") for m in manifests
-        ]
-        p_paths = [
-            os.path.join(seg_root, f"seg-{m['seq']:06d}", "postings")
-            for m in manifests
-        ]
-        docs = spark.read.parquet(*d_paths)
-        postings = spark.read.parquet(*p_paths)
+        docs = self._family(spark, manifests, "docs")
+        postings = self._family(spark, manifests, "postings")
         term_stats = term_stats_of(postings)
         stats = {
             "max_doc": sum(m["n_docs"] for m in manifests),
             "doc_count": sum(m["doc_count"] for m in manifests),
             "sum_total_term_freq": sum(m["sum_total_term_freq"] for m in manifests),
         }
-        return InvertedIndex(
+        idx = InvertedIndex(
             spark=spark,
             docs=docs,
             postings=postings,
@@ -282,6 +301,8 @@ class IncrementalIndexer:
             k1=self.k1,
             b=self.b,
         )
+        idx.postings_materialized = True
+        return idx
 
     # -- forceMerge ------------------------------------------------------
     def compact(

@@ -44,7 +44,7 @@ def _float_sql(x: float) -> str:
     return f"CAST('{text}' AS DOUBLE)"
 
 
-def _sql(value, dt: DataType) -> str:
+def sql_text(value, dt: DataType) -> str:
     """SQL text of ``value`` as a literal of type ``dt``."""
     t = dt.simpleString()
     if value is None:
@@ -56,11 +56,11 @@ def _sql(value, dt: DataType) -> str:
     if isinstance(dt, StringType):
         return f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
     if isinstance(dt, ArrayType):
-        items = ", ".join(_sql(v, dt.elementType) for v in value)
+        items = ", ".join(sql_text(v, dt.elementType) for v in value)
         return f"array({items})" if len(value) else f"CAST(array() AS {t})"
     if isinstance(dt, MapType):
         items = ", ".join(
-            f"{_sql(k, dt.keyType)}, {_sql(v, dt.valueType)}"
+            f"{sql_text(k, dt.keyType)}, {sql_text(v, dt.valueType)}"
             for k, v in value.items()
         )
         return f"map({items})" if value else f"CAST(map() AS {t})"
@@ -68,7 +68,7 @@ def _sql(value, dt: DataType) -> str:
         if len(value) != len(dt.fields):
             raise ValueError(f"{len(value)} values for {t}")
         items = ", ".join(
-            f"'{f.name}', {_sql(v, f.dataType)}" for f, v in zip(dt.fields, value)
+            f"'{f.name}', {sql_text(v, f.dataType)}" for f, v in zip(dt.fields, value)
         )
         return f"named_struct({items})"
     raise TypeError(f"no SQL literal rendering for {t}")
@@ -81,4 +81,4 @@ def sql_lit(value, dt: DataType) -> Column:
     struct of them.
     Arrays take a sequence, maps a dict and structs a tuple in field order;
     ``None`` anywhere is a typed NULL."""
-    return F.expr(_sql(value, dt))
+    return F.expr(sql_text(value, dt))

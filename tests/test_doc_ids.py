@@ -149,6 +149,24 @@ def test_assign_doc_ids_plan_one_exchange_no_pinned_leaf(spark, corpus_df, tmp_p
     assert len(exchanges) == 1, final
 
 
+def test_doc_id_range_runs_in_generated_code(spark, corpus_df, tmp_path):
+    """The range column ``_r`` is a sum of typed comparisons: no lambda
+    ``filter`` is left in the plan, and its projection sits inside a
+    whole-stage-codegen stage (printed ``*(n)``)."""
+    from lucene_spark.index import IndexBuilder
+
+    path = str(tmp_path / "corpus")
+    corpus_df.write.parquet(path)
+    out = IndexBuilder(num_segments=4).assign_doc_ids(spark.read.parquet(path))
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "lambdafunction" not in final and "filter(" not in final, final
+    r_proj = [ln for ln in final.splitlines() if " AS _r#" in ln]
+    assert r_proj, final
+    assert all(ln.lstrip(" +-:").startswith("*(") for ln in r_proj), r_proj
+
+
 def test_doc_id_and_build_job_budgets(spark, spark_jobs, tiny_corpus):
     from lucene_spark.fixtures import transcripts_df
     from lucene_spark.index import IndexBuilder

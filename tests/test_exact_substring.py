@@ -61,7 +61,8 @@ def test_remove_duplicated(spark, docs):
     assert out[0] == "a b c d e f g h i j"   # canonical copy survives
     assert out[1] == "z z q"                  # duplicated span removed
     assert out[2] == "totally unique words only here now"
-    assert out[3] == docs.filter("doc_id = 3").collect()[0].text.lower()
+    # intra-doc repeat: the first copy is canonical, the second is dropped
+    assert out[3] == "p q r s t u v w x"
 
 
 def test_short_docs_no_grams(spark):
@@ -100,3 +101,16 @@ def test_remove_preserves_original_text_when_untouched(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = remove_duplicated_ngrams(docs, k=8).collect()[0].text
     assert out == "Hello, World! unique@text.example HERE"
+
+
+def test_remove_keeps_only_first_copy_in_canonical_doc(spark):
+    """A k-gram twice in doc 0 and once in doc 1 survives exactly once: in
+    doc 0, at its first position."""
+    from lucene_spark.pipeline.textstats import remove_duplicated_ngrams
+
+    rows = [(0, "a b c x a b c y"), (1, "q a b c r")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {
+        r.doc_id: r.text for r in remove_duplicated_ngrams(docs, k=3).collect()
+    }
+    assert out == {0: "a b c x y", 1: "q r"}
