@@ -31,11 +31,12 @@ from dataclasses import dataclass, field, replace as dc_replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StringType
 
 from lucene_spark.analysis.analyzer import DICT_STEMMERS, Analyzer
 from lucene_spark.util.smallfloat import NUM_FREE_VALUES
-from lucene_spark.util.sqllit import sql_lit, sql_text
+from lucene_spark.util.sqllit import in_sql, sql_lit, sql_text
+from lucene_spark.util.sqlrel import Rel
 
 DOC_KEY = ("conv_id", "turn_idx")
 
@@ -227,17 +228,19 @@ class InvertedIndex:
             "term", "freq", "positions"
         )
 
-    def bucket_filter(self, df: DataFrame, terms) -> DataFrame:
-        """Partition pruning for term lookups on a bucketed stored table
-        (≙ the term-dictionary seek; store.py layout)."""
+    def term_rel(self, df: DataFrame, terms) -> Rel:
+        """``df``'s rows for ``terms``, partition-pruned on a bucketed stored
+        table (≙ the term-dictionary seek; store.py layout)."""
+        preds = []
         if self.n_buckets and "bucket" in df.columns:
             from lucene_spark.index.store import term_bucket
 
             buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-            return df.filter(F.col("bucket").isin(buckets))
-        return df
+            preds.append(in_sql("bucket", buckets, IntegerType()))
+        preds.append(in_sql("term", terms, StringType()))
+        return Rel.of(df).query("*", "WHERE " + " AND ".join(preds))
 
-    def postings_for_terms(self, terms, with_positions: bool = False) -> DataFrame:
+    def postings_rel(self, terms, with_positions: bool = False) -> Rel:
         """Postings rows for an explicit term set, via the cheapest access
         path: the in-memory logical relation when this index was just built,
         or packed-scan -> decode (with bucket + term pushdown *before* the
@@ -252,14 +255,11 @@ class InvertedIndex:
                 "(term_freq_delimiter): no positions were indexed"
             )
         if self.packed is not None and self.prefer_packed:
-            from lucene_spark.index.segments import unpack_postings
+            from lucene_spark.index.segments import unpack_rel
 
-            pk = self.bucket_filter(self.packed, terms).filter(
-                F.col("term").isin(terms)
-            )
-            return unpack_postings(pk, with_positions=with_positions)
+            return unpack_rel(self.term_rel(self.packed, terms), self.spark, with_positions)
         if not with_positions and self.postings_slim is not None:
-            return self.postings_slim.filter(F.col("term").isin(terms))
+            return self.term_rel(self.postings_slim, terms)
         # positions path on a derived index (a build, a with_deletes view):
         # cache the positions relation on first use — phrase plans self-join
         # it per term, and an uncached one re-derives it per join side
@@ -267,7 +267,11 @@ class InvertedIndex:
             self.postings = self.postings.persist()
             self.cached = self.cached + (self.postings,)
             self.postings_materialized = True
-        return self.postings.filter(F.col("term").isin(terms))
+        return self.term_rel(self.postings, terms)
+
+    def postings_for_terms(self, terms, with_positions: bool = False) -> DataFrame:
+        """:meth:`postings_rel` as a DataFrame."""
+        return self.postings_rel(terms, with_positions).df(self.spark)
 
     def check(self) -> dict:
         """CheckIndex-style invariants (FIXTURES.md §6, CheckIndex.java:526).

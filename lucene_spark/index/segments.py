@@ -30,6 +30,8 @@ payload (and land in parquet min/max stats for scan-level pruning).
 
 from __future__ import annotations
 
+from itertools import repeat
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -44,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from lucene_spark.index.codec import decode_posting_list, encode_posting_lists_batch
+from lucene_spark.util.sqlrel import Rel, sql_udf
 
 DEFAULT_CHUNK_BITS = 14  # 16384-doc ranges; a head-term chunk <= 16384 postings
 
@@ -184,59 +187,54 @@ _DEC_POS_TYPE = StructType(
 )
 
 
+def _decode_batch(docs_enc, freqs_enc, norms_enc, pos_enc=None) -> pd.DataFrame:
+    with_positions = pos_enc is not None
+    out = {"doc_ids": [], "freqs": [], "norms": []} | ({"poss": []} if with_positions else {})
+    for d, f, m, p in zip(docs_enc, freqs_enc, norms_enc, pos_enc if with_positions else repeat(None)):
+        doc_ids, freqs, norms, *pos = decode_posting_list(
+            bytes(d), bytes(f), bytes(m), pos_enc=bytes(p) if with_positions else None
+        )
+        out["doc_ids"].append(doc_ids)
+        out["freqs"].append(freqs.astype(np.int32))
+        out["norms"].append(norms.astype(np.int32))
+        if with_positions:
+            out["poss"].append([pp.astype(np.int32) for pp in pos[0]])
+    return pd.DataFrame(out)
+
+
+def _unpack_udf(with_positions: bool):
+    @F.pandas_udf(_DEC_POS_TYPE if with_positions else _DEC_TYPE)
+    def dec_udf(*encoded: pd.Series) -> pd.DataFrame:
+        return _decode_batch(*encoded)
+
+    return dec_udf
+
+
+def unpack_rel(packed: Rel, spark, with_positions: bool = False) -> Rel:
+    """:func:`unpack_postings` over a relation in SQL text."""
+    udf = sql_udf(
+        spark,
+        "ls_unpack_positions" if with_positions else "ls_unpack_postings",
+        lambda: _unpack_udf(with_positions),
+    )
+    fields = ["doc_ids", "freqs", "norms"] + (["poss"] if with_positions else [])
+    names = ["doc_id", "freq", "norm"] + (["positions"] if with_positions else [])
+    args = "docs_enc, freqs_enc, norms_enc" + (", pos_enc" if with_positions else "")
+    zipped = ", ".join(f"_dec.{c}" for c in fields)
+    return (
+        packed.query(f"term, {udf}({args}) AS _dec")
+        .query(f"term, explode(arrays_zip({zipped})) AS z")
+        .query("term, " + ", ".join(f"z.{c} AS {n}" for c, n in zip(fields, names)))
+    )
+
+
 def unpack_postings(packed: DataFrame, with_positions: bool = False) -> DataFrame:
     """Packed blocks -> logical postings (term, doc_id, freq, norm[, positions]).
 
     The decode runs as an Arrow-batched pandas UDF producing whole arrays per
     chunk; the explode back to rows stays JVM-side (arrays_zip + explode).
+    The plan is rendered as SQL text and parsed in one call, and the UDF is
+    registered once per session and called by name (``util/sqlrel.py``).
     """
-    if with_positions:
-
-        @F.pandas_udf(_DEC_POS_TYPE)
-        def dec_udf(
-            docs_enc: pd.Series, freqs_enc: pd.Series, norms_enc: pd.Series, pos_enc: pd.Series
-        ) -> pd.DataFrame:
-            out = {"doc_ids": [], "freqs": [], "norms": [], "poss": []}
-            for d, f, m, p in zip(docs_enc, freqs_enc, norms_enc, pos_enc):
-                doc_ids, freqs, norms, pos = decode_posting_list(
-                    bytes(d), bytes(f), bytes(m), pos_enc=bytes(p)
-                )
-                out["doc_ids"].append(doc_ids)
-                out["freqs"].append(freqs.astype(np.int32))
-                out["norms"].append(norms.astype(np.int32))
-                out["poss"].append([pp.astype(np.int32) for pp in pos])
-            return pd.DataFrame(out)
-
-        dec = dec_udf("docs_enc", "freqs_enc", "norms_enc", "pos_enc")
-        zip_cols = ["doc_ids", "freqs", "norms", "poss"]
-    else:
-
-        @F.pandas_udf(_DEC_TYPE)
-        def dec_udf(
-            docs_enc: pd.Series, freqs_enc: pd.Series, norms_enc: pd.Series
-        ) -> pd.DataFrame:
-            out = {"doc_ids": [], "freqs": [], "norms": []}
-            for d, f, m in zip(docs_enc, freqs_enc, norms_enc):
-                doc_ids, freqs, norms = decode_posting_list(bytes(d), bytes(f), bytes(m))
-                out["doc_ids"].append(doc_ids)
-                out["freqs"].append(freqs.astype(np.int32))
-                out["norms"].append(norms.astype(np.int32))
-            return pd.DataFrame(out)
-
-        dec = dec_udf("docs_enc", "freqs_enc", "norms_enc")
-        zip_cols = ["doc_ids", "freqs", "norms"]
-
-    with_dec = packed.withColumn("_dec", dec)
-    zipped = with_dec.select(
-        "term",
-        F.explode(
-            F.arrays_zip(*[F.col(f"_dec.{c}").alias(c) for c in zip_cols])
-        ).alias("z"),
-    )
-    return zipped.select(
-        "term",
-        F.col("z.doc_ids").alias("doc_id"),
-        F.col("z.freqs").alias("freq"),
-        F.col("z.norms").alias("norm"),
-        *([F.col("z.poss").alias("positions")] if with_positions else []),
-    )
+    spark = packed.sparkSession
+    return unpack_rel(Rel.of(packed), spark, with_positions).df(spark)

@@ -662,9 +662,10 @@ def duplicated_ngram_spans(
     (intra- or cross-document).
 
     Returns (doc_id, spans array<struct<start,end>>, n_dup_tokens,
-    n_tokens).  ``skip_canonical=True`` exempts, per k-gram, every
-    occurrence in the doc with the smallest doc_id holding it; the removal
-    operator protects only the first of them.
+    n_tokens).  ``skip_canonical=True`` exempts, per k-gram, its canonical
+    occurrence: the first one, smallest doc_id then smallest start position,
+    the same key :func:`remove_duplicated_ngrams` keeps.  A gram repeated
+    inside its canonical doc is exempt only at its first position there.
 
     100 TB shape: gram occurrences reduce to (doc_id, p, h60) — gram
     strings never shuffle; stats are ONE hash agg per gram hash; the
@@ -672,11 +673,13 @@ def duplicated_ngram_spans(
     array, no UDF)."""
     g = _gram_starts(docs, k, text_col)
     st = g.groupBy("h").agg(
-        F.count("*").alias("_cnt"), F.min("doc_id").alias("_mk")
+        F.count("*").alias("_cnt"), F.min(F.struct("doc_id", "p")).alias("_mk")
     )
     dup = g.join(st, "h").filter(F.col("_cnt") >= 2)
     if skip_canonical:
-        dup = dup.filter(F.col("_mk") != F.col("doc_id"))
+        dup = dup.filter(
+            (F.col("_mk.doc_id") != F.col("doc_id")) | (F.col("_mk.p") != F.col("p"))
+        )
     starts = dup.groupBy("doc_id").agg(
         F.array_sort(F.collect_set("p")).alias("_ps")
     )

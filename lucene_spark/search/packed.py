@@ -32,27 +32,38 @@ TestWANDScorer / TestBlockMaxConjunction strategy, SURVEY.md §5).
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, LongType, StructField, StructType
 
 from lucene_spark.index.codec import decode_selected_blocks
 from lucene_spark.util.smallfloat import LENGTH_TABLE
+from lucene_spark.util.sqllit import sql_text
+from lucene_spark.util.sqlrel import Rel, sql_udf
 
 
-def _score_arrays(freqs, norms, w, mode, cache, k1, b, avgdl):
-    """Vectorized BM25 over decoded postings (numpy; exact per mode)."""
-    if mode == "lucene_f32":
+@lru_cache(maxsize=64)
+def norm_inverse_table(k1, b, avgdl) -> np.ndarray:
+    """BM25's 256-entry float32 normInverse cache
+    (BM25Similarity.java:196-210): 1 / (k1 * ((1 - b) + b * dl / avgdl)) per
+    byte4-decoded length.  A pure function of its float32 arguments, so a
+    worker recomputes the searcher's table bit for bit."""
+    k1, b, avgdl = np.float32(k1), np.float32(b), np.float32(avgdl)
+    one = np.float32(1.0)
+    table = (one / (k1 * ((one - b) + b * LENGTH_TABLE / avgdl))).astype(np.float32)
+    table.flags.writeable = False  # shared by every caller of the cache
+    return table
+
+
+def _score_arrays(freqs, norms, w, f32, k1, b, avgdl):
+    """Vectorized BM25 over decoded postings (numpy): the bit-exact float32
+    algebra, or the textbook double shape."""
+    if f32:
         w32 = np.float32(w)
-        inv = cache[norms]
+        inv = norm_inverse_table(k1, b, avgdl)[norms]
         return (w32 - w32 / (np.float32(1.0) + freqs.astype(np.float32) * inv)).astype(
             np.float32
         )
@@ -61,18 +72,48 @@ def _score_arrays(freqs, norms, w, mode, cache, k1, b, avgdl):
     return w * fr / (fr + k1 * ((1.0 - b) + b * dl / avgdl))
 
 
+def _block_score_udf(f32: bool):
+    """Arrow UDF: block-level prune via skip impacts, decode survivors, score
+    vectorized.  tau and the BM25 constants arrive as literal arguments."""
+    out_type = StructType(
+        [
+            StructField("doc_ids", ArrayType(LongType())),
+            StructField("scores", ArrayType(FloatType() if f32 else DoubleType())),
+        ]
+    )
+
+    @F.pandas_udf(out_type)
+    def score_udf(*cols: pd.Series) -> pd.DataFrame:
+        docs_enc, freqs_enc, norms_enc, skip, w, rest, *consts = cols
+        tau, k1, b, avgdl = (float(c.iloc[0]) for c in consts)
+        out_d, out_s = [], []
+        for de, fe, ne, sk, wv, rv in zip(docs_enc, freqs_enc, norms_enc, skip, w, rest):
+            blocks = list(sk)
+            maxf = np.array([blk["max_freq"] for blk in blocks], dtype=np.int64)
+            minn = np.array([blk["min_norm"] for blk in blocks], dtype=np.int64)
+            ub = _score_arrays(maxf, minn, wv, f32, k1, b, avgdl).astype(np.float64)
+            keep = (ub + rv) >= tau if tau > 0.0 else np.ones(len(blocks), bool)
+            if not keep.any():
+                out_d.append(np.empty(0, np.int64))
+                out_s.append(np.empty(0, np.float32 if f32 else np.float64))
+                continue
+            d, f, m = decode_selected_blocks(bytes(de), bytes(fe), bytes(ne), blocks, keep)
+            out_d.append(d)
+            out_s.append(_score_arrays(f, m, wv, f32, k1, b, avgdl))
+        return pd.DataFrame({"doc_ids": out_d, "scores": out_s})
+
+    return score_udf
+
+
 class PackedScorer:
     """Scores term-sum (OR) and term-conjunction (AND) queries over the
-    packed table, with optional block-max pruning."""
+    packed table, with optional block-max pruning.  Plans are rendered as SQL
+    text and parsed in one call; the decode-and-score UDF is registered once
+    per session and called by name (``util/sqlrel.py``)."""
 
     def __init__(self, searcher):
         self.searcher = searcher
         self.index = searcher.index
-
-    def _packed_for(self, terms) -> DataFrame:
-        terms = list(terms)
-        pk = self.index.bucket_filter(self.index.packed, terms)
-        return pk.filter(F.col("term").isin(terms))
 
     # ------------------------------------------------------------------
     def seed_threshold(self, term_weights: dict[str, float], k: int) -> float:
@@ -85,10 +126,10 @@ class PackedScorer:
         seed_term = min(dfs, key=lambda t: (dfs[t], t))
         if dfs[seed_term] < k:
             return 0.0
-        scored = self.scored(
-            {seed_term: term_weights[seed_term]}, prune=False
-        )
-        rows = scored.orderBy(F.desc("score")).limit(k).collect()
+        rows = s._sql(
+            self._scored_rel({seed_term: term_weights[seed_term]}, "or", 0.0)
+            .query("score", f"ORDER BY score DESC LIMIT {int(k)}")
+        ).collect()
         if len(rows) < k:
             return 0.0
         tau = rows[-1].score
@@ -117,118 +158,77 @@ class PackedScorer:
         s = self.searcher
         if not term_weights:
             return s._empty_scored()
-        n_terms = len(term_weights)
         # seed only for OR: the seed term's k-th partial score lower-bounds
         # the k-th best total ONLY when every seed match is a result match.
         # For AND the conjunction can have fewer matches than the seed term,
         # so an unseeded tau would not be admissible there.
-        if prune and tau is None and n_terms > 1 and mode == "or":
+        if prune and tau is None and len(term_weights) > 1 and mode == "or":
             tau = self.seed_threshold(term_weights, k)
-        tau = float(tau or 0.0)
+        return s._sql(self._scored_rel(term_weights, mode, float(tau or 0.0)))
 
+    def _scored_rel(self, term_weights, mode: str, tau: float) -> Rel:
+        s = self.searcher
+        n_terms = len(term_weights)
         # per-term weights ride along as a literal term -> weight lookup on
         # the packed rows (no weight relation to scan or broadcast)
-        pk = self._packed_for(term_weights).withColumn(
-            "_w", s._term_lookup(term_weights, s._score_dt)
+        pk = self.index.term_rel(self.index.packed, sorted(term_weights)).query(
+            f"*, {s._term_lookup_sql(term_weights, s._score_dt)} AS _w"
         )
         if mode == "and" or tau > 0.0:
             # chunk/term upper bound: the score's own algebra evaluated at
             # (max_freq, min_norm)
-            pk = pk.withColumn(
-                "_ub", s._score_of("_w", "max_freq", "min_norm").cast("double")
-            )
-            keep = pk.groupBy("chunk").agg(
-                F.sum("_ub").alias("_bound"), F.count("*").alias("_nt")
-            )
+            pk = pk.query(f"*, CAST({s._score_sql('_w', 'max_freq', 'min_norm')} AS DOUBLE) AS _ub")
+            conds = []
             if mode == "and":
                 # a chunk can produce a conjunctive match only if every term
                 # has postings in it (doc ranges are aligned) —
                 # BlockMaxConjunction's "all iterators must overlap"
                 # precondition
-                keep = keep.filter(F.col("_nt") == n_terms)
+                conds.append(f"(_nt = {n_terms})")
             if tau > 0.0:
-                keep = keep.filter(F.col("_bound") >= tau)
-            pk = pk.join(keep.select("chunk", "_bound"), "chunk")
+                conds.append(f"(_bound >= {sql_text(tau, DoubleType())})")
+            keep = (
+                pk.query("chunk, sum(_ub) AS _bound, count(*) AS _nt", "GROUP BY chunk")
+                .query("*", "WHERE " + " AND ".join(conds))
+                .query("chunk, _bound")
+            )
             # rest = what the *other* terms of this chunk could still contribute
-            pk = pk.withColumn("_rest", F.col("_bound") - F.col("_ub"))
+            pk = pk.join(keep, "chunk").query("*, (_bound - _ub) AS _rest")
         else:
             # an OR with tau 0 can prune nothing: no chunk pass
-            pk = pk.withColumn("_rest", F.lit(0.0))
+            pk = pk.query("*, 0.0D AS _rest")
 
-        scored = self._decode_score(pk, tau)
+        scored, st = self._decode_score(pk, tau), s.score_type
         if mode == "and":
-            agg = scored.groupBy("doc_id").agg(
-                F.sum("score").alias("_sum"), F.count("*").alias("_nt")
-            )
-            return agg.filter(F.col("_nt") == n_terms).select(
-                "doc_id", F.col("_sum").cast(s.score_type).alias("score")
+            return (
+                scored.query("doc_id, sum(score) AS _sum, count(*) AS _nt", "GROUP BY doc_id")
+                .query("*", f"WHERE (_nt = {n_terms})")
+                .query(f"doc_id, CAST(_sum AS {st}) AS score")
             )
         if n_terms == 1:
             # each doc appears once: the sum would be the score itself
-            return scored.select("doc_id", F.col("score").cast(s.score_type))
-        return scored.groupBy("doc_id").agg(
-            F.sum("score").cast(s.score_type).alias("score")
-        )
+            return scored.query(f"doc_id, CAST(score AS {st}) AS score")
+        return scored.query(f"doc_id, CAST(sum(score) AS {st}) AS score", "GROUP BY doc_id")
 
     # ------------------------------------------------------------------
-    def _decode_score(self, pk: DataFrame, tau: float) -> DataFrame:
-        """Arrow UDF: block-level prune via skip impacts, decode survivors,
-        score vectorized; explode JVM-side."""
+    def _decode_score(self, pk: Rel, tau: float) -> Rel:
+        """Block-prune, decode and score each packed row in the registered
+        Arrow UDF; explode JVM-side."""
         s = self.searcher
-        mode = s.scoring
-        cache = s.norm_inverse_cache() if mode == "lucene_f32" else None
-        k1, b = float(self.index.k1), float(self.index.b)
-        avgdl = self.index.stats["sum_total_term_freq"] / s.doc_count
-        out_type = StructType(
-            [
-                StructField("doc_ids", ArrayType(LongType())),
-                StructField(
-                    "scores",
-                    ArrayType(FloatType() if mode == "lucene_f32" else DoubleType()),
-                ),
-            ]
+        f32 = s.scoring == "lucene_f32"
+        if f32:
+            k1, b, avgdl = float(s.k1), float(s.b), float(s.avgdl)
+        else:
+            k1, b = float(self.index.k1), float(self.index.b)
+            avgdl = self.index.stats["sum_total_term_freq"] / s.doc_count
+        udf = sql_udf(
+            self.index.spark,
+            "ls_block_score_f32" if f32 else "ls_block_score_f64",
+            lambda: _block_score_udf(f32),
         )
-
-        @F.pandas_udf(out_type)
-        def score_udf(
-            docs_enc: pd.Series,
-            freqs_enc: pd.Series,
-            norms_enc: pd.Series,
-            skip: pd.Series,
-            w: pd.Series,
-            rest: pd.Series,
-        ) -> pd.DataFrame:
-            out_d, out_s = [], []
-            for de, fe, ne, sk, wv, rv in zip(
-                docs_enc, freqs_enc, norms_enc, skip, w, rest
-            ):
-                blocks = list(sk)
-                maxf = np.array([blk["max_freq"] for blk in blocks], dtype=np.int64)
-                minn = np.array([blk["min_norm"] for blk in blocks], dtype=np.int64)
-                ub = _score_arrays(maxf, minn, wv, mode, cache, k1, b, avgdl).astype(
-                    np.float64
-                )
-                keep = (ub + rv) >= tau if tau > 0.0 else np.ones(len(blocks), bool)
-                if not keep.any():
-                    out_d.append(np.empty(0, np.int64))
-                    out_s.append(np.empty(0, np.float32 if mode == "lucene_f32" else np.float64))
-                    continue
-                d, f, m = decode_selected_blocks(
-                    bytes(de), bytes(fe), bytes(ne), blocks, keep
-                )
-                out_d.append(d)
-                out_s.append(_score_arrays(f, m, wv, mode, cache, k1, b, avgdl))
-            return pd.DataFrame({"doc_ids": out_d, "scores": out_s})
-
-        dec = pk.withColumn(
-            "_sc",
-            score_udf("docs_enc", "freqs_enc", "norms_enc", "skip", "_w", "_rest"),
-        )
-        zipped = dec.select(
-            F.explode(F.arrays_zip(F.col("_sc.doc_ids"), F.col("_sc.scores"))).alias(
-                "z"
-            )
-        )
-        return zipped.select(
-            F.col("z.doc_ids").alias("doc_id"), F.col("z.scores").alias("score")
+        consts = ", ".join(sql_text(v, DoubleType()) for v in (tau, k1, b, avgdl))
+        return (
+            pk.query(f"*, {udf}(docs_enc, freqs_enc, norms_enc, skip, _w, _rest, {consts}) AS _sc")
+            .query("explode(arrays_zip(_sc.doc_ids, _sc.scores)) AS z")
+            .query("z.doc_ids AS doc_id, z.scores AS score")
         )

@@ -18,10 +18,17 @@
    tie-break, HitQueue.java:77-84); the rank is numbered on its one sorted
    partition and the k rows are broadcast to their doc keys.
 
-Scoring is Lucene-exact float32: the BM25 algebra runs as FloatType column
+Lowering renders SQL text (``util/sqlrel.Rel``), not Column-DSL trees: the
+term, boolean, phrase and packed plans and the top-k tail each parse in one
+``spark.sql`` call, so a query costs tens of py4j round trips rather than
+hundreds.  The Python UDFs they call are registered once per session and
+called by name.
+
+Scoring is Lucene-exact float32: the BM25 algebra runs as FloatType
 expressions (JVM, whole-stage codegen — Java float ops ≡ IEEE binary32 ≡
-numpy float32), with the 256-entry normInverse cache inlined as an array
-literal built once per searcher (BM25Similarity.java:196-210, 246-258).
+numpy float32), with the 256-entry normInverse cache an array literal
+declared once per session as a SQL variable (BM25Similarity.java:196-210,
+246-258).
 Per-term weights are inlined too, as a ``term -> weight`` map literal looked
 up on the postings' ``term`` column, so lowering a term query launches no
 Spark job beyond the (cached) dictionary lookup.  Multi-clause score sums
@@ -79,7 +86,8 @@ from lucene_spark.search.query import (
     WildcardQuery,
 )
 from lucene_spark.util.smallfloat import LENGTH_TABLE
-from lucene_spark.util.sqllit import sql_lit
+from lucene_spark.util.sqllit import in_sql, sql_lit, sql_text
+from lucene_spark.util.sqlrel import Rel, sql_constant, union_all
 
 
 def _f32(x) -> float:
@@ -170,9 +178,8 @@ class IndexSearcher:
         )
         self._vectors = None
         self._vectors_ivf_path = None
-        # per-searcher constants (scoring-table literals, score expressions,
-        # the search() tail), each built on first use and reused by every
-        # query: building them costs py4j round trips, not Spark work
+        # per-searcher constants (the scoring tables' SQL names), each
+        # declared on first use and reused by every query
         self._consts: dict = {}
 
     # ------------------------------------------------------------------
@@ -356,10 +363,9 @@ class IndexSearcher:
         return float(boost) * sum(self.idf(dfs[t]) for t in terms)
 
     def norm_inverse_cache(self) -> np.ndarray:
-        one = np.float32(1.0)
-        return (
-            one / (self.k1 * ((one - self.b) + self.b * LENGTH_TABLE / self.avgdl))
-        ).astype(np.float32)
+        from lucene_spark.search.packed import norm_inverse_table
+
+        return norm_inverse_table(self.k1, self.b, self.avgdl)
 
     def _const(self, key, build):
         """``build()``, computed once per searcher and shared by every
@@ -369,15 +375,23 @@ class IndexSearcher:
             value = self._consts[key] = build()
         return value
 
-    def _table_lit(self, name: str, build, element_type):
-        """Array literal of the 256-entry table ``build()``, rendered in one
-        JVM call."""
-        return self._const(
-            ("table", name), lambda: sql_lit(build(), ArrayType(element_type))
-        )
+    def _table(self, name: str) -> str:
+        """SQL name of a 256-entry scoring table indexed by ``norm + 1``:
+        ``norm_inverse`` (BM25 float32), ``classic_norm`` (TFIDF float32)
+        or ``length`` (decoded doc lengths, double).  Declared once as a
+        session variable, so query text names the table instead of
+        carrying its 256 literals."""
+        build, dt = {
+            "norm_inverse": (self.norm_inverse_cache, FloatType()),
+            "classic_norm": (self.classic_norm_table, FloatType()),
+            "length": (lambda: LENGTH_TABLE, DoubleType()),
+        }[name]
+        return self._const(("table", name), lambda: sql_constant(
+            self.index.spark, sql_text(build(), ArrayType(dt)), ArrayType(dt)
+        ))
 
-    def _cache_lit(self):
-        return self._table_lit("norm_inverse", self.norm_inverse_cache, FloatType())
+    def _sql(self, rel: Rel) -> DataFrame:
+        return rel.df(self.index.spark)
 
     # Term dictionaries up to this many entries are cached whole on the
     # driver (≙ Lucene's always-in-RAM FST term index) — one lookup job
@@ -391,6 +405,13 @@ class IndexSearcher:
     _SCAN_PER_QUERY = "scan"
     _term_cache: dict | str | None = None
 
+    def _term_stats_rows(self, cols: str, terms=None, limit=None) -> list:
+        """``cols`` of the term_stats rows for ``terms`` (every row when
+        None), at most ``limit`` of them."""
+        tail = "" if terms is None else "WHERE " + in_sql("term", sorted(set(terms)), StringType())
+        tail += "" if limit is None else f" LIMIT {int(limit)}"
+        return self._sql(Rel.of(self.index.term_stats).query(cols, tail)).collect()
+
     def term_doc_freqs(self, terms: Sequence[str]) -> dict[str, int]:
         """doc_freq for the query's terms: driver-cached dictionary when the
         vocabulary is small, pushed-down term_stats scan otherwise."""
@@ -400,52 +421,75 @@ class IndexSearcher:
             # one bounded action: a dictionary over the cap shows itself by
             # returning term_cache_max + 1 rows
             cap = self.term_cache_max
-            rows = (
-                self.index.term_stats.select("term", "doc_freq")
-                .limit(cap + 1)
-                .collect()
-            )
+            rows = self._term_stats_rows("term, doc_freq", limit=cap + 1)
             if len(rows) <= cap:
                 self._term_cache = {r.term: int(r.doc_freq) for r in rows}
             else:
                 self._term_cache = self._SCAN_PER_QUERY
         if isinstance(self._term_cache, dict):
             return {t: self._term_cache[t] for t in set(terms) if t in self._term_cache}
-        rows = (
-            self.index.term_stats.filter(F.col("term").isin(list(set(terms))))
-            .select("term", "doc_freq")
-            .collect()
-        )
+        rows = self._term_stats_rows("term, doc_freq", terms)
         return {r.term: int(r.doc_freq) for r in rows}
 
     # ------------------------------------------------------------------
     # scoring primitives
-    def _bm25_expr(self, weight_col, freq_col, norm_col):
-        """Per-(term, doc) similarity score expression — the Similarity plug
-        point (SURVEY.md §2.12): BM25 (default) or ClassicSimilarity, each
-        in bit-exact float32 or SQL-reproducible double."""
+    def _score_sql(self, w: str, freq: str, norm: str) -> str:
+        """Per-(term, doc) similarity score as SQL text over the weight,
+        freq and norm operands — the Similarity plug point (SURVEY.md
+        §2.12): BM25 (default) or ClassicSimilarity, each in bit-exact
+        float32 or SQL-reproducible double.
+
+        * BM25 float32: weight - weight / (1f + freq * cache[norm]) with a
+          float32 rounding point after EVERY binary op
+          (BM25Similarity.java:246-258).  Spark SQL promotes float division
+          to double; casting each intermediate back to float restores exact
+          IEEE binary32 single-op rounding (double rounding is innocuous for
+          a single +,-,*,/ at 53>=2*24+2 bits), so this matches Lucene's
+          Java float algebra bit-for-bit — verified against the numpy
+          oracle.
+        * BM25 double (``plain_f64``): the textbook shape
+          w * freq / (freq + k1*((1-b)+b*dl/avgdl)) over the same idf and
+          quantized lengths — ANSI-SQL-reproducible.
+        * Classic float32: TFIDFScorer.score (TFIDFSimilarity.java:506-510),
+          raw = (float)sqrt(freq) * queryWeight; score = raw *
+          normTable[norm], float32 rounding after every op.
+        * Classic double: idf * sqrt(freq) / sqrt(dl) over the
+          byte4-quantized length.
+
+        Every double literal carries its ``D`` suffix (a bare ``1.0`` would
+        parse as a decimal)."""
+        at = lambda name: f"element_at({self._table(name)}, ({norm} + 1))"  # noqa: E731
         if self.family == "classic":
             if self.score_type == "float":
-                return self._classic_expr_f32(weight_col, freq_col, norm_col)
-            return self._classic_expr_f64(weight_col, freq_col, norm_col)
+                tf = f"CAST(sqrt(CAST({freq} AS DOUBLE)) AS FLOAT)"
+                raw = f"CAST(({tf} * {w}) AS FLOAT)"
+                return f"CAST(({raw} * {at('classic_norm')}) AS FLOAT)"
+            return f"CAST((({w} * sqrt(CAST({freq} AS DOUBLE))) / sqrt({at('length')})) AS DOUBLE)"
         if self.scoring == "plain_f64":
-            return self._bm25_expr_f64(weight_col, freq_col, norm_col)
-        return self._bm25_expr_f32(weight_col, freq_col, norm_col)
+            k1, b = float(self.index.k1), float(self.index.b)
+            avgdl = self.index.stats["sum_total_term_freq"] / self.doc_count
+            d = lambda x: sql_text(x, DoubleType())  # noqa: E731
+            fr = f"CAST({freq} AS DOUBLE)"
+            denom = f"({fr} + ({d(k1)} * ({d(1.0 - b)} + (({d(b)} * {at('length')}) / {d(avgdl)}))))"
+            return f"CAST((({w} * {fr}) / {denom}) AS DOUBLE)"
+        one = "CAST(1.0D AS FLOAT)"
+        t1 = f"CAST((CAST({freq} AS FLOAT) * {at('norm_inverse')}) AS FLOAT)"
+        t2 = f"CAST(({one} + {t1}) AS FLOAT)"
+        t3 = f"CAST(({w} / {t2}) AS FLOAT)"
+        return f"CAST(({w} - {t3}) AS FLOAT)"
 
     def _score_of(self, weight: str, freq: str, norm: str) -> Column:
-        """:meth:`_bm25_expr` over the named columns.  The Column-DSL build
-        costs ~170 py4j round trips, so each column triple is built once."""
-        return self._const(
-            ("score", weight, freq, norm),
-            lambda: self._bm25_expr(F.col(weight), F.col(freq), F.col(norm)),
-        )
+        """:meth:`_score_sql` over the named columns, as a Column."""
+        return F.expr(self._score_sql(weight, freq, norm))
 
-    def _weight_scored(self, df: DataFrame, weight: float, freq: str = "_freq") -> DataFrame:
-        """(doc_id, score) of ``df``'s (doc_id, ``freq``, norm) rows under one
-        query-level weight."""
-        return df.select(
-            "doc_id", freq, "norm", sql_lit(weight, self._score_dt).alias("_w")
-        ).select("doc_id", self._score_of("_w", freq, "norm").alias("score"))
+    def _weight_scored(self, rel: Rel, weight: float, freq: str = "_freq") -> DataFrame:
+        """(doc_id, score) of ``rel``'s (doc_id, ``freq``, norm) rows under
+        one query-level weight."""
+        w = sql_text(weight, self._score_dt)
+        return self._sql(
+            rel.query(f"doc_id, {freq}, norm, {w} AS _w")
+            .query(f"doc_id, {self._score_sql('_w', freq, 'norm')} AS score")
+        )
 
     @staticmethod
     def classic_norm_table() -> np.ndarray:
@@ -457,73 +501,24 @@ class IndexSearcher:
         table[0] = np.float32(1.0) / table[255]
         return table
 
-    def _classic_norm_lit(self):
-        return self._table_lit("classic_norm", self.classic_norm_table, FloatType())
-
-    def _classic_expr_f32(self, weight_col, freq_col, norm_col):
-        """TFIDFScorer.score (TFIDFSimilarity.java:506-510):
-        raw = (float)sqrt(freq) * queryWeight; score = raw * normTable[norm]
-        — float32 rounding after every op, like the BM25 twin."""
-        tf = F.sqrt(freq_col.cast("double")).cast("float")
-        raw = (tf * weight_col).cast("float")
-        normv = F.element_at(self._classic_norm_lit(), norm_col + F.lit(1))
-        return (raw * normv).cast("float")
-
-    def _classic_expr_f64(self, weight_col, freq_col, norm_col):
-        """Textbook double shape: idf * sqrt(freq) / sqrt(dl) over the
-        byte4-quantized length — ANSI-SQL-reproducible."""
-        dl = F.element_at(self._dl_lit(), norm_col + F.lit(1))
-        return (
-            weight_col * F.sqrt(freq_col.cast("double")) / F.sqrt(dl)
-        ).cast("double")
-
-    def _bm25_expr_f32(self, weight_col, freq_col, norm_col):
-        """weight - weight / (1f + freq * cache[norm]) with a float32
-        rounding point after EVERY binary op (BM25Similarity.java:246-258).
-
-        Spark SQL promotes float arithmetic (division in particular) to
-        double; casting each intermediate back to float restores exact IEEE
-        binary32 single-op rounding (double rounding is innocuous for a
-        single +,-,*,/ at 53>=2*24+2 bits), so this matches Lucene's Java
-        float algebra bit-for-bit — verified against the numpy oracle."""
-        inv = F.element_at(self._cache_lit(), norm_col + F.lit(1))
-        one = F.lit(1.0).cast("float")
-        t1 = (freq_col.cast("float") * inv).cast("float")
-        t2 = (one + t1).cast("float")
-        t3 = (weight_col / t2).cast("float")
-        return (weight_col - t3).cast("float")
-
-    def _dl_lit(self):
-        """256-entry decoded quantized doc-length table as double literals."""
-        return self._table_lit("length", lambda: LENGTH_TABLE, DoubleType())
-
-    def _bm25_expr_f64(self, weight_col, freq_col, norm_col):
-        """Textbook shape in double: w * freq / (freq + k1*((1-b)+b*dl/avgdl)).
-        Same idf / quantized lengths as f32 mode; ANSI-SQL-reproducible."""
-        dl = F.element_at(self._dl_lit(), norm_col + F.lit(1))
-        k1, b = float(self.index.k1), float(self.index.b)
-        avgdl = self.index.stats["sum_total_term_freq"] / self.doc_count
-        fr = freq_col.cast("double")
-        denom = fr + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-        return (weight_col * fr / denom).cast("double")
-
-    def _term_lookup(self, by_term: dict, value_type) -> Column:
-        """``by_term[term]`` for each postings row: a map literal (one JVM
-        call, no Spark job) looked up on the ``term`` column.  The lookup is
+    def _term_lookup_sql(self, by_term: dict, value_type) -> str:
+        """``by_term[term]`` for each postings row as SQL text: a map literal
+        (no Spark job) looked up on the ``term`` column.  The lookup is
         linear in the number of keys, which is bounded by the query's own
         terms."""
-        return sql_lit(by_term, MapType(StringType(), value_type))[F.col("term")]
+        return f"{sql_text(by_term, MapType(StringType(), value_type))}[term]"
+
+    def _term_lookup(self, by_term: dict, value_type) -> Column:
+        """:meth:`_term_lookup_sql` as a Column."""
+        return F.expr(self._term_lookup_sql(by_term, value_type))
 
     def _scored_weighted(self, weights: dict[str, float]) -> DataFrame:
         """(doc_id, score) per matching (term, doc) for per-term weights
         already resolved in Python."""
-        pf = self.index.postings_for_terms(list(weights)).select(
-            "doc_id", "freq", "norm",
-            self._term_lookup(weights, self._score_dt).alias("_w"),
+        pf = self.index.postings_rel(list(weights)).query(
+            f"doc_id, freq, norm, {self._term_lookup_sql(weights, self._score_dt)} AS _w"
         )
-        return pf.select(
-            "doc_id", self._score_of("_w", "freq", "norm").alias("score")
-        )
+        return self._sql(pf.query(f"doc_id, {self._score_sql('_w', 'freq', 'norm')} AS score"))
 
     def _scored_terms(self, term_boosts: dict[str, float]) -> DataFrame:
         """(doc_id, score float32) rows per matching (term, doc): the
@@ -543,11 +538,7 @@ class IndexSearcher:
 
     def term_total_freqs(self, terms: Sequence[str]) -> dict[str, int]:
         """total_term_freq per term (the LM collection-model statistic)."""
-        rows = (
-            self.index.term_stats.filter(F.col("term").isin(list(set(terms))))
-            .select("term", "total_term_freq")
-            .collect()
-        )
+        rows = self._term_stats_rows("term, total_term_freq", terms)
         return {r.term: int(r.total_term_freq) for r in rows}
 
     def _scored_terms_simbase(self, term_boosts: dict[str, float]) -> DataFrame:
@@ -590,7 +581,7 @@ class IndexSearcher:
             return self._empty_scored()
         sttf = float(self.index.stats["sum_total_term_freq"])
         n_docs = float(self.doc_count)
-        dl = F.element_at(self._dl_lit(), F.col("norm") + F.lit(1))
+        dl = F.expr(f"element_at({self._table('length')}, (norm + 1))")
         fr = F.col("freq").cast("double")
         ln2 = math.log(2.0)
         if self.family == "lm":
@@ -783,8 +774,11 @@ class IndexSearcher:
         )
 
     def _empty_scored(self) -> DataFrame:
-        return self.index.spark.createDataFrame(
-            [], f"doc_id long, score {self.score_type}"
+        """A zero-row (doc_id, score) relation the optimizer can fold away:
+        a plan over it launches no Spark job."""
+        return self.index.spark.sql(
+            "SELECT CAST(NULL AS BIGINT) AS doc_id, "
+            f"CAST(NULL AS {self.score_type}) AS score WHERE false"
         )
 
     def _const_scored(self, doc_ids: DataFrame, boost: float) -> DataFrame:
@@ -824,9 +818,7 @@ class IndexSearcher:
         if len(expanded) <= self.MAX_COLLECTED_EXPANSION:
             if not expanded:
                 return self.index.docs.select("doc_id").limit(0)
-            return (
-                self.index.postings_for_terms(expanded).select("doc_id").distinct()
-            )
+            return self._sql(self.index.postings_rel(expanded).query("DISTINCT doc_id"))
         return (
             self.index.postings.join(
                 F.broadcast(terms_df.select("term")), "term", "left_semi"
@@ -906,16 +898,9 @@ class IndexSearcher:
         carries none of the scoring machinery (≙ Weight.scorer under
         ScoreMode.COMPLETE_NO_SCORES).  Positional/feature queries fall
         back to the scored plan, whose matching IS the work."""
-        if isinstance(q, TermQuery):
-            return (
-                self.index.postings_for_terms([q.term]).select("doc_id").distinct()
-            )
-        if isinstance(q, SynonymQuery):
-            return (
-                self.index.postings_for_terms(list(dict.fromkeys(q.terms)))
-                .select("doc_id")
-                .distinct()
-            )
+        if isinstance(q, (TermQuery, SynonymQuery)):
+            terms = [q.term] if isinstance(q, TermQuery) else q.terms
+            return self._sql(self.index.postings_rel(terms).query("DISTINCT doc_id"))
         if isinstance(q, (BoostQuery, ConstantScoreQuery)):
             return self._matches(q.query)
         from lucene_spark.search.query import FunctionScoreQuery
@@ -1734,13 +1719,8 @@ class IndexSearcher:
         if not dfs:
             return self._empty_scored()
         weight = self._weight(q.boost, max(dfs.values()))
-        summed = (
-            self.index.postings_for_terms(list(q.terms))
-            .groupBy("doc_id")
-            .agg(
-                F.sum("freq").cast("int").alias("freq"),
-                F.first("norm").alias("norm"),
-            )
+        summed = self.index.postings_rel(q.terms).query(
+            "doc_id, CAST(sum(freq) AS INT) AS freq, first(norm) AS norm", "GROUP BY doc_id"
         )
         return self._weight_scored(summed, weight, "freq")
 
@@ -1834,10 +1814,10 @@ class IndexSearcher:
                 tags.append((None, None, 1))
 
         def tagged(df, score, tag):
-            return df.selectExpr("doc_id", score, *(
+            return Rel.of(df).query(", ".join(["doc_id", score, *(
                 f"CAST({'NULL' if v is None else v} AS INT) AS {name}"
                 for name, v in zip(("_must", "_should", "_not"), tag)
-            ))
+            )]))
 
         parts = []
         # All TermQuery clauses share ONE postings scan with inlined literal
@@ -1870,21 +1850,17 @@ class IndexSearcher:
                     StructField("_should", IntegerType()),
                     StructField("_not", IntegerType()),
                 ])
-                pf = self.index.postings_for_terms(list(by_term)).select(
-                    "doc_id", "freq", "norm",
-                    F.inline(self._term_lookup(by_term, ArrayType(entry))),
+                lookup = self._term_lookup_sql(by_term, ArrayType(entry))
+                parts.append(
+                    self.index.postings_rel(list(by_term))
+                    .query(f"doc_id, freq, norm, inline({lookup})")
+                    .query(f"doc_id, {self._score_sql('_w', 'freq', 'norm')} AS score, "
+                           "_must, _should, _not")
                 )
-                parts.append(pf.select(
-                    "doc_id", self._score_of("_w", "freq", "norm").alias("score"),
-                    "_must", "_should", "_not",
-                ))
         if not parts:
             # every clause was a term absent from the dictionary
             return self._empty_scored()
 
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
         must_aggs, n_must = _clause_masks("_must", n_req)
         should_aggs, n_shoulds = _clause_masks("_should", n_should)
         need = q.min_should_match if n_req else max(1, q.min_should_match)
@@ -1896,13 +1872,11 @@ class IndexSearcher:
         if n_req + n_should < len(q.clauses):
             aggs.append("count(_not) AS _nnot")
             conds.append("_nnot = 0")
-        return (
-            u.groupBy("doc_id")
-            .agg(*[F.expr(a) for a in aggs])
-            .filter(" AND ".join(conds))
-            .selectExpr(
-                "doc_id", f"CAST(coalesce(_dsum, 0D) AS {self.score_type}) AS score"
-            )
+        return self._sql(
+            union_all(parts)
+            .query(", ".join(["doc_id", *aggs]), "GROUP BY doc_id")
+            .query("*", "WHERE " + " AND ".join(conds))
+            .query(f"doc_id, CAST(coalesce(_dsum, 0D) AS {self.score_type}) AS score")
         )
 
     def _scored_feature(self, q) -> DataFrame:
@@ -1938,28 +1912,16 @@ class IndexSearcher:
         for t, b in zip(terms, boosts):
             if t in dfs:
                 by_term.setdefault(t, []).append(self._weight(b * q.boost, df_blend))
-        pf = self.index.postings_for_terms(list(by_term)).select(
-            "doc_id", "freq", "norm",
-            F.explode(
-                self._term_lookup(by_term, ArrayType(self._score_dt))
-            ).alias("_w"),
-        )
-        scored = pf.select(
-            "doc_id", self._score_of("_w", "freq", "norm").alias("score")
-        )
+        lookup = self._term_lookup_sql(by_term, ArrayType(self._score_dt))
         tie = _f32(q.tie_breaker) if self.score_type == "float" else float(q.tie_breaker)
         st = self.score_type
-        agg = scored.groupBy("doc_id").agg(
-            F.max("score").alias("_mx"), F.sum("score").alias("_sm")
-        )
-        return agg.select(
-            "doc_id",
-            (
-                F.col("_mx")
-                + F.lit(tie).cast(st) * (F.col("_sm") - F.col("_mx")).cast(st)
-            )
-            .cast(st)
-            .alias("score"),
+        return self._sql(
+            self.index.postings_rel(list(by_term))
+            .query(f"doc_id, freq, norm, explode({lookup}) AS _w")
+            .query(f"doc_id, {self._score_sql('_w', 'freq', 'norm')} AS score")
+            .query("doc_id, max(score) AS _mx, sum(score) AS _sm", "GROUP BY doc_id")
+            .query(f"doc_id, CAST((_mx + (CAST({sql_text(tie, DoubleType())} AS {st}) * "
+                   f"CAST((_sm - _mx) AS {st}))) AS {st}) AS score")
         )
 
     def _scored_intervals(self, q) -> DataFrame:
@@ -1973,9 +1935,9 @@ class IndexSearcher:
         terms = sorted(set(q.source.terms()))
         if not terms:
             return self._empty_scored()
-        base = self._gather_positions(
+        base = self._sql(self._gather_positions(
             terms, required=q.source.required_terms()
-        )
+        ))
         f32 = self.score_type == "float"
         src = q.source
         tlist = list(terms)
@@ -2052,7 +2014,7 @@ class IndexSearcher:
 
     def _gather_positions(
         self, terms: Sequence[str], required: "set | None" = None
-    ) -> DataFrame:
+    ) -> Rel:
         """(doc_id, norm, _p0.._p{n-1}) for docs containing ALL terms — the
         per-term position arrays gathered in ONE groupBy (single shuffle)
         instead of an n-way self-join of the positions relation.  Repeated
@@ -2062,19 +2024,15 @@ class IndexSearcher:
         (IntervalsSource approximations — difference sources require only
         their minuend, disjunctions nothing).  Default: all terms."""
         required = set(terms) if required is None else set(required)
-        uniq = sorted(set(terms))
-        p = self.index.postings_for_terms(uniq, with_positions=True)
-        aggs = [
-            F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_p{i}")
+        aggs = ", ".join(
+            f"max(CASE WHEN (term = {sql_text(t, StringType())}) THEN positions END) AS _p{i}"
             for i, t in enumerate(terms)
-        ]
-        g = p.groupBy("doc_id").agg(F.min("norm").alias("norm"), *aggs)
-        req_preds = [
-            F.col(f"_p{i}").isNotNull()
-            for i, t in enumerate(terms)
-            if t in required
-        ]
-        return g.filter(_and_all(req_preds)) if req_preds else g
+        )
+        g = self.index.postings_rel(terms, with_positions=True).query(
+            f"doc_id, min(norm) AS norm, {aggs}", "GROUP BY doc_id"
+        )
+        req_preds = [f"(_p{i} IS NOT NULL)" for i, t in enumerate(terms) if t in required]
+        return g.query("*", "WHERE " + " AND ".join(req_preds)) if req_preds else g
 
     @staticmethod
     def _phrase_offsets(q: PhraseQuery) -> list[int]:
@@ -2105,22 +2063,8 @@ class IndexSearcher:
         if len(terms) == 1:
             return self._scored_terms({terms[0]: q.boost})
 
-        base = self._gather_positions(terms)
-        freq = F.size(
-            F.filter(
-                F.col("_p0"),
-                lambda pos: _and_all(
-                    [
-                        F.array_contains(
-                            F.col(f"_p{i}"), pos + F.lit(offs[i] - offs[0])
-                        )
-                        for i in range(1, len(terms))
-                    ]
-                ),
-            )
-        )
-        out = base.withColumn("_freq", freq).filter(F.col("_freq") > 0)
-        return self._weight_scored(out, weight)
+        out = self._gather_positions(terms).query(f"*, {_exact_freq_sql(offs)} AS _freq")
+        return self._weight_scored(out.query("*", "WHERE _freq > 0"), weight)
 
     def _scored_sloppy_phrase(self, q: PhraseQuery) -> DataFrame:
         """Sloppy phrase (slop > 0) with EXACT reference semantics
@@ -2167,6 +2111,8 @@ class IndexSearcher:
         to the same 2-list matcher)."""
         if base is None:
             base = self._gather_positions(terms)
+        elif isinstance(base, DataFrame):
+            base = Rel.of(base)
         o0, o1 = offs
         f32 = self.score_type == "float"
         lq = self._slop_lcm(slop)
@@ -2225,13 +2171,10 @@ class IndexSearcher:
             f"'lb', (CASE WHEN {is_a} THEN acc.lb ELSE CAST(x.pos AS INT) END), "
             f"'acc', (CASE WHEN {counted} THEN {inc} ELSE acc.acc END))"
         )
-        acc = F.expr(f"aggregate({merged}, {init}, (acc, x) -> {step}).acc")
-        if f32:
-            out = base.withColumn("_freq", acc).filter(F.col("_freq") > 0)
-        else:
-            out = base.withColumn(
-                "_freq", acc.cast("double") / F.lit(float(lq))
-            ).filter(F.col("_freq") > 0)
+        acc = f"aggregate({merged}, {init}, (acc, x) -> {step}).acc"
+        if not f32:
+            acc = f"(CAST({acc} AS DOUBLE) / {sql_text(float(lq), DoubleType())})"
+        out = base.query(f"*, {acc} AS _freq").query("*", "WHERE _freq > 0")
         return self._weight_scored(out, weight)
 
     def _sloppy_udf_scored(
@@ -2254,7 +2197,7 @@ class IndexSearcher:
 
         n = len(terms_per_pp) if terms_per_pp is not None else len(terms)
         if base is None:
-            base = self._gather_positions(terms)
+            base = self._sql(self._gather_positions(terms))
         f32 = self.score_type == "float"
         offsets = list(offs)
         slop_ = int(slop)
@@ -2282,7 +2225,7 @@ class IndexSearcher:
         out = base.select("doc_id", "norm", freq.alias("_freq")).filter(
             F.col("_freq") > 0
         )
-        return self._weight_scored(out, weight)
+        return self._weight_scored(Rel.of(out), weight)
 
     def _scored_term_automaton(self, q) -> DataFrame:
         """TermAutomatonQuery (sandbox/search/TermAutomatonQuery.java:63):
@@ -2305,7 +2248,7 @@ class IndexSearcher:
         if not present:
             return self._empty_scored()
         weight = self._phrase_weight(present, dfs, q.boost)
-        base = self._gather_positions(terms, required=set())
+        base = self._sql(self._gather_positions(terms, required=set()))
         freq_of = q.doc_freq_fn()
         n = len(terms)
 
@@ -2327,7 +2270,7 @@ class IndexSearcher:
         out = base.select("doc_id", "norm", freq.alias("_freq")).filter(
             F.col("_freq") > 0
         )
-        return self._weight_scored(out, weight)
+        return self._weight_scored(Rel.of(out), weight)
 
     def _scored_multi_phrase(self, q: MultiPhraseQuery) -> DataFrame:
         """MultiPhraseQuery.java — phrase with term alternatives per slot:
@@ -2395,24 +2338,8 @@ class IndexSearcher:
             return self._sloppy_udf_scored(
                 None, offs, q.slop, weight, base=base, terms_per_pp=slot_terms
             )
-        if len(slot_terms) == 1:
-            freq = F.size("_p0")
-        else:
-            freq = F.size(
-                F.filter(
-                    F.col("_p0"),
-                    lambda pos: _and_all(
-                        [
-                            F.array_contains(
-                                F.col(f"_p{i}"), pos + F.lit(offs[i] - offs[0])
-                            )
-                            for i in range(1, len(slot_terms))
-                        ]
-                    ),
-                )
-            )
-        out = base.withColumn("_freq", freq).filter(F.col("_freq") > 0)
-        return self._weight_scored(out, weight)
+        out = Rel.of(base).query(f"*, {_exact_freq_sql(offs)} AS _freq")
+        return self._weight_scored(out.query("*", "WHERE _freq > 0"), weight)
 
     # ------------------------------------------------------------------
     # packed/pruned path (block-max WAND analog — search/packed.py)
@@ -2466,34 +2393,24 @@ class IndexSearcher:
         ``search_after=(score, doc_id)`` gives pagination
         (IndexSearcher.java:467).  ``prune=True`` routes eligible queries
         through the packed block-max plan (requires ``index.packed``)."""
-        scored = self.scored_packed(query, k=k) if prune else self.scored(query)
+        scored = Rel.of(self.scored_packed(query, k=k) if prune else self.scored(query))
         if search_after is not None:
             s, d = search_after
-            sv = _f32(s) if self.score_type == "float" else float(s)
-            scored = scored.filter(
-                (F.col("score") < sv)
-                | ((F.col("score") == sv) & (F.col("doc_id") > d))
-            )
-        order, rank, keys = self._const("search_tail", self._search_tail)
+            sv = sql_text(_f32(s) if self.score_type == "float" else float(s), DoubleType())
+            scored = scored.query("*", f"WHERE (score < {sv}) OR ((score = {sv}) AND (doc_id > {int(d)}))")
         # the rank is numbered inside the top-k stage: TakeOrderedAndProject
         # already emits one sorted partition, so the window adds no exchange
         # and no sort; the k ranked rows are then broadcast to the docs keys
         # and put back in rank order by a root TakeOrderedAndProject
-        top = scored.orderBy(*order).limit(k).select(rank, "doc_id", "score")
-        return (
-            top.join(keys, "doc_id")
-            .select("rank", "doc_id", "conv_id", "turn_idx", "score")
-            .orderBy("rank")
-            .limit(k)
+        order = "score DESC, doc_id ASC"
+        top = scored.query("*", f"ORDER BY {order} LIMIT {int(k)}").query(
+            f"row_number() OVER (ORDER BY {order}) AS rank, doc_id, score"
         )
-
-    def _search_tail(self):
-        """(top-k order, rank column, docs key projection) of :meth:`search`."""
-        from pyspark.sql import Window
-
-        order = (F.desc("score"), F.asc("doc_id"))
-        rank = F.row_number().over(Window.orderBy(*order)).alias("rank")
-        return order, rank, self.index.docs.select("doc_id", "conv_id", "turn_idx")
+        keys = Rel.of(self.index.docs).query("doc_id, conv_id, turn_idx")
+        return self._sql(
+            top.join(keys, "doc_id")
+            .query("rank, doc_id, conv_id, turn_idx, score", f"ORDER BY rank LIMIT {int(k)}")
+        )
 
     def search_diversified(
         self, query: Query, k: int, max_per_key: int, key_col: str = "conv_id"
@@ -2769,6 +2686,18 @@ def _clause_masks(col: str, n: int) -> tuple[list[str], str]:
         for w, word in enumerate(words)
     ]
     return aggs, " + ".join(f"bit_count({word})" for word in words) or "0"
+
+
+def _exact_freq_sql(offs) -> str:
+    """Exact-phrase freq as SQL text over the gathered position arrays
+    ``_p0.._p{n-1}``: the count of start positions p in ``_p0`` with
+    p + (offs[i] - offs[0]) in ``_p{i}`` for every i (ExactPhraseMatcher)."""
+    if len(offs) == 1:
+        return "size(_p0)"
+    cond = " AND ".join(
+        f"array_contains(_p{i}, (pos + {offs[i] - offs[0]}))" for i in range(1, len(offs))
+    )
+    return f"size(filter(_p0, pos -> {cond}))"
 
 
 def _and_all(conds):

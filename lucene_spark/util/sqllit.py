@@ -74,6 +74,13 @@ def sql_text(value, dt: DataType) -> str:
     raise TypeError(f"no SQL literal rendering for {t}")
 
 
+def in_sql(col: str, values, dt: DataType) -> str:
+    """SQL text of ``col IN (values)``; ``false`` for no values."""
+    if not values:
+        return "false"
+    return f"{col} IN ({', '.join(sql_text(v, dt) for v in values)})"
+
+
 def sql_lit(value, dt: DataType) -> Column:
     """``value`` as a constant Column of type ``dt`` in one JVM call.
 

@@ -50,17 +50,21 @@ def tiny_oracle(tiny_corpus):
 
 
 class Py4jCalls:
-    """Running count of Python -> JVM py4j round trips."""
+    """Running counts of Python -> JVM py4j commands: ``n`` round trips, and
+    apart from them ``deletes``, the memory-delete commands (``m\nd\n<id>``)
+    that py4j's finalizer thread sends for Java objects Python has
+    garbage-collected, whenever it gets to them."""
 
     def __init__(self):
         self.n = 0
+        self.deletes = 0
 
 
 @pytest.fixture
 def py4j_calls():
-    """Count py4j round trips by wrapping the connections' ``send_command``
-    for the duration of one test; read ``.n`` before and after the code
-    under measurement."""
+    """Count py4j commands by wrapping the connections' ``send_command`` for
+    the duration of one test; read ``.n`` (round trips) and ``.deletes``
+    before and after the code under measurement."""
     from py4j import clientserver, java_gateway
 
     counter = Py4jCalls()
@@ -68,9 +72,12 @@ def py4j_calls():
     for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
         orig = cls.send_command
 
-        def send_command(conn, *a, _orig=orig, **kw):
-            counter.n += 1
-            return _orig(conn, *a, **kw)
+        def send_command(conn, command, *a, _orig=orig, **kw):
+            if command.startswith("m\nd\n"):
+                counter.deletes += 1
+            else:
+                counter.n += 1
+            return _orig(conn, command, *a, **kw)
 
         saved.append((cls, orig))
         cls.send_command = send_command

@@ -1073,7 +1073,7 @@ def test_common_grams_chain():
         ),
     ],
 )
-def test_common_grams_entries_expr_parity(spark, an_kwargs):
+def test_common_grams_analyze_column_parity(spark, an_kwargs):
     from pyspark.sql import functions as F
 
     from lucene_spark.analysis import Analyzer

@@ -44,11 +44,33 @@ def test_skip_canonical(spark, docs):
             docs, k=8, skip_canonical=True
         ).collect()
     }
-    # doc 0 is the canonical holder of the shared gram; doc 3's repeat is
-    # intra-doc (its own canonical) -> both keep their text
+    # doc 0 holds the shared gram's canonical copy; doc 3's first copy of
+    # its repeat is canonical, the second (the one removal drops) is not
     assert out[0] == []
     assert out[1] == [(2, 10)]
-    assert out[3] == []
+    assert out[3] == [(9, 18)]
+
+
+def test_skip_canonical_spans_are_the_removed_tokens(spark, docs):
+    """The detector with ``skip_canonical=True`` reports exactly the tokens
+    the removal operator drops."""
+    from lucene_spark.pipeline.textstats import (
+        duplicated_ngram_spans,
+        remove_duplicated_ngrams,
+    )
+
+    spans = {
+        r.doc_id: [(s.start, s.end) for s in r.spans]
+        for r in duplicated_ngram_spans(docs, k=8, skip_canonical=True).collect()
+    }
+    removed = {r.doc_id: r.text for r in remove_duplicated_ngrams(docs, k=8).collect()}
+    assert any(spans.values()), "the comparison must not be vacuous"
+    for r in docs.collect():
+        kept = [
+            t for i, t in enumerate(r.text.split())
+            if not any(a <= i < b for a, b in spans[r.doc_id])
+        ]
+        assert removed[r.doc_id] == " ".join(kept), r.doc_id
 
 
 def test_remove_duplicated(spark, docs):
